@@ -20,34 +20,4 @@ object Jobs {
     try f
     finally sc.setJobDescription(prev)
   }
-
-  /** Run `f` with AQE disabled, restoring the previous setting.
-    *
-    * AQE materializes every exchange of a plan as its OWN job (and
-    * every `Lineage.cut`/`toRdd` of an adaptive plan finalizes
-    * eagerly, stage by stage). For CORPUS-scale plans that is the
-    * right trade — runtime coalescing, skew splits, broadcast
-    * conversions. For the BATCH-scale plans of the incremental-ingest
-    * operators (micro-batch probes, subgraph closures) it is pure
-    * per-job scheduler overhead: partition counts there are already
-    * count-derived, the batch-vs-corpus join strategies are pinned by
-    * explicit broadcast hints (the batch side is the small side by
-    * contract), and there is nothing for AQE to adapt — while the
-    * job fan costs ~100 ms of driver latency apiece, dozens of times
-    * per micro-batch. Scope: wrap ONLY spans whose every action is
-    * batch/subgraph-bounded; corpus-scale paths must stay adaptive. */
-  def withAqeOff[A](spark: SparkSession)(f: => A): A = {
-    val key = "spark.sql.adaptive.enabled"
-    // Inside foreachBatch the batch's frames belong to the STREAM's
-    // cloned session while carried-over state (label tables, index
-    // frames) belongs to the caller's — a plan executes under the conf
-    // of the session of its leftmost frame, so the toggle must cover
-    // both or half the batch's actions silently keep AQE.
-    val sessions =
-      (spark +: SparkSession.getActiveSession.toList).distinct
-    val prev = sessions.map(s => s -> s.conf.get(key, "true"))
-    sessions.foreach(_.conf.set(key, "false"))
-    try f
-    finally prev.foreach { case (s, v) => s.conf.set(key, v) }
-  }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 /** Engine-side entry point for lineage truncation — see
   * [[org.apache.spark.sql.graft.FastCut]] for the mechanism and why it
   * replaces `createDataFrame(df.rdd, df.schema)` at every iterative
-  * cut site (no external-row codec, output partitioning preserved).
+  * cut site (no external-row codec).
   */
 object Lineage {
 

@@ -1,6 +1,9 @@
 package graft.core
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graft.FastCut
 import org.apache.spark.storage.StorageLevel
 
 /** Lifecycle registry for frames operators persist on the caller's
@@ -19,10 +22,11 @@ import org.apache.spark.storage.StorageLevel
   *    caching off entirely (recompute semantics — results identical,
   *    narrow stages run per consumer).
   *
-  * Purely-internal per-round frames of iterative algorithms (the CC
-  * label tables) keep their explicit in-loop unpersist lifecycle and
-  * never appear here; only frames still resident when an operator
-  * RETURNS are tracked.
+  * Per-round frames of iterative algorithms are released by
+  * [[Iterate]] as later rounds supersede them; only frames still
+  * resident when an operator RETURNS are tracked — and of those, the
+  * rounds a loop's unmaterialized result still reads are released here
+  * once it is materialized ([[supersede]]).
   */
 object OpCache {
 
@@ -40,12 +44,30 @@ object OpCache {
     * rely on materialization side effects. */
   def persist(df: DataFrame): DataFrame =
     if (level == StorageLevel.NONE) df
-    else { df.persist(level); live.add(df); noteScoped(df); df }
+    else { sweep(); df.persist(level); live.add(df); noteScoped(df); df }
 
   /** Track an already-persisted frame (iterative algorithms persist
     * their final state directly — lineage truncation needs the
     * materialized RDD regardless of the cache policy). */
-  def track(df: DataFrame): DataFrame = { live.add(df); noteScoped(df); df }
+  def track(df: DataFrame): DataFrame = { sweep(); live.add(df); noteScoped(df); df }
+
+  // stale frame -> the frame whose materialization frees it
+  private val supersededBy =
+    new java.util.concurrent.ConcurrentHashMap[DataFrame, DataFrame]()
+
+  /** Track `stale` — a persisted frame nothing reads once `by` is
+    * materialized, like a loop round the next round replaces — and
+    * release it at the first call into OpCache after `by`'s cache is
+    * filled. */
+  def supersede(stale: DataFrame, by: DataFrame): Unit = {
+    track(stale); supersededBy.put(stale, by); ()
+  }
+
+  // all checks before any release: releasing a frame first would leave
+  // a frame it superseded waiting on an unpersisted cache
+  private def sweep(): Unit =
+    supersededBy.asScala.filter(e => FastCut.materialized(e._2)).keys
+      .foreach { stale => untrack(stale); stale.unpersist(false) }
 
   private val scope = new ThreadLocal[java.util.ArrayList[DataFrame]]()
 
@@ -84,10 +106,11 @@ object OpCache {
 
   /** Drop a frame from tracking without touching its storage — for
     * callers that released it themselves (index-scoped unpersist). */
-  def untrack(df: DataFrame): Unit = live.remove(df)
+  def untrack(df: DataFrame): Unit = { live.remove(df); supersededBy.remove(df); () }
 
   /** Unpersist every tracked frame; returns how many were released. */
   def releaseAll(blocking: Boolean = false): Int = {
+    supersededBy.clear()
     var n = 0
     val it = live.iterator()
     while (it.hasNext) {
@@ -98,5 +121,5 @@ object OpCache {
     n
   }
 
-  def liveCount: Int = live.size
+  def liveCount: Int = { sweep(); live.size }
 }

@@ -608,7 +608,7 @@ object Curation {
     * 10¹³ tokens × 10³ weight = 10¹⁶ ≪ 2⁶³.
     *
     * Scale shape: one hash agg over the corpus (per-source totals),
-    * then `rounds` passes over a |sources|-row frame (cut per round).
+    * then `rounds` passes over a |sources|-row frame.
     * Output: (source, avail_tokens, alloc_tokens, saturated).
     */
   def tokenBudgetWaterfill(
@@ -623,21 +623,20 @@ object Curation {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     require(defaultWeight >= 0 && weights.values.forall(_ >= 0),
       "weights must be >= 0")
-    val spark = docs.sparkSession
-    var st: DataFrame = docs
+    val init = docs
       .groupBy(col(sourceCol).as("source"))
       .agg(sum(tokensCol.cast("long")).as("avail"))
       .select(col("source"), col("avail"),
         coalesce(element_at(typedLit(weights), col("source")), lit(defaultWeight))
           .cast("long").as("w"),
         lit(false).as("saturated"), lit(null).cast("long").as("want"))
-    (1 to rounds).foreach { _ =>
+    val st = graft.core.Iterate.frames("waterfill", init, rounds) { st =>
       val glob = st.agg(
         (lit(budget) -
           coalesce(sum(when(col("saturated"), col("avail"))), lit(0L)))
           .as("rb"),
         coalesce(sum(when(!col("saturated"), col("w"))), lit(0L)).as("ws"))
-      val next = st.crossJoin(broadcast(glob))
+      st.crossJoin(broadcast(glob))
         .select(col("source"), col("avail"), col("w"),
           when(col("saturated"), col("want"))
             .when(col("ws") > 0, expr("(rb * w) div ws"))
@@ -647,9 +646,6 @@ object Curation {
             .as("sat_n"))
         .select(col("source"), col("avail"), col("w"),
           col("sat_n").as("saturated"), col("want_n").as("want"))
-      // cut per round: |sources| rows, free, keeps the plan flat
-      st = graft.core.OpCache.persist(
-        graft.core.Lineage.cut(next))
     }
     st.select(col("source"), col("avail").as("avail_tokens"),
       when(col("saturated"), col("avail"))

@@ -1019,15 +1019,6 @@ object Dedup {
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     requireIntegralIds(edges, srcCol, dstCol)
     val spark = edges.sparkSession
-    val nodes = edges
-      .select(col(srcCol).cast("long").as("n"))
-      .union(edges.select(col(dstCol).cast("long").as("n")))
-      .distinct()
-      .persist(MEMORY_AND_DISK)
-    graft.core.OpCache.track(nodes)
-
-    def cut(df: DataFrame): DataFrame =
-      graft.core.Lineage.cut(df).persist(MEMORY_AND_DISK)
 
     def largeStar(e: DataFrame): DataFrame = {
       val sym = e.select(col("a").as("u"), col("b").as("v"))
@@ -1053,41 +1044,40 @@ object Dedup {
         .distinct()
     }
 
-    var cur = cut(edges
+    val edges0 = graft.core.Lineage.cut(edges
       .select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
       .filter(col("a") =!= col("b"))
-      .distinct())
-    var iter = 0
-    var curCount = cur.count()
-    var done = curCount == 0
-    while (!done && iter < maxIter) {
-      // NOT run non-adaptively (unlike connectedComponents' rounds,
-      // measured and rejected this round): the star rewrites' mins⋈sym
-      // joins rely on AQE's runtime broadcast conversion — statically
-      // planned they fall back to sort-merge over the full edge list,
-      // and qd13 measured 5.9 → 8.5 s (task-seconds +92%) with AQE off
-      // despite jobs halving. The CC rounds differ because their joins
-      // are cached-partitioning-aligned and explicitly broadcast.
-      val next = cut(smallStar(largeStar(cur)))
-      val c1 = next.count()
-      // set equality: only pay the union-distinct shuffle when the
-      // cheap cardinality check already agrees
-      done = c1 == curCount &&
-        next.unionByName(cur).distinct().count() == c1
-      cur.unpersist()
-      cur = next
-      curCount = c1
-      iter += 1
+      .distinct()).persist(MEMORY_AND_DISK)
+    var curCount = edges0.count()
+    // Adaptive (unlike connectedComponents' rounds, measured and
+    // rejected): the star rewrites' mins⋈sym joins rely on AQE's runtime
+    // broadcast conversion — statically planned they fall back to
+    // sort-merge over the full edge list, and qd13 measured 5.9 → 8.5 s
+    // (task-seconds +92%) with AQE off despite jobs halving. The CC
+    // rounds differ because their joins are cached-partitioning-aligned
+    // and explicitly broadcast.
+    val stars = if (curCount == 0) graft.core.OpCache.track(edges0)
+    else graft.core.Iterate("stars", spark) { it =>
+      it.frames(edges0, maxIter,
+        until = (cur, next) => {
+          val c1 = next.count()
+          // set equality: only pay the union-distinct shuffle when the
+          // cheap cardinality check already agrees
+          val same = c1 == curCount &&
+            next.unionByName(cur).distinct().count() == c1
+          curCount = c1
+          same
+        },
+        diverged = s"star contraction did not converge within $maxIter rounds"
+      )(cur => smallStar(largeStar(cur)))
     }
-    if (!done) {
-      cur.unpersist() // error path: nothing downstream can release it
-      throw new IllegalStateException(
-        s"star contraction did not converge within $maxIter rounds")
-    }
-    graft.core.OpCache.track(cur)
     // final edges are stars (child → component min); roots and isolated
     // nodes label themselves
-    nodes.join(cur.select(col("a").as("n"), col("b").as("component")),
+    val nodes = graft.core.OpCache.persist(edges
+      .select(col(srcCol).cast("long").as("n"))
+      .union(edges.select(col(dstCol).cast("long").as("n")))
+      .distinct())
+    nodes.join(stars.select(col("a").as("n"), col("b").as("component")),
         Seq("n"), "left_outer")
       .select(col("n").as("node"),
         coalesce(col("component"), col("n")).as("component"))
@@ -1365,8 +1355,6 @@ object Dedup {
     // parallelism; the session cap keeps the cluster's configured
     // parallelism as the ceiling.
     val spark = edges.sparkSession
-    def maybeNoAqe[A](on: Boolean)(f: => A): A =
-      if (on) graft.core.Jobs.withAqeOff(spark)(f) else f
     val sym0 = graft.core.Jobs.described(spark, "cc: sym cut") {
       graft.core.Lineage.cut(symPlan).persist(MEMORY_AND_DISK)
     }
@@ -1374,14 +1362,6 @@ object Dedup {
     val nParts = math.max(1, math.min(
       spark.sessionState.conf.numShufflePartitions,
       math.ceil(nEdges / 2e6).toInt))
-    val sym = sym0.repartition(nParts, col("t")).persist(MEMORY_AND_DISK)
-    // labels piggybacks sym's hash(t) layout: sym is symmetric, so
-    // select(t).distinct() covers every node with ZERO exchange (alias
-    // t→node carries the partitioning), leaving the initial label
-    // frame cached hash(node) — the layout both per-round joins reuse.
-    var labels = sym.select(col("t").as("node")).distinct()
-      .select(col("node"), col("node").as("label"))
-      .persist(MEMORY_AND_DISK)
     // Convergence via the MONOTONE label-sum invariant: every round
     // assigns label' = min(label, neighbor labels, label(label)) —
     // per-node labels never increase, and the node set is fixed, so
@@ -1414,83 +1394,63 @@ object Dedup {
     // well under a second) its one-job-per-stage materialization is
     // pure scheduler overhead, 4-5 jobs/round where one suffices. Keep
     // AQE for big graphs, where runtime coalescing of the jump
-    // exchange still pays.
-    val noAqeRounds = nEdges < 5000000L
-    var prevSum = maybeNoAqe(noAqeRounds) {
-      graft.core.Jobs.described(spark, "cc: init sum") {
-        labelSum(labels) // materializes labels → sym → sym0
+    // exchange still pays. Pointer jumping converges in O(log diameter)
+    // rounds, so the default cap covers any graph a dedup pipeline can
+    // produce; running out means a bug, not a big input.
+    graft.core.Iterate("cc", spark, adaptive = nEdges >= 5000000L) { it =>
+      val sym = it.persist(it.adopt(sym0).repartition(nParts, col("t")))
+      // labels piggybacks sym's hash(t) layout: sym is symmetric, so
+      // select(t).distinct() covers every node with ZERO exchange (alias
+      // t→node carries the partitioning), leaving the initial label
+      // frame cached hash(node) — the layout both per-round joins reuse.
+      val labels0 = sym.select(col("t").as("node")).distinct()
+        .select(col("node"), col("node").as("label"))
+        .persist(MEMORY_AND_DISK)
+      var prevSum = graft.core.Jobs.described(spark, "cc: init sum") {
+        labelSum(labels0) // materializes labels → sym → sym0
       }
+      sym0.unpersist(false) // superseded by the repartitioned cache
+      // The repartition(node) under each round's persist restores the
+      // hash(node) layout the next round's two joins reuse — one
+      // exchange paid there saves two here.
+      it.frames(labels0, maxIter,
+        layout = _.repartition(nParts, col("node")),
+        until = (_, next) => {
+          val s = labelSum(next)
+          val same = s.compareTo(prevSum) == 0
+          prevSum = s
+          same
+        },
+        diverged = s"connected components did not converge within $maxIter rounds; " +
+          "raise maxIter (rounds needed ~ log2 of the graph diameter)") { labels =>
+        // Exchange-free on BOTH sides: sym is cached hash(t), labels is
+        // cached hash(node) and the alias node→t carries the partitioning
+        // through the Project — the round's biggest join shuffles nothing.
+        val viaNeighbors = sym
+          .join(labels.select(col("node").as("t"), col("label")), Seq("t"))
+          .select(col("s").as("node"), col("label"))
+        val minLabels = labels.unionByName(viaNeighbors)
+          .groupBy(col("node")).agg(min(col("label")).as("label"))
+        // Pointer jumping: label <- min(label, label(label)). The lookup
+        // table is the PREVIOUS round's cached labels, not minLabels
+        // itself: a minLabels self-join embedded the union+agg subtree
+        // twice and re-shuffled its output on both join keys, while the
+        // cached labels side is already hash(node) — so the jump costs
+        // ONE exchange (c.label) and zero recompute (guide §7.2
+        // duplicated subtrees, §2.4 partitioning reuse). Reading the
+        // stale table only weakens the jump's shortcut by one round:
+        // label' = min(own, neighbors, prev[label]) is still monotone
+        // non-increasing over a fixed node set, a sum-stable round is
+        // still exactly a fixed point of the update map, and the fixed
+        // point (component minima) is unchanged — final labels are
+        // bit-identical, only the round count may differ by one.
+        minLabels.as("c")
+          .join(labels.select(col("node").as("jn"), col("label").as("jl")),
+            col("c.label") === col("jn"))
+          .select(col("c.node").as("node"),
+            least(col("c.label"), col("jl")).as("label"))
+      }.select(col("node"), col("label").as("component"))
     }
-    sym0.unpersist(false) // superseded by the repartitioned cache
-    var iter = 0
-    var done = false
-    while (!done && iter < maxIter) {
-      // Exchange-free on BOTH sides: sym is cached hash(t), labels is
-      // cached hash(node) and the alias node→t carries the partitioning
-      // through the Project — the round's biggest join shuffles nothing.
-      val viaNeighbors = sym
-        .join(labels.select(col("node").as("t"), col("label")), Seq("t"))
-        .select(col("s").as("node"), col("label"))
-      val minLabels = labels.unionByName(viaNeighbors)
-        .groupBy(col("node")).agg(min(col("label")).as("label"))
-      // Pointer jumping: label <- min(label, label(label)). The lookup
-      // table is the PREVIOUS round's cached labels, not minLabels
-      // itself: a minLabels self-join embedded the union+agg subtree
-      // twice and re-shuffled its output on both join keys, while the
-      // cached labels side is already hash(node) — so the jump costs
-      // ONE exchange (c.label) and zero recompute (guide §7.2
-      // duplicated subtrees, §2.4 partitioning reuse). Reading the
-      // stale table only weakens the jump's shortcut by one round:
-      // label' = min(own, neighbors, prev[label]) is still monotone
-      // non-increasing over a fixed node set, a sum-stable round is
-      // still exactly a fixed point of the update map, and the fixed
-      // point (component minima) is unchanged — final labels are
-      // bit-identical, only the round count may differ by one.
-      val jumpedPlan = minLabels.as("c")
-        .join(labels.select(col("node").as("jn"), col("label").as("jl")),
-          col("c.label") === col("jn"))
-        .select(col("c.node").as("node"),
-          least(col("c.label"), col("jl")).as("label"))
-      // Truncate lineage each round — NOT just persist: an un-cut plan
-      // grows per round and the driver dies PLANNING round ~8 even
-      // though every round's data is cached. Rebuilding the frame over
-      // its own InternalRow RDD (Lineage.cut) is the iterative-
-      // algorithm contract on Spark (same role as GraphX/GraphFrames
-      // checkpoint intervals; on a cluster with executor-loss
-      // tolerance use checkpoint() to a reliable dir instead). The
-      // repartition(node) under the persist restores the hash(node)
-      // layout the next round's two joins reuse — one exchange paid
-      // here saves two there.
-      val (jumped, newSum) = maybeNoAqe(noAqeRounds) {
-        graft.core.Jobs.described(spark, s"cc: round $iter") {
-          val j = graft.core.Lineage.cut(jumpedPlan)
-            .repartition(nParts, col("node"))
-            .persist(MEMORY_AND_DISK)
-          (j, labelSum(j))
-        }
-      }
-      if (sys.env.contains("GRAFT_CC_LOG"))
-        println(s"[cc] round $iter: sum=$newSum")
-      labels.unpersist()
-      labels = jumped
-      done = newSum.compareTo(prevSum) == 0
-      prevSum = newSum
-      iter += 1
-    }
-    sym.unpersist()
-    // Unconverged labels are silently WRONG (same component, different
-    // ids) — fail loudly instead. Pointer jumping converges in
-    // O(log diameter) rounds, so the default cap covers any graph a
-    // dedup pipeline can produce; hitting it means a bug, not a big
-    // input.
-    if (!done) {
-      labels.unpersist() // error path: nothing downstream can release it
-      throw new IllegalStateException(
-        s"connected components did not converge within $maxIter rounds; " +
-          "raise maxIter (rounds needed ~ log2 of the graph diameter)")
-    }
-    graft.core.OpCache.track(labels)
-    labels.select(col("node"), col("label").as("component"))
   }
 
   /** Winnowing fingerprints — the MOSS document-fingerprinting

@@ -46,8 +46,6 @@ object GraphRank {
       iters: Int = 2, dampingPct: Int = 85,
       scale: Long = 1000000000000L): DataFrame = {
     require(iters >= 1 && dampingPct >= 0 && dampingPct <= 100)
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val spark = nodes.sparkSession
     val ids = graft.core.OpCache.persist(
       graft.core.Partitioning.parallelize(nodes, col(idCol))
         .select(col(idCol).as("node_id")))
@@ -59,26 +57,16 @@ object GraphRank {
       sym.groupBy(col("src")).agg(count(lit(1)).cast("long").as("deg")),
       Seq("src")))
     val base = (scale * (100 - dampingPct) / 100) / n
-    var pr = ids.select(col("node_id"), lit(scale / n).as("pr"))
-    // Past a few rounds the nested join+agg lineage explodes the plan
-    // (analysis cost grows per round); cut it to the RDD and re-persist
-    // each round, same pattern as Dedup.connectedComponentsStars. Below
-    // the threshold the plain nested plan is cheaper (no RDD hop).
-    val cutLineage = iters > 4
-    (0 until iters).foreach { _ =>
+    val pr0 = ids.select(col("node_id"), lit(scale / n).as("pr"))
+    val pr = graft.core.Iterate.frames("pagerank", pr0, iters) { pr =>
       val contrib = e.join(pr, col("src") === col("node_id"))
         .select(col("dst"), expr("pr div deg").as("c"))
         .groupBy(col("dst")).agg(sum(col("c")).cast("long").as("s"))
-      pr = ids.join(contrib, col("node_id") === col("dst"), "left")
+      ids.join(contrib, col("node_id") === col("dst"), "left")
         .select(col("node_id"),
           (lit(base) +
             expr(s"($dampingPct * coalesce(s, CAST(0 AS BIGINT))) div 100"))
             .as("pr"))
-      if (cutLineage) {
-        val cutDf = graft.core.Lineage.cut(pr).persist(MEMORY_AND_DISK)
-        graft.core.OpCache.track(cutDf)
-        pr = cutDf
-      }
     }
     pr.select(col("node_id"), col("pr").cast("long").as("pr_int"))
   }
@@ -100,9 +88,7 @@ object GraphRank {
     *
     * Scale shape per round: one hash agg for degrees + two semi-joins
     * to filter edges — linear in |E|, all equi on 8-byte node ids.
-    * The edge set only SHRINKS, so later rounds get cheaper; lineage
-    * is cut per round above a small threshold (the [[pageRank]]
-    * pattern).
+    * The edge set only SHRINKS, so later rounds get cheaper.
     *
     * @param edges distinct undirected pairs (the [[pageRank]] edge
     *              contract: duplicates would inflate degrees)
@@ -113,24 +99,16 @@ object GraphRank {
       aCol: String = "a_id", bCol: String = "b_id"): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val spark = edges.sparkSession
-    var e = edges.select(col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v"))
-    val cutLineage = rounds > 4
     def degrees(es: DataFrame): DataFrame =
       es.unionByName(es.select(col("v").as("u"), col("u").as("v")))
         .groupBy(col("u")).agg(count(lit(1)).cast("long").as("d"))
         .select(col("u").as("n"), col("d"))
-    (0 until rounds).foreach { _ =>
+    val e0 = edges.select(col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v"))
+    val e = graft.core.Iterate.frames("kcore", e0, rounds) { e =>
       val surv = degrees(e).filter(col("d") >= k).select(col("n"))
-      e = e.join(surv.select(col("n").as("u")), Seq("u"), "left_semi")
+      e.join(surv.select(col("n").as("u")), Seq("u"), "left_semi")
         .join(surv.select(col("n").as("v")), Seq("v"), "left_semi")
         .select(col("u"), col("v"))
-      if (cutLineage) {
-        val cutDf = graft.core.Lineage.cut(e).persist(MEMORY_AND_DISK)
-        graft.core.OpCache.track(cutDf)
-        e = cutDf
-      }
     }
     degrees(e).select(col("n").as("node_id"), col("d").as("degree"))
   }
@@ -152,38 +130,28 @@ object GraphRank {
     *
     * Scale shape per round: one equi-join of the symmetrized edge
     * list with the label table + two hash aggs, linear in |E| —
-    * power-iteration cost, same as [[pageRank]]; lineage cut per
-    * round above the [[kCore]] threshold. */
+    * power-iteration cost, same as [[pageRank]]. */
   def labelPropagation(
       nodes: DataFrame, idCol: String, edges: DataFrame,
       rounds: Int = 3, aCol: String = "a_id", bCol: String = "b_id"): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val spark = nodes.sparkSession
     val ids = graft.core.OpCache.persist(
       nodes.select(col(idCol).cast("long").as("node_id")).distinct())
     val e0 = edges.select(col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v"))
     val sym = graft.core.OpCache.persist(
       e0.unionByName(e0.select(col("v").as("u"), col("u").as("v"))))
-    var lab = ids.select(col("node_id"), col("node_id").as("label"))
-    val cutLineage = rounds > 4
-    (0 until rounds).foreach { _ =>
+    val lab0 = ids.select(col("node_id"), col("node_id").as("label"))
+    graft.core.Iterate.frames("lpa", lab0, rounds) { lab =>
       val votes = sym
         .join(lab.select(col("node_id").as("v"), col("label")), Seq("v"))
         .groupBy(col("u"), col("label")).agg(count(lit(1)).as("c"))
         .groupBy(col("u"))
         .agg(min(struct((-col("c")).as("nc"), col("label"))).as("m"))
         .select(col("u").as("node_id"), col("m.label").as("new_label"))
-      lab = ids.join(votes, Seq("node_id"), "left")
+      ids.join(votes, Seq("node_id"), "left")
         .select(col("node_id"),
           coalesce(col("new_label"), col("node_id")).as("label"))
-      if (cutLineage) {
-        val cutDf = graft.core.Lineage.cut(lab).persist(MEMORY_AND_DISK)
-        graft.core.OpCache.track(cutDf)
-        lab = cutDf
-      }
     }
-    lab
   }
 
   /** Per-node triangle counts over an undirected pair graph — the

@@ -246,21 +246,19 @@ object Logit {
     // nd once for the whole run (exact integer ≤ 2^53 as a double —
     // identical to the old per-round count(lit(1)).cast("double"))
     val nd = y.count().toDouble
-    var w = Map.empty[Long, Decimal]
-    var b = quant(0.0)
-    // Rounds run with AQE OFF (the CC-round lesson): after the
-    // labelTable layout fix the round plan's only exchange is the
-    // bucket-space-bounded gradient aggregate (≤ buckets+2 keys per
-    // map partition after partial agg — corpus-size-independent), the
-    // model joins are explicit LocalRelation broadcasts, and the x/y
-    // scans keep their cached partitioning — nothing for AQE to adapt
-    // at ANY scale, while its stage-by-stage materialization costs
-    // 3-4 scheduler jobs per round where one collect suffices.
-    (1 to rounds).foreach { r =>
-      graft.core.Jobs.withAqeOff(spark) {
-      graft.core.Jobs.described(spark, s"gd: round $r") {
-      val res = margin(x, wFrame(w), bFrame(b), gain)
-        .join(y, Seq("doc_id"))
+    // Non-adaptive rounds: after the labelTable layout fix the round
+    // plan's only exchange is the bucket-space-bounded gradient
+    // aggregate (≤ buckets+2 keys per map partition after partial agg —
+    // corpus-size-independent), the model joins are explicit
+    // LocalRelation broadcasts, and the x/y scans keep their cached
+    // partitioning — nothing for AQE to adapt at ANY scale, while its
+    // stage-by-stage materialization costs 3-4 scheduler jobs per round
+    // where one collect suffices.
+    val (w, b) = graft.core.Iterate("gd", spark, adaptive = false) { it =>
+      val (xs, ys) = (it.adopt(x), it.adopt(y))
+      it.fold((Map.empty[Long, Decimal], quant(0.0)), rounds) { case (w, b) =>
+      val res = margin(xs, wFrame(w), bFrame(b), gain)
+        .join(ys, Seq("doc_id"))
         .select(col("doc_id"),
           (fastSigmoid(col("z")) - col("y"))
             .cast(dec6).cast("double").as("r"))
@@ -271,11 +269,11 @@ object Logit {
       // scale that is an extra full pass over the per-doc margins every
       // round. The cache materializes lazily inside the stats action
       // itself (still exactly one Spark job per round) and is released
-      // as soon as the round's aggregates are collected. Cached plans
-      // are planned without AQE, so the residual keeps the feature
-      // cache's hash(doc_id) partitioning and the gradient join stays
-      // Exchange-free on both sides.
-      res.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // when the round ends. Cached plans are planned without AQE, so
+      // the residual keeps the feature cache's hash(doc_id)
+      // partitioning and the gradient join stays Exchange-free on both
+      // sides.
+      it.persist(res)
       // Coordinate-NORMALIZED step: each bucket moves by the
       // feature-mass-weighted MEAN residual of the docs containing it
       // (Σ r·x / Σ x), not the raw gradient / N — a bucket seen in 3
@@ -286,7 +284,7 @@ object Logit {
       // is strictly positive: a bucket only exists through x rows.
       // Bias rows ride the same aggregate under bucket −2 with unit
       // mass: g = r quantized (exactly the old rq), so gd(−2) = rs.
-      val stats = x.join(res, Seq("doc_id"))
+      val stats = xs.join(res, Seq("doc_id"))
         .select(col("bucket"),
           (col("r") * col("x")).cast(dec6).as("g"),
           col("x").cast(dec6).as("xm"))
@@ -297,7 +295,6 @@ object Logit {
         .agg(sum(col("g")).cast("double").as("gd"),
           sum(col("xm")).cast("double").as("xd"))
         .collect()
-      res.unpersist(false)
       var rs = 0.0
       val gs = scala.collection.mutable.Map.empty[Long, Double]
       stats.foreach { row =>
@@ -310,12 +307,10 @@ object Logit {
         if (k == -2L) rs = d(1)
         else gs(k) = d(1) / d(2) // 0/0 = NaN → quant() → null weight
       }
-      w = (w.keySet ++ gs.keySet).iterator.map { k =>
+      ((w.keySet ++ gs.keySet).iterator.map { k =>
         val wd = w.get(k).map(toD).getOrElse(0.0)
         k -> quant(wd - lr * gs.getOrElse(k, 0.0))
-      }.toMap
-      b = quant(toD(b) - lr * rs / nd)
-      }
+      }.toMap, quant(toD(b) - lr * rs / nd))
       }
     }
     LogitModel(wFrame(w), bFrame(b))

@@ -345,10 +345,10 @@ object Similarity {
     // unpartitioned, every round re-exchanged the corpus twice.
     val e = graft.core.OpCache.persist(
       withNorm(em, idCol, vecCol).repartition(col("vec_id")))
-    var cents = e.filter(col("vec_id") % centroidStride === 0)
+    val seeds = e.filter(col("vec_id") % centroidStride === 0)
       .select(col("vec_id").as("cent_id"), col("embedding").as("cemb"),
         col("nrm").as("cnrm"))
-    (0 until iters).foreach { _ =>
+    val cents = graft.core.Iterate.frames("kmeans", seeds, iters) { cents =>
       val assign = centroidRanks(e, broadcast(cents), maxRank = 1)
         .filter(col("rn") === 1).select(col("vec_id"), col("cent_id"))
       val means = e.join(assign, Seq("vec_id"))
@@ -356,21 +356,19 @@ object Similarity {
         .groupBy(col("cent_id"), col("dim"))
         .agg((graft.expr.Exprs.exactSum(col("x").cast("double")) /
           count(lit(1)).cast("double")).as("m"))
-      // persist the round's centroids: un-persisted, round r's broadcast
-      // build re-EXECUTED every earlier round's full assign+means
-      // subtree (plan nesting), and the caller's final assignment pass
-      // re-executed the whole training once more. Centroid tables are
-      // stride-derived (corpus/stride rows) — cache-sized, never
-      // driver-collected (k-means state legitimately grows with the
-      // corpus; the Logit/PCA driver-model trick does NOT apply).
-      cents = graft.core.OpCache.persist(
-        means.groupBy(col("cent_id"))
-          .agg(transform(
-            array_sort(collect_list(struct(col("dim"), col("m")))),
-            s => s.getField("m")).cast("array<float>").as("cemb"))
-          .select(col("cent_id"), col("cemb"), l2Norm(col("cemb")).as("cnrm")))
+      means.groupBy(col("cent_id"))
+        .agg(transform(
+          array_sort(collect_list(struct(col("dim"), col("m")))),
+          s => s.getField("m")).cast("array<float>").as("cemb"))
+        .select(col("cent_id"), col("cemb"), l2Norm(col("cemb")).as("cnrm"))
     }
-    cents
+    // persist the trained centroids: un-persisted, the caller's final
+    // assignment pass re-executed the whole training once more.
+    // Centroid tables are stride-derived (corpus/stride rows) —
+    // cache-sized, never collected (k-means state legitimately grows
+    // with the corpus; the Logit/PCA in-memory model trick does NOT
+    // apply).
+    graft.core.OpCache.persist(cents)
   }
 
   /** [[buildIvfIndex]] with k-means-trained centroids: the trained
@@ -771,22 +769,21 @@ object Similarity {
     val e = graft.core.Partitioning.parallelize(em, col(idCol))
       .select(col(idCol).as("vec_id"), col(vecCol).as("embedding"))
     val sv = graft.core.OpCache.persist(subvectors(e, nSub, subDim))
-    var cb = sv.filter(col("vec_id") % centroidStride === 0 &&
+    val seeds = sv.filter(col("vec_id") % centroidStride === 0 &&
         col("vec_id") < centroidStride.toLong * maxCentroids)
       .select(col("m"), col("vec_id").as("cent_id"), col("sv").as("cvec"))
-    (0 until iters).foreach { _ =>
+    graft.core.Iterate.frames("pq", seeds, iters) { cb =>
       val assign = pqEncode(sv, broadcast(cb))
       val means = sv.join(assign, Seq("vec_id", "m"))
         .select(col("m"), col("cent_id"), posexplode(col("sv")).as(Seq("dim", "x")))
         .groupBy(col("m"), col("cent_id"), col("dim"))
         .agg((graft.expr.Exprs.exactSum(col("x").cast("double")) /
           count(lit(1)).cast("double")).as("mu"))
-      cb = means.groupBy(col("m"), col("cent_id"))
+      means.groupBy(col("m"), col("cent_id"))
         .agg(transform(
           array_sort(collect_list(struct(col("dim"), col("mu")))),
           s => s.getField("mu")).cast("array<float>").as("cvec"))
     }
-    cb
   }
 
   /** The materialized PQ artifacts ([[IvfIndex]]/[[SqIndex]]'s sibling
@@ -1248,16 +1245,12 @@ object Similarity {
     * [[graft.functions.TopKAgg]] heap — map-side collapse, no window.
     * Zero-norm vectors are rejected up front (cosine undefined).
     *
-    * Per-round lineage is cut to the RDD above the same threshold as
-    * [[GraphRank.pageRank]]; below it the nested plan is cheaper.
-    *
     * @return (vec_id, nbr_id, rnk) — the round-`rounds` k-NN graph */
   def nnDescentGraph(
       em: DataFrame, idCol: String, vecCol: String, k: Int,
       rounds: Int = 2): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val spark = em.sparkSession
     val e = graft.core.OpCache.persist(withNorm(em, idCol, vecCol))
     val stats = e.agg(min(col("vec_id")), max(col("vec_id")),
@@ -1268,41 +1261,34 @@ object Similarity {
       s"ids must be dense 0..n-1 (got [${stats.getLong(0)}, " +
         s"${stats.getLong(1)}] over $n rows) — the ring init needs them")
     require(stats.getDouble(3) > 0, "zero-norm vector: cosine undefined")
-    // Cut lineage early: each un-cut round NESTS the previous round's
-    // full join tree inside the next plan, so the logical plan (and its
-    // explain/UI rendering, which Spark materializes as a string) grows
-    // exponentially with rounds — at rounds=4 the render alone can OOM
-    // an 8g driver. Two rounds of nesting is the safe ceiling; beyond
-    // that each round restarts the plan from the persisted RDD.
-    val cutLineage = rounds > 2
     // ring seed: u -> (u+j) mod n, j = 1..k (self-free when k < n)
-    var g: DataFrame = graft.core.OpCache.persist(
+    val ring = graft.core.OpCache.persist(
       e.select(col("vec_id").as("u"),
           explode(sequence(lit(1), lit(math.min(k.toLong, n - 1)))).as("j"))
         .select(col("u"), ((col("u") + col("j")) % n).as("v")))
-    (1 to rounds).foreach { _ =>
-      val fwd = g.select(col("u"), col("v"))
-      val nn = g.as("a").join(g.as("b"), col("a.v") === col("b.u"))
-        .select(col("a.u").as("u"), col("b.v").as("v"))
-        .filter(col("u") =!= col("v"))
-      val rev = g.select(col("v").as("u"), col("u").as("v"))
-      val cand = fwd.unionByName(nn).unionByName(rev).distinct()
-      val scored = cand
-        .join(e.select(col("vec_id").as("u"), col("embedding").as("ue"),
-          col("nrm").as("un")), Seq("u"))
-        .join(e.select(col("vec_id").as("v"), col("embedding").as("ve"),
-          col("nrm").as("vn")), Seq("v"))
-        .select(col("u"), col("v"),
-          cosineWithNorms(col("ue"), col("ve"), col("un"), col("vn"))
-            .as("cos"))
-      var next = topKHeap(scored, "u", col("cos"), col("v"), "v", k)
-        .select(col("u"), col("v"))
-      if (cutLineage) {
-        val cutDf = graft.core.Lineage.cut(next).persist(MEMORY_AND_DISK)
-        graft.core.OpCache.track(cutDf)
-        next = cutDf
-      } else next = graft.core.OpCache.persist(next)
-      g = next
+    // Each round reads the graph three times, so every round's graph is
+    // cached — and a cached plan compiles statically anyway: adaptive
+    // rounds would only add the eager stage-by-stage jobs of their cuts.
+    val g = graft.core.Iterate("nndescent", spark, adaptive = false) { it =>
+      val es = it.adopt(e)
+      it.frames(it.adopt(ring), rounds) { g =>
+        val fwd = g.select(col("u"), col("v"))
+        val nn = g.as("a").join(g.as("b"), col("a.v") === col("b.u"))
+          .select(col("a.u").as("u"), col("b.v").as("v"))
+          .filter(col("u") =!= col("v"))
+        val rev = g.select(col("v").as("u"), col("u").as("v"))
+        val cand = fwd.unionByName(nn).unionByName(rev).distinct()
+        val scored = cand
+          .join(es.select(col("vec_id").as("u"), col("embedding").as("ue"),
+            col("nrm").as("un")), Seq("u"))
+          .join(es.select(col("vec_id").as("v"), col("embedding").as("ve"),
+            col("nrm").as("vn")), Seq("v"))
+          .select(col("u"), col("v"),
+            cosineWithNorms(col("ue"), col("ve"), col("un"), col("vn"))
+              .as("cos"))
+        topKHeap(scored, "u", col("cos"), col("v"), "v", k)
+          .select(col("u"), col("v"))
+      }
     }
     // rank the final graph's edges for output (re-score: the graph
     // itself stores only ids, the engine-neutral currency)
@@ -1528,8 +1514,7 @@ object Similarity {
     * two linear passes per round, shuffles keyed on vec_id / dim.
     * Mean-centering folds algebraically (c = Xv − μ·v,
     * u = Xᵀc − (Σc)·μ), so no centered copy of the data exists. Model
-    * state is a dim-row frame, lineage-cut per round (the Logit
-    * discipline).
+    * state is a dim-sized in-memory array (the Logit discipline).
     */
   def pcaComponent(
       em: DataFrame, idCol: String, vecCol: String,
@@ -2112,28 +2097,27 @@ object Similarity {
       spark.createDataFrame(rows, vSchema)
     }
     val v0 = 1.0 / math.sqrt(dim.toDouble)
-    var vArr = Array.fill(dim)(v0)
-    // Rounds run with AQE OFF (the CC/GD-round pattern): after the
-    // dims layout fix the round's only exchange is the dim-bounded
-    // stats aggregate, the axis is an explicit LocalRelation broadcast,
-    // and the scans keep their cached partitioning — nothing to adapt
-    // at any scale, while AQE's stage-by-stage materialization costs
+    // Non-adaptive rounds (the CC/GD-round pattern): after the dims
+    // layout fix the round's only exchange is the dim-bounded stats
+    // aggregate, the axis is an explicit LocalRelation broadcast, and
+    // the scans keep their cached partitioning — nothing to adapt at
+    // any scale, while AQE's stage-by-stage materialization costs
     // several scheduler jobs per round where one collect suffices.
-    (1 to iters).foreach { it =>
-      graft.core.Jobs.withAqeOff(spark) {
-      graft.core.Jobs.described(spark, s"pca: round $it") {
+    val vArr = graft.core.Iterate("pca", spark, adaptive = false) { it =>
+      val ds = it.adopt(dims)
+      it.fold(Array.fill(dim)(v0), iters) { vArr =>
       // muv = exactSum(mu · v) over the dim rows — driver fold
       val muv = decSum(muArr.iterator.map { case (d, m) => m * vArr(d) })
         .getOrElse(Double.NaN)
-      val c = graft.core.OpCache.persist(
-        dims.join(broadcast(vFrame(vArr)), Seq("dim"))
+      val c = it.persist(
+        ds.join(broadcast(vFrame(vArr)), Seq("dim"))
           .groupBy(col("vec_id"))
           .agg(graft.expr.Exprs.exactSum(col("x") * col("v")).as("xv"))
           .select(col("vec_id"),
             (col("xv") - lit(muv)).cast(DecimalType(30, 6)).as("cq")))
       // ONE distributed action: per-dim s = Σ cq·x rides with the
       // global Σ cq under reserved dim −1 (posexplode dims are ≥ 0)
-      val stats = dims.join(c, Seq("vec_id"))
+      val stats = ds.join(c, Seq("vec_id"))
         .select(col("dim"),
           (col("cq").cast("double") * col("x"))
             .cast(DecimalType(30, 6)).as("t"))
@@ -2153,8 +2137,7 @@ object Similarity {
         sArr.getOrElse(d, Double.NaN) - ct * muArr(d))
       val nrm = math.sqrt(
         decSum(u.iterator.map(x => x * x)).getOrElse(Double.NaN))
-      vArr = u.map(x => r6(x / nrm))
-      }
+      u.map(x => r6(x / nrm))
       }
     }
     (vFrame(vArr), mu, dims)

@@ -1487,7 +1487,7 @@ object TextQueries {
         "touching them — a measured multi-round cascade on this " +
         "graph (orders losing parts push parts under threshold and " +
         "back). Per round: one hash agg + two semi-joins, edge set " +
-        "only shrinks; lineage cut per round (rounds > 4). Oracle " +
+        "only shrinks; lineage cut as the plan outgrows its budget. Oracle " +
         "unrolls the identical six rounds.",
       (s, dir) => {
         val e = Tables.load(s, dir, "lineitem")
@@ -3021,7 +3021,7 @@ object TextQueries {
         "gradient and weight - so the oracle replays training " +
         "bit-for-bit like the Lloyd rounds. Model = 4096 weights + " +
         "bias at any corpus size; per round one broadcast join + two " +
-        "hash aggs; lineage cut per round past 4 rounds.",
+        "hash aggs; the model is held in memory between rounds.",
       (s, dir) =>
         graft.operators.Logit.trainAndScore(
           Tables.load(s, dir, "documents")

@@ -5,10 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** Contract of [[Lineage.cut]] — the round-11 replacement for the
   * `createDataFrame(df.rdd, df.schema)` lineage cut at every iterative
-  * operator site: identical rows and schema, a truncated (leaf-sized)
-  * logical plan, and — the optimization it exists for — the child
-  * plan's output PARTITIONING survives the cut, so a post-cut
-  * join/aggregate on the partition key plans no fresh Exchange. */
+  * operator site: identical rows and schema and a truncated
+  * (leaf-sized) logical plan. A partitioning a loop input must keep
+  * comes from persisting its repartition, not from the cut. */
 class LineageSpec extends SparkSuite {
   import org.apache.spark.sql.execution.SparkPlan
   import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec

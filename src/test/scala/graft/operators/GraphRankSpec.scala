@@ -36,13 +36,15 @@ class GraphRankSpec extends SparkSuite {
   }
 
   test("pageRank: deep iteration runs under the lineage cut") {
-    // iters=12 crosses the cut threshold: each round's plan restarts
-    // from an RDD scan instead of nesting 12 join+agg layers. The
+    // iters=12: the loop cuts the rank table's lineage once its plan
+    // outgrows Iterate's budget, else nests 12 join+agg layers. The
     // result must still be the convergent ranking (hub > leaf > isolated).
     val nodes = (1L to 20L).toDF("id")
     val edges = (2L to 10L).map(i => (1L, i)).toDF("a_id", "b_id")
-    val got = GraphRank.pageRank(nodes, "id", edges, iters = 12)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val ranked = GraphRank.pageRank(nodes, "id", edges, iters = 12)
+    assert(org.apache.spark.sql.graft.FastCut.planSize(ranked) <=
+      graft.core.Iterate.PlanBudget, "the rank table was never cut")
+    val got = ranked.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got.size == 20)
     assert(got(1L) > got(2L) && got(2L) > got(15L))
     assert(got.values.sum <= 1000000000000L)
