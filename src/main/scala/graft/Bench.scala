@@ -1,8 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.Metrics
+import graft.queries.Registry
 
 /** Benchmark runner. Emits per-query JSON lines first (diagnostics:
-  * safe to lose if the caller's output capture truncates), then a
+  * safe to lose if the caller's output capture truncates; each carries
+  * the query's jobs, tasks, task-seconds and per-phase counts from
+  * [[graft.core.Metrics]]), then a
   * "detail" line with the full per-query/error maps, then the SHORT
   * driver-parseable totals line LAST:
   * {"metric":"total","value":N,"unit":"sec","n":104,"errors":0,"sf":...}.
@@ -15,43 +18,29 @@ object Bench {
   private def r3(v: Double): String =
     BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
 
-  private def jsonEscape(s: String): String =
-    s.flatMap {
-      case '"'           => "\\\""
-      case '\\'          => "\\\\"
-      case c if c < ' '  => " "
-      case c             => c.toString
-    }
+  private def countsJson(c: Metrics.Counts): String =
+    s""""jobs":${c.jobs},"tasks":${c.tasks},"task_sec":${r3(c.taskSec)}"""
+
+  /** `"jobs":..,"tasks":..,"task_sec":..,"phases":{"<label>":{..},..}`,
+    * phases in label order. */
+  private def structJson(s: Metrics.Snapshot): String =
+    countsJson(s.total) + ""","phases":""" + s.phases.toSeq.sortBy(_._1)
+      .map { case (l, c) => s"${Verify.jsonString(l)}:{${countsJson(c)}}" }
+      .mkString("{", ",", "}")
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Structural metrics listener (round-11 VERDICT item 6): per-query
-    // jobs/tasks/Σtask-time ride the per-query and detail lines as
-    // ADDITIONS — deterministic plan-shape evidence that survives the
-    // ±10% session timing noise. The final totals line is unchanged.
-    object struct extends org.apache.spark.scheduler.SparkListener {
-      val jobs = new java.util.concurrent.atomic.AtomicLong
-      val tasks = new java.util.concurrent.atomic.AtomicLong
-      val taskMs = new java.util.concurrent.atomic.AtomicLong
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-      override def onTaskEnd(
-          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (e.taskInfo != null) {
-          tasks.incrementAndGet(); taskMs.addAndGet(e.taskInfo.duration); ()
-        }
-      def snap(): (Long, Long, Long) = (jobs.get, tasks.get, taskMs.get)
-    }
-    spark.sparkContext.addSparkListener(struct)
+    // dev-loop subset: optional 1st arg = comma-separated query names or
+    // ids (the driver always invokes with no args → full registry)
+    val selected =
+      if (args.nonEmpty) Registry.select(args(0)) else Registry.all.sortBy(_.name)
+    val spark = SparkEntry.localSession()
+    // Structural metrics (round-11 VERDICT item 6): per-query
+    // jobs/tasks/Σtask-time, in total and per operator phase, ride the
+    // per-query and detail lines as ADDITIONS — deterministic plan-shape
+    // evidence that survives the ±10% session timing noise. The final
+    // totals line is unchanged.
+    val metrics = Metrics.attach(spark.sparkContext)
     // Warm the JVM/codegen paths so the first timed query doesn't pay
     // session/classloader init.
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
@@ -60,48 +49,39 @@ object Bench {
     // long-lived warehouse session, but here 76 queries share one
     // executor heap and early persists degrade late queries. Clear
     // between queries so each is timed cold-cache, like a fresh job.
-    // dev-loop subset: optional 1st arg = comma-separated query names
-    // (the driver always invokes with no args → full registry)
-    val only: Option[Set[String]] =
-      if (args.nonEmpty) Some(args(0).split(",").toSet) else None
-    val names = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
     // MEASUREMENT CONTRACT (round-10 variance study, SCALING.md):
     // ~258 queries share one JVM heap, so per-query times ride the
     // session's GC/JIT state — identical code re-runs show median 12%
     // / p90 40% per-row deltas while TOTALS stay within ±3%. Compare
     // totals round-over-round; treat single-round per-query deltas
     // under the p90 band as noise unless re-measured in isolation.
-    val timed = names.map { case (name, fn) =>
+    val timed = selected.map { q =>
       graft.core.OpCache.releaseAll() // release AND untrack operator persists
       spark.catalog.clearCache()      // then any remaining cached frames
-      val (j0, k0, m0) = struct.snap()
+      val before = metrics.snapshot()
       val t0 = System.nanoTime()
       val err =
-        try { fn(spark, sfDir).count(); None }
+        try { q.run(spark, sfDir).count(); None }
         catch { case e: Throwable =>
           Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(120)}")
         }
       val sec = (System.nanoTime() - t0) / 1e9
-      val (j1, k1, m1) = struct.snap()
-      val st = (j1 - j0, k1 - k0, (m1 - m0) / 1e3)
+      val st = structJson(metrics.snapshot() - before)
       // Per-query line first: truncation eats detail, never the total.
-      println(s"""{"metric":"query","name":"$name","sec":${r3(sec)}""" +
-        s""","jobs":${st._1},"tasks":${st._2},"task_sec":${r3(st._3)}""" +
-        err.map(m => s""","error":"${jsonEscape(m)}"""").getOrElse("") + "}")
-      (name, sec, err, st)
+      println(s"""{"metric":"query","name":"${q.name}","sec":${r3(sec)},$st""" +
+        err.map(m => s""","error":${Verify.jsonString(m)}""").getOrElse("") + "}")
+      (q.name, sec, err, st)
     }
     val qs = timed.map { case (k, v, _, _) => s"\"" + k + "\":" + r3(v) }
       .mkString("{", ",", "}")
     val errs = timed.collect { case (k, _, Some(m), _) =>
-      s"\"" + k + "\":\"" + jsonEscape(m) + "\""
+      s"\"" + k + "\":" + Verify.jsonString(m)
     }.mkString("{", ",", "}")
-    // Structural (jobs/tasks/Σtask-seconds) map — additions-only: a new
-    // key on the detail line and the artifact file, never a change to
-    // the existing "queries"/"errors" shapes the driver parses.
-    val structMap = timed.map { case (k, _, _, (j, t, ts)) =>
-      s"\"" + k + s"""\":{"jobs":$j,"tasks":$t,"task_sec":${r3(ts)}}"""
-    }.mkString("{", ",", "}")
+    // Structural (jobs/tasks/Σtask-seconds/phases) map — additions-only:
+    // a new key on the detail line and the artifact file, never a change
+    // to the existing "queries"/"errors" shapes the driver parses.
+    val structMap = timed.map { case (k, _, _, st) => s"\"$k\":{$st}" }
+      .mkString("{", ",", "}")
     val total = timed.map(_._2).sum
     // Penultimate line carries the bulky per-query/error maps; the FINAL
     // line is short (<120 bytes) so no tail-capture window can lose the

@@ -17,6 +17,20 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Registry.byName("qw01_etl_pipeline").run(spark, "/root/testdata/sf0.001")
 
+  /** The session every main runs in: `local[SPARK_GRAFT_CPUS]` (default
+    * 4) with as many shuffle partitions, UTC, no UI. */
+  def localSession(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** One per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     Registry.all.map(q => q.name -> q.run).toMap

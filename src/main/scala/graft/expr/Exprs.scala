@@ -164,8 +164,8 @@ object Exprs {
     * to DECIMAL(30,6)), but the fold adds the UNSCALED integer with
     * primitive long arithmetic instead of BigDecimal — whole-stage-
     * codegen longs, measured ~2× faster than the decimal fold on the
-    * qs14 ADC aggregate (tools/AdcFoldProbe) and bit-equal over every
-    * scored pair there.
+    * qs14 ADC aggregate (the retired AdcFoldProbe, SCALING.md "Retired
+    * tools") and bit-equal over every scored pair there.
     *
     * Bit-equality argument: while |Σ|·10⁶ < 2⁵³, both
     * `cast(sum(decimal(30,6)) as double)` and

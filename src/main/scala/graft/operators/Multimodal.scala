@@ -1237,7 +1237,8 @@ object Multimodal {
     * whose signature is all zeros) can emit at corpus scale. A
     * trimmed pair is only found through its other bands, so the cap
     * is a recall trade beyond oracle scales — kept observable via
-    * the BucketProbe tool rather than advertised away. */
+    * the retired BucketProbe (SCALING.md "Retired tools") rather than
+    * advertised away. */
   private def hammingPairs(h: DataFrame, maxDist: Int,
       maxBucketSize: Int = 4096): DataFrame = {
     require(maxDist >= 0 && maxDist < 60, "maxDist in 0..59")

@@ -21,4 +21,18 @@ object Registry {
       TextQueries.all ++ SimilarityQueries.all ++ StreamingQueries.all
 
   lazy val byName: Map[String, Q] = all.map(q => q.name -> q).toMap
+
+  private lazy val byId: Map[String, Q] =
+    all.map(q => q.name.takeWhile(_ != '_') -> q).toMap
+
+  /** The queries a comma-separated list names, in name order. An item is
+    * a full name or its id, the part before the first `_` (`qd11`). Any
+    * item that names no query throws, and the message lists them all. */
+  def select(csv: String): Seq[Q] = {
+    val items = csv.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    val unknown = items.filterNot(i => byName.contains(i) || byId.contains(i))
+    require(items.nonEmpty, s"no query named in '$csv'")
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    items.map(i => byName.getOrElse(i, byId(i))).distinct.sortBy(_.name)
+  }
 }

@@ -14,8 +14,8 @@ import graft.operators.Dedup
   * them ([[graft.operators.Dedup.corpusClusters]], default dials),
   * persists them via [[graft.operators.Dedup.writeLabels]] (the
   * CorpusIndex round-trip pattern), and records the store path; every
-  * later query — in the same bench/verify session or a RunOne that
-  * happens to ask twice — gets the parquet read-back, label-table-sized.
+  * later query — in the same bench/verify session, or a Bench subset
+  * that names it twice — gets the parquet read-back, label-table-sized.
   * Results are IDENTICAL either way: clustering is deterministic and
   * the round-trip is bit-exact (LabelStoreSpec), so oracles don't know
   * or care which path produced the frame.

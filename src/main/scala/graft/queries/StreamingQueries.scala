@@ -50,7 +50,7 @@ object StreamingQueries {
         .outputMode(mode)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
-      if (!q.awaitTermination(180000)) q.stop()
+      EventStreams.awaitDrained(q)
       if (sys.env.contains("GRAFT_STREAM_LOG"))
         q.recentProgress.foreach(pr => println(
           s"[stream] $name batch=${pr.batchId} rows=${pr.numInputRows} " +

@@ -3,7 +3,7 @@ package graft.streaming
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Structured Streaming operators over the event stream (greenfield —
   * the reference is batch-only, §2.10; this is the streaming face of
@@ -15,6 +15,17 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * [[hourlyCounts]] and [[sessionize]], oracle-checked there.
   */
 object EventStreams {
+
+  /** Block until a started query terminates. A query still running after
+    * `timeoutMs` is stopped and throws: its partial state is never
+    * handed back as the result. */
+  def awaitDrained(q: StreamingQuery, timeoutMs: Long = 180000): Unit =
+    if (!q.awaitTermination(timeoutMs)) {
+      q.stop()
+      throw new IllegalStateException(
+        s"stream ${Option(q.name).getOrElse(q.id.toString)} did not finish " +
+          s"within $timeoutMs ms and was stopped")
+    }
 
   /** Watermarked tumbling-window aggregation (`readStream` →
     * `groupBy(window(...))` → `writeStream`): late data beyond the
@@ -41,7 +52,7 @@ object EventStreams {
   def upsertStream(
       agg: DataFrame, jdbcUrl: String, table: String, pk: Seq[String],
       queryName: String = "graft_upsert_stream")
-      : org.apache.spark.sql.streaming.StreamingQuery =
+      : StreamingQuery =
     agg.writeStream
       .outputMode(OutputMode.Update())
       .queryName(queryName)
@@ -93,7 +104,7 @@ object EventStreams {
         ()
       }
       .start()
-    if (!q.awaitTermination(180000)) q.stop()
+    awaitDrained(q)
   }
 
   /** Streaming cluster-label maintenance — [[ingestDedup]]'s sibling
@@ -200,7 +211,7 @@ object EventStreams {
         ()
       }
       .start()
-    if (!q.awaitTermination(180000)) q.stop()
+    awaitDrained(q)
     labels
   }
 
@@ -236,7 +247,7 @@ object EventStreams {
         ()
       }
       .start()
-    if (!q.awaitTermination(180000)) q.stop()
+    awaitDrained(q)
   }
 
   /** Streaming DSIR scoring feed — the
@@ -278,7 +289,7 @@ object EventStreams {
         ()
       }
       .start()
-    if (!q.awaitTermination(180000)) q.stop()
+    awaitDrained(q)
   }
 
   /** Streaming quality-classifier scoring — [[graft.operators.Logit]]'s
@@ -312,7 +323,7 @@ object EventStreams {
         ()
       }
       .start()
-    if (!q.awaitTermination(180000)) q.stop()
+    awaitDrained(q)
   }
 
   /** Streaming duplicated-span rewrite — [[graft.operators.Overlap]]'s
@@ -346,7 +357,7 @@ object EventStreams {
         ()
       }
       .start()
-    if (!q.awaitTermination(180000)) q.stop()
+    awaitDrained(q)
   }
 
   /** Streaming CAS chunk ingest — the content-addressed-storage
@@ -396,7 +407,7 @@ object EventStreams {
         ()
       }
       .start()
-    if (!q.awaitTermination(180000)) q.stop()
+    awaitDrained(q)
   }
 
   /** Late-data audit — the WATERMARK OBSERVABILITY operator every
@@ -450,7 +461,7 @@ object EventStreams {
         ()
       }
       .start()
-    if (!q.awaitTermination(180000)) q.stop()
+    awaitDrained(q)
   }
 
   /** Streaming benchmark-decontamination gate — qt17's exclusion
@@ -496,7 +507,7 @@ object EventStreams {
         ()
       }
       .start()
-    if (!q.awaitTermination(180000)) q.stop()
+    awaitDrained(q)
   }
 
   /** Streaming SEMANTIC-decontamination GATE — the embedding channel
@@ -544,7 +555,7 @@ object EventStreams {
         ()
       }
       .start()
-    if (!q.awaitTermination(180000)) q.stop()
+    awaitDrained(q)
   }
 
   /** Streaming MEDIA-ingest dedup with REAL decode — qst06's
@@ -664,7 +675,7 @@ object EventStreams {
         ()
       }
       .start()
-    if (!q.awaitTermination(180000)) q.stop()
+    awaitDrained(q)
   }
 
   /** Streaming INDEX-HEALTH canary — qs40's datasheet maintained over
@@ -754,7 +765,7 @@ object EventStreams {
         ()
       }
       .start()
-    if (!q.awaitTermination(180000)) q.stop()
+    awaitDrained(q)
   }
 
   /** Streaming PROFILE MAINTENANCE —
@@ -794,7 +805,7 @@ object EventStreams {
         ()
       }
       .start()
-    if (!q.awaitTermination(180000)) q.stop()
+    awaitDrained(q)
     state.foreach(_.write.mode("overwrite").parquet(outDir))
   }
 
@@ -835,7 +846,7 @@ object EventStreams {
         ()
       }
       .start()
-    if (!q.awaitTermination(180000)) q.stop()
+    awaitDrained(q)
   }
 
   /** Streaming subject-erasure feed — [[graft.warehouse.Erasure]] run
@@ -867,7 +878,7 @@ object EventStreams {
         ()
       }
       .start()
-    if (!q.awaitTermination(180000)) q.stop()
+    awaitDrained(q)
   }
 
   /** Streaming CDC snapshot — [[graft.warehouse.Cdc.applyChanges]] as
@@ -1087,7 +1098,7 @@ object EventStreams {
         ()
       }
       .start()
-    if (!q.awaitTermination(180000)) q.stop()
+    awaitDrained(q)
   }
 
   /** Streaming BUDGET GATE — the per-source token allocation
@@ -1178,7 +1189,7 @@ object EventStreams {
         ()
       }
       .start()
-    if (!q.awaitTermination(180000)) q.stop()
+    awaitDrained(q)
     a.unpersist(false)
     graft.core.OpCache.untrack(a)
   }
@@ -1219,6 +1230,6 @@ object EventStreams {
         ()
       }
       .start()
-    if (!q.awaitTermination(180000)) q.stop()
+    awaitDrained(q)
   }
 }

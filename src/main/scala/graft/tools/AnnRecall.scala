@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.operators.Similarity
@@ -17,13 +16,7 @@ object AnnRecall {
     val k = if (args.length > 1) args(1).toInt else 5
     val stride = if (args.length > 2) args(2).toInt else 40
     val nProbe = if (args.length > 3) args(3).toInt else 4 // library default
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.localSession()
     val em = Tables.load(spark, sfDir, "embeddings")
     val exact = Similarity.bruteForceTopK(em, "vec_id", "embedding", k)
       .select(col("vec_id"), col("nbr_id"))

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.queries.Registry
 
 /** Dump `explain("formatted")` for registry queries to files — the
@@ -17,25 +16,18 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val suffix = args(1)
-    val names = args(2).split(",").toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val selected = Registry.select(args(2))
+    val spark = graft.SparkEntry.localSession()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    names.foreach { name =>
+    selected.foreach { q =>
       graft.core.OpCache.releaseAll()
       spark.catalog.clearCache()
-      val df = Registry.byName(name).run(spark, "/root/testdata/sf0.1")
+      val df = q.run(spark, "/root/testdata/sf0.1")
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(outDir, s"${name}_$suffix.txt"), plan)
-      println(s"[plandump] wrote $outDir/${name}_$suffix.txt")
+        java.nio.file.Paths.get(outDir, s"${q.name}_$suffix.txt"), plan)
+      println(s"[plandump] wrote $outDir/${q.name}_$suffix.txt")
     }
     spark.stop()
   }

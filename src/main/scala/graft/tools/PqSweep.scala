@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.operators.Similarity
@@ -17,13 +16,7 @@ import graft.operators.Similarity
 object PqSweep {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.localSession()
     val em = Tables.load(spark, sfDir, "embeddings")
     for ((stride, iters) <- Seq((40, 1), (40, 3), (10, 1), (10, 3),
         (5, 3), (2, 1), (2, 2), (2, 3))) {

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.expr.Exprs.exactSum
@@ -27,13 +27,7 @@ object ScaleSmoke {
       if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet) else None
     def enabled(name: String): Boolean = only.forall(_.contains(name))
     val out = s"/tmp/graft_scale_x$factor"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.localSession()
     import spark.implicits._
 
     def scaled(name: String, keyCols: Seq[String]): DataFrame = {
@@ -61,7 +55,7 @@ object ScaleSmoke {
     ).foreach { case (n, keys) =>
       val dest = s"$out/$n.parquet"
       if (!(reuse && new java.io.File(dest, "_SUCCESS").exists()))
-        scaled(n, keys).repartition(cpus.toInt)
+        scaled(n, keys).repartition(spark.sparkContext.defaultParallelism)
           .write.mode("overwrite").parquet(dest)
     }
 

@@ -19,6 +19,22 @@ class RegistrySpec extends SparkSuite {
     assert(Registry.all.size >= 104)
   }
 
+  test("select names every unknown query and never drops one silently") {
+    val e = intercept[IllegalArgumentException](
+      Registry.select("qd11,qd13x,q01_nope"))
+    assert(e.getMessage.contains("qd13x") && e.getMessage.contains("q01_nope"))
+    assert(!e.getMessage.contains("qd11"))
+    intercept[IllegalArgumentException](Registry.select(" , "))
+  }
+
+  test("select takes names or ids and returns them in name order") {
+    val ids = Registry.all.map(_.name.takeWhile(_ != '_'))
+    assert(ids.distinct.size == ids.size)
+    val got = Registry.select("qt33,qd11_cluster_corpus,qst14,qd11").map(_.name)
+    assert(got == Seq("qd11_cluster_corpus", "qst14_stream_components",
+      "qt33_quality_classifier"))
+  }
+
   test("every query runs at sf0.001 and the flagship returns rows") {
     val dir = "/root/testdata/sf0.001"
     Registry.all.foreach { q =>

@@ -252,4 +252,15 @@ class EventStreamsSpec extends SparkSuite {
       assert(got == Set((1L, 101L), (1L, 102L)))
     } finally q.stop()
   }
+
+  test("a stream that misses its deadline is stopped and throws, naming it") {
+    val q = spark.readStream.format("rate").option("rowsPerSecond", "1").load()
+      .writeStream.format("noop").queryName("never_ends").start()
+    try {
+      val e = intercept[IllegalStateException](
+        EventStreams.awaitDrained(q, timeoutMs = 200))
+      assert(e.getMessage.contains("never_ends"))
+      assert(!q.isActive)
+    } finally q.stop()
+  }
 }
