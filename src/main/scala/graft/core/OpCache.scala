@@ -41,10 +41,19 @@ object OpCache {
 
   /** Persist `df` under the session policy and track it for release.
     * Under `StorageLevel.NONE` this is the identity — callers must not
-    * rely on materialization side effects. */
+    * rely on materialization side effects. A frame whose plan is already
+    * cached is left alone and not tracked: Spark serves it from the
+    * existing entry, and releasing it would drop that entry's owner's
+    * cache. */
   def persist(df: DataFrame): DataFrame =
     if (level == StorageLevel.NONE) df
-    else { sweep(); df.persist(level); live.add(df); noteScoped(df); df }
+    else {
+      sweep()
+      if (df.storageLevel == StorageLevel.NONE) {
+        df.persist(level); live.add(df); noteScoped(df)
+      }
+      df
+    }
 
   /** Track an already-persisted frame (iterative algorithms persist
     * their final state directly — lineage truncation needs the

@@ -51,12 +51,32 @@ object StreamingQueries {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       EventStreams.awaitDrained(q)
-      if (sys.env.contains("GRAFT_STREAM_LOG"))
-        q.recentProgress.foreach(pr => println(
-          s"[stream] $name batch=${pr.batchId} rows=${pr.numInputRows} " +
-            s"durMs=${pr.batchDuration} trigger=${pr.durationMs}"))
     } finally s.conf.set("spark.sql.shuffle.partitions", prev)
     s.table(name)
+  }
+
+  /** Shared harness: a file stream of `frames`, one micro-batch each, in
+    * the given order. Each frame is written as one parquet file; the
+    * files' modification times are pinned a minute apart in that order,
+    * so batch order never depends on copy timing. The intermediate
+    * write directories are deleted. */
+  private[graft] def stagedStream(s: SparkSession, frames: DataFrame*): DataFrame = {
+    val in = java.nio.file.Files.createTempDirectory("graft_stream_in")
+    val t0 = System.currentTimeMillis() - 60000L * (frames.size + 1)
+    frames.zipWithIndex.foreach { case (df, i) =>
+      val tmp = java.nio.file.Files.createTempDirectory("graft_stream_w").toFile
+      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      val part = tmp.listFiles().find(f => f.getName.startsWith("part-") &&
+        f.getName.endsWith(".parquet")).get
+      val dst = in.resolve(f"b$i%04d.parquet")
+      java.nio.file.Files.move(part.toPath, dst)
+      dst.toFile.setLastModified(t0 + 60000L * i)
+      tmp.listFiles().foreach(_.delete())
+      tmp.delete()
+    }
+    s.readStream.schema(frames.head.schema)
+      .option("maxFilesPerTrigger", 1)
+      .parquet(in.toString + "/*.parquet")
   }
 
   val all: Seq[Q] = Seq(
@@ -215,17 +235,11 @@ object StreamingQueries {
         val docs = graft.core.Tables.load(s, dir, "documents")
         val index = graft.operators.Dedup.buildCorpusIndex(
           docs.filter(pmod(col("doc_id"), lit(7)) =!= 0), "doc_id", "text")
-        val in = java.nio.file.Files.createTempDirectory("graft_ingest_in")
         val out = java.nio.file.Files.createTempDirectory("graft_ingest_out")
           .resolve("admitted").toString
-        val src = java.nio.file.Paths.get(dir, "documents.parquet")
-        java.nio.file.Files.copy(src, in.resolve("d1.parquet"))
-        java.nio.file.Files.copy(src, in.resolve("d2.parquet"))
-        val stream = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(in.toString + "/*.parquet")
-          .filter(pmod(col("doc_id"), lit(7)) === 0)
-        EventStreams.ingestDedup(stream, index, "doc_id", "text", out)
+        val batch = docs.filter(pmod(col("doc_id"), lit(7)) === 0)
+        EventStreams.ingestDedup(stagedStream(s, batch, batch), index,
+          "doc_id", "text", out)
         s.read.parquet(out).select(col("keep_id"))
       },
       Some(s"""WITH ${TextQueries.lshCtes()},
@@ -279,16 +293,9 @@ object StreamingQueries {
         val labels0 = graft.core.OpCache.persist(
           graft.operators.Dedup.connectedComponents(
             pairsC.unionByName(selfC), "a_id", "b_id"))
-        val in = java.nio.file.Files.createTempDirectory("graft_cc_in")
-        val src = java.nio.file.Paths.get(dir, "documents.parquet")
-        java.nio.file.Files.copy(src, in.resolve("d1.parquet"))
-        java.nio.file.Files.copy(src, in.resolve("d2.parquet"))
-        val stream = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(in.toString + "/*.parquet")
-          .filter(pmod(col("doc_id"), lit(50)) === 0)
-        EventStreams.componentMaintenance(stream, index, labels0,
-          "doc_id", "text")
+        val batch = docs.filter(pmod(col("doc_id"), lit(50)) === 0)
+        EventStreams.componentMaintenance(stagedStream(s, batch, batch),
+          index, labels0, "doc_id", "text")
           .select(col("node").as("doc_id"), col("component"))
       },
       Some(s"""WITH RECURSIVE ${TextQueries.lshCtes()},
@@ -680,7 +687,6 @@ object StreamingQueries {
         "pool (no cut - the stream scores everything; selection is " +
         "the consumer's ranked read).",
       (s, dir) => {
-        s.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         val docs = graft.core.Tables.load(s, dir, "documents")
         val model = graft.core.OpCache.persist(
           graft.operators.Curation.importanceModel(
@@ -744,7 +750,6 @@ object StreamingQueries {
         "contract with a discriminative scorer instead of the DSIR " +
         "ratio. Oracle = the batch replay of train + score.",
       (s, dir) => {
-        s.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         val docs = graft.core.Tables.load(s, dir, "documents")
         val model = graft.operators.Logit.train(
           docs.withColumn("label", (col("lang") === "en").cast("int")),
@@ -779,7 +784,6 @@ object StreamingQueries {
         "qst17/qst18 serve contract applied to a REWRITE operator. " +
         "Oracle = qd32's batch rewrite verbatim.",
       (s, dir) => {
-        s.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         val docs = graft.core.Tables.load(s, dir, "documents")
         val dup = graft.core.OpCache.persist(
           graft.operators.Overlap.duplicatedGrams(
@@ -811,7 +815,6 @@ object StreamingQueries {
         "PRE-batch store, so emission is partitioning-deterministic. " +
         "Oracle = the batch replay against the bootstrap store.",
       (s, dir) => {
-        s.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         val docs = graft.core.Tables.load(s, dir, "documents")
         val store0 = graft.core.OpCache.persist(
           Multimodal.gearChunkHashes(
@@ -819,17 +822,11 @@ object StreamingQueries {
             "doc_id", "text")
             .select(col("h")).distinct())
         store0.count()
-        val in = java.nio.file.Files.createTempDirectory("graft_ci_in")
-        val src = java.nio.file.Paths.get(dir, "documents.parquet")
-        java.nio.file.Files.copy(src, in.resolve("d1.parquet"))
-        java.nio.file.Files.copy(src, in.resolve("d2.parquet"))
-        val stream = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(in.toString + "/*.parquet")
-          .filter(pmod(col("doc_id"), lit(50)) === 0)
+        val batch = docs.filter(pmod(col("doc_id"), lit(50)) === 0)
         val out = java.nio.file.Files
           .createTempDirectory("graft_ci_out").toString
-        EventStreams.chunkIngestFeed(stream, store0, "doc_id", "text", out)
+        EventStreams.chunkIngestFeed(stagedStream(s, batch, batch), store0,
+          "doc_id", "text", out)
         s.read.parquet(out).distinct()
       },
       Some {
@@ -918,32 +915,10 @@ object StreamingQueries {
         "keeps); batch 1 has no bound, so none of it is late. " +
         "Oracle replays the identical split.",
       (s, dir) => {
-        s.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         val ev = graft.core.Tables.load(s, dir, "events")
-        val in = java.nio.file.Files.createTempDirectory("graft_late_in")
-        def stage(df: org.apache.spark.sql.DataFrame, name: String,
-            mtime: Long): Unit = {
-          val tmp = java.nio.file.Files
-            .createTempDirectory("graft_late_w").toString
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.startsWith("part-") &&
-              f.getName.endsWith(".parquet")).get
-          val dst = in.resolve(name)
-          java.nio.file.Files.copy(part.toPath, dst)
-          dst.toFile.setLastModified(mtime)
-        }
-        // mtimes only pin batch ORDER; no output value depends on them
-        val t0 = System.currentTimeMillis() - 120000L
-        stage(ev.filter(pmod(col("event_id"), lit(2)) === 0), "a1.parquet", t0)
-        stage(ev.filter(pmod(col("event_id"), lit(2)) === 1), "b2.parquet",
-          t0 + 60000L)
-        val schema = StructType.fromDDL(
-          "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, " +
-            "event_type STRING, value DOUBLE, props STRING")
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(in.toString + "/*.parquet")
+        val stream = stagedStream(s,
+          ev.filter(pmod(col("event_id"), lit(2)) === 0),
+          ev.filter(pmod(col("event_id"), lit(2)) === 1))
         val out = java.nio.file.Files
           .createTempDirectory("graft_late_out").toString
         EventStreams.lateDataAudit(stream, out, horizon = "1 hour")
@@ -976,31 +951,10 @@ object StreamingQueries {
         "merge-exactness claim under streaming arrival. Exactly-" +
         "once feed contract (counts are not idempotent).",
       (s, dir) => {
-        s.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         val ev = graft.core.Tables.load(s, dir, "events")
-        val in = java.nio.file.Files.createTempDirectory("graft_pm_in")
-        def stage(df: org.apache.spark.sql.DataFrame, name: String,
-            mtime: Long): Unit = {
-          val tmp = java.nio.file.Files
-            .createTempDirectory("graft_pm_w").toString
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.startsWith("part-") &&
-              f.getName.endsWith(".parquet")).get
-          val dst = in.resolve(name)
-          java.nio.file.Files.copy(part.toPath, dst)
-          dst.toFile.setLastModified(mtime)
-        }
-        val t0 = System.currentTimeMillis() - 120000L
-        stage(ev.filter(pmod(col("event_id"), lit(2)) === 0), "a1.parquet", t0)
-        stage(ev.filter(pmod(col("event_id"), lit(2)) === 1), "b2.parquet",
-          t0 + 60000L)
-        val schema = StructType.fromDDL(
-          "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, " +
-            "event_type STRING, value DOUBLE, props STRING")
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(in.toString + "/*.parquet")
+        val stream = stagedStream(s,
+          ev.filter(pmod(col("event_id"), lit(2)) === 0),
+          ev.filter(pmod(col("event_id"), lit(2)) === 1))
         val out = java.nio.file.Files
           .createTempDirectory("graft_pm_out").toString
         def dk(c: String) = c match {
@@ -1058,25 +1012,17 @@ object StreamingQueries {
         "rows (consumer distinct). Oracle = qd17's replay plus the " +
         "admitted flag.",
       (s, dir) => {
-        s.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         val docs = graft.core.Tables.load(s, dir, "documents")
         val benchFp = graft.core.OpCache.persist(
           graft.operators.Dedup.winnowingFingerprints(
             docs.filter(pmod(col("doc_id"), lit(50)) === 0), "doc_id", "text")
             .select(col("fp")).distinct())
         benchFp.count()
-        val in = java.nio.file.Files.createTempDirectory("graft_dg_in")
-        val src = java.nio.file.Paths.get(dir, "documents.parquet")
-        java.nio.file.Files.copy(src, in.resolve("d1.parquet"))
-        java.nio.file.Files.copy(src, in.resolve("d2.parquet"))
-        val stream = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(in.toString + "/*.parquet")
-          .filter(pmod(col("doc_id"), lit(50)) =!= 0)
+        val batch = docs.filter(pmod(col("doc_id"), lit(50)) =!= 0)
         val out = java.nio.file.Files
           .createTempDirectory("graft_dg_out").toString
-        EventStreams.decontaminationGateFeed(stream, benchFp,
-          "doc_id", "text", out)
+        EventStreams.decontaminationGateFeed(stagedStream(s, batch, batch),
+          benchFp, "doc_id", "text", out)
         s.read.parquet(out).distinct()
       },
       Some(s"""WITH wd AS (
@@ -1118,34 +1064,13 @@ object StreamingQueries {
         "Oracle replays both batch profiles against the full-table " +
         "baseline.",
       (s, dir) => {
-        s.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         val ev = graft.core.Tables.load(s, dir, "events")
         val baseline = graft.core.OpCache.persist(
           graft.warehouse.Profile.profile(ev))
         baseline.count()
-        val in = java.nio.file.Files.createTempDirectory("graft_pd_in")
-        def stage(df: org.apache.spark.sql.DataFrame, name: String,
-            mtime: Long): Unit = {
-          val tmp = java.nio.file.Files
-            .createTempDirectory("graft_pd_w").toString
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.startsWith("part-") &&
-              f.getName.endsWith(".parquet")).get
-          val dst = in.resolve(name)
-          java.nio.file.Files.copy(part.toPath, dst)
-          dst.toFile.setLastModified(mtime)
-        }
-        val t0 = System.currentTimeMillis() - 120000L
-        stage(ev.filter(pmod(col("event_id"), lit(2)) === 0), "a1.parquet", t0)
-        stage(ev.filter(pmod(col("event_id"), lit(2)) === 1), "b2.parquet",
-          t0 + 60000L)
-        val schema = StructType.fromDDL(
-          "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, " +
-            "event_type STRING, value DOUBLE, props STRING")
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(in.toString + "/*.parquet")
+        val stream = stagedStream(s,
+          ev.filter(pmod(col("event_id"), lit(2)) === 0),
+          ev.filter(pmod(col("event_id"), lit(2)) === 1))
         val out = java.nio.file.Files
           .createTempDirectory("graft_pd_out").toString
         EventStreams.profileDriftFeed(stream, baseline, out)
@@ -1262,24 +1187,12 @@ object StreamingQueries {
           graft.operators.Similarity.buildSqIndex(em, "vec_id", "embedding"),
           idxDir)
         val index = graft.operators.Similarity.readSqIndex(s, idxDir)
-        val in = java.nio.file.Files.createTempDirectory("graft_ann_in")
         val out = java.nio.file.Files.createTempDirectory("graft_ann_out")
           .resolve("topk").toString
-        // stage two DISJOINT query halves as one parquet file each:
-        // %50=0 in batch 1, %50=25 in batch 2
-        def stage(cond: org.apache.spark.sql.Column, name: String): Unit = {
-          val tmp = java.nio.file.Files.createTempDirectory("graft_stage_")
-          em.filter(cond).coalesce(1).write.mode("overwrite")
-            .parquet(tmp.toString)
-          val part = java.nio.file.Files.list(tmp).filter(p =>
-            p.getFileName.toString.startsWith("part-")).findFirst().get()
-          java.nio.file.Files.copy(part, in.resolve(name))
-        }
-        stage(pmod(col("vec_id"), lit(50)) === 0, "q1.parquet")
-        stage(pmod(col("vec_id"), lit(50)) === 25, "q2.parquet")
-        val stream = s.readStream.schema(em.schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(in.toString + "/*.parquet")
+        // two DISJOINT query halves: %50=0 in batch 1, %50=25 in batch 2
+        val stream = stagedStream(s,
+          em.filter(pmod(col("vec_id"), lit(50)) === 0),
+          em.filter(pmod(col("vec_id"), lit(50)) === 25))
         EventStreams.annServe(stream, index, "vec_id", "embedding",
           k = 10, out)
         s.read.parquet(out)
@@ -1308,7 +1221,6 @@ object StreamingQueries {
         "(consumer distinct). Oracle = qt42's semantic replay + the " +
         "admitted flag.",
       (s, dir) => {
-        s.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         val em = graft.core.Tables.load(s, dir, "embeddings")
         val idx = {
           val b = graft.operators.Similarity.buildIvfIndex(
@@ -1319,14 +1231,8 @@ object StreamingQueries {
             graft.core.OpCache.persist(b.cells))
           p.centroids.count(); p.cells.count(); p
         }
-        val in = java.nio.file.Files.createTempDirectory("graft_sg_in")
-        val src = java.nio.file.Paths.get(dir, "embeddings.parquet")
-        java.nio.file.Files.copy(src, in.resolve("e1.parquet"))
-        java.nio.file.Files.copy(src, in.resolve("e2.parquet"))
-        val stream = s.readStream.schema(em.schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(in.toString + "/*.parquet")
-          .filter(pmod(col("vec_id"), lit(50)) =!= 0)
+        val batch = em.filter(pmod(col("vec_id"), lit(50)) =!= 0)
+        val stream = stagedStream(s, batch, batch)
         val out = java.nio.file.Files
           .createTempDirectory("graft_sg_out").toString
         EventStreams.semanticGateFeed(stream, idx, "vec_id", "embedding",
@@ -1399,27 +1305,10 @@ object StreamingQueries {
         "emits nothing new. Oracle = the cyclic-stream first-" +
         "occurrence replay (no bytes needed).",
       (s, dir) => {
-        s.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         val media = Multimodal.syntheticImages(
           graft.core.Tables.load(s, dir, "documents"), "doc_id", "text")
           .select(col("media_id"), col("bytes"))
-        val in = java.nio.file.Files.createTempDirectory("graft_mi_in")
-        def stage(name: String): Unit = {
-          val tmp = java.nio.file.Files
-            .createTempDirectory("graft_mi_w").toString
-          media.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.startsWith("part-") &&
-              f.getName.endsWith(".parquet")).get
-          java.nio.file.Files.copy(part.toPath, in.resolve(name))
-          ()
-        }
-        stage("m1.parquet")
-        stage("m2.parquet")
-        val stream = s.readStream
-          .schema("media_id LONG, bytes BINARY")
-          .option("maxFilesPerTrigger", 1)
-          .parquet(in.toString + "/*.parquet")
+        val stream = stagedStream(s, media, media)
         val out = java.nio.file.Files
           .createTempDirectory("graft_mi_out").toString
         EventStreams.mediaIngestFeed(stream, out)
@@ -1456,27 +1345,10 @@ object StreamingQueries {
         "bytes differ. Re-delivery emits nothing new. Oracle = the " +
         "formula-stream first-occurrence replay (no bytes needed).",
       (s, dir) => {
-        s.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         val media = Multimodal.syntheticAudio(
           graft.core.Tables.load(s, dir, "documents"), "doc_id", "text")
           .select(col("media_id"), col("bytes"))
-        val in = java.nio.file.Files.createTempDirectory("graft_ai_in")
-        def stage(name: String): Unit = {
-          val tmp = java.nio.file.Files
-            .createTempDirectory("graft_ai_w").toString
-          media.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.startsWith("part-") &&
-              f.getName.endsWith(".parquet")).get
-          java.nio.file.Files.copy(part.toPath, in.resolve(name))
-          ()
-        }
-        stage("a1.parquet")
-        stage("a2.parquet")
-        val stream = s.readStream
-          .schema("media_id LONG, bytes BINARY")
-          .option("maxFilesPerTrigger", 1)
-          .parquet(in.toString + "/*.parquet")
+        val stream = stagedStream(s, media, media)
         val out = java.nio.file.Files
           .createTempDirectory("graft_ai_out").toString
         EventStreams.audioIngestFeed(stream, out)
@@ -1522,27 +1394,10 @@ object StreamingQueries {
         "the oracle replays first occurrence per (n_frames, " +
         "frame-gray sequence) without seeing bytes.",
       (s, dir) => {
-        s.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         val media = Multimodal.syntheticVideos(
           graft.core.Tables.load(s, dir, "documents"), "doc_id")
           .select(col("media_id"), col("bytes"))
-        val in = java.nio.file.Files.createTempDirectory("graft_vi_in")
-        def stage(name: String): Unit = {
-          val tmp = java.nio.file.Files
-            .createTempDirectory("graft_vi_w").toString
-          media.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.startsWith("part-") &&
-              f.getName.endsWith(".parquet")).get
-          java.nio.file.Files.copy(part.toPath, in.resolve(name))
-          ()
-        }
-        stage("v1.parquet")
-        stage("v2.parquet")
-        val stream = s.readStream
-          .schema("media_id LONG, bytes BINARY")
-          .option("maxFilesPerTrigger", 1)
-          .parquet(in.toString + "/*.parquet")
+        val stream = stagedStream(s, media, media)
         val out = java.nio.file.Files
           .createTempDirectory("graft_vi_out").toString
         EventStreams.videoIngestFeed(stream, out)
@@ -1576,7 +1431,6 @@ object StreamingQueries {
         "retrain is due, visible within one batch. Oracle replays " +
         "the frozen assignment and both cumulative states.",
       (s, dir) => {
-        s.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         val em = graft.core.Tables.load(s, dir, "embeddings")
         val idx = {
           val b = graft.operators.Similarity.buildIvfIndex(
@@ -1587,23 +1441,10 @@ object StreamingQueries {
             graft.core.OpCache.persist(b.cells))
           p.centroids.count(); p.cells.count(); p
         }
-        val in = java.nio.file.Files.createTempDirectory("graft_ih_in")
-        def stage(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-          val tmp = java.nio.file.Files
-            .createTempDirectory("graft_ih_w").toString
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.startsWith("part-") &&
-              f.getName.endsWith(".parquet")).get
-          java.nio.file.Files.copy(part.toPath, in.resolve(name))
-          ()
-        }
-        stage(em.filter(pmod(col("vec_id"), lit(2)) === 1), "a1.parquet")
-        stage(em.filter(pmod(col("vec_id"), lit(2)) === 0 &&
-          pmod(col("vec_id"), lit(4)) =!= 0), "b2.parquet")
-        val stream = s.readStream.schema(em.schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(in.toString + "/*.parquet")
+        val stream = stagedStream(s,
+          em.filter(pmod(col("vec_id"), lit(2)) === 1),
+          em.filter(pmod(col("vec_id"), lit(2)) === 0 &&
+            pmod(col("vec_id"), lit(4)) =!= 0))
         val out = java.nio.file.Files
           .createTempDirectory("graft_ih_out").toString
         EventStreams.indexHealthFeed(stream, idx, "vec_id", "embedding",
@@ -2730,24 +2571,10 @@ object StreamingQueries {
         "functions of their batch). Oracle = qt37's integer " +
         "Mann–Whitney replay per parity group.",
       (s, dir) => {
-        s.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         val docs = graft.core.Tables.load(s, dir, "documents")
-        val in = java.nio.file.Files.createTempDirectory("graft_auc_in")
-        def stage(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-          val tmp = java.nio.file.Files
-            .createTempDirectory("graft_auc_w").toString
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.startsWith("part-") &&
-              f.getName.endsWith(".parquet")).get
-          java.nio.file.Files.copy(part.toPath, in.resolve(name))
-          ()
-        }
-        stage(docs.filter(pmod(col("doc_id"), lit(2)) === 0), "e0.parquet")
-        stage(docs.filter(pmod(col("doc_id"), lit(2)) === 1), "o1.parquet")
-        val stream = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(in.toString + "/*.parquet")
+        val stream = stagedStream(s,
+          docs.filter(pmod(col("doc_id"), lit(2)) === 0),
+          docs.filter(pmod(col("doc_id"), lit(2)) === 1))
         val out = java.nio.file.Files
           .createTempDirectory("graft_auc_out").toString
         val t = split(coalesce(col("text"), lit("")), " ")
@@ -2796,33 +2623,14 @@ object StreamingQueries {
         "partitioning. Exactly-once feed contract (consumption adds). " +
         "Oracle replays both batches with the carried offsets.",
       (s, dir) => {
-        s.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         val docs = graft.core.Tables.load(s, dir, "documents")
         val alloc = graft.core.OpCache.persist(
           docs.select(col("source")).distinct()
             .select(col("source"), lit(600L).as("alloc_tokens")))
         alloc.count()
-        val in = java.nio.file.Files.createTempDirectory("graft_bg_in")
-        def stage(df: org.apache.spark.sql.DataFrame, name: String,
-            mtime: Long): Unit = {
-          val tmp = java.nio.file.Files
-            .createTempDirectory("graft_bg_w").toString
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.startsWith("part-") &&
-              f.getName.endsWith(".parquet")).get
-          val dst = in.resolve(name)
-          java.nio.file.Files.copy(part.toPath, dst)
-          dst.toFile.setLastModified(mtime)
-          ()
-        }
-        val t0 = System.currentTimeMillis() - 120000L
-        stage(docs.filter(pmod(col("doc_id"), lit(2)) === 0), "e0.parquet", t0)
-        stage(docs.filter(pmod(col("doc_id"), lit(2)) === 1), "o1.parquet",
-          t0 + 60000L)
-        val stream = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(in.toString + "/*.parquet")
+        val stream = stagedStream(s,
+          docs.filter(pmod(col("doc_id"), lit(2)) === 0),
+          docs.filter(pmod(col("doc_id"), lit(2)) === 1))
         val out = java.nio.file.Files
           .createTempDirectory("graft_bg_out").toString
         EventStreams.budgetGateFeed(stream, "doc_id", "source",
@@ -2867,27 +2675,13 @@ object StreamingQueries {
         "quantize to DECIMAL(30,6) before the exact-sum variance " +
         "dag. Oracle = the unrolled PCA replay + per-parity stats.",
       (s, dir) => {
-        s.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         val em = graft.core.Tables.load(s, dir, "embeddings")
         val (v, muv) = graft.operators.Similarity.pcaAxisWithMean(
           em, "vec_id", "embedding", iters = 3)
         v.count(); muv.count()
-        val in = java.nio.file.Files.createTempDirectory("graft_ed_in")
-        def stage(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-          val tmp = java.nio.file.Files
-            .createTempDirectory("graft_ed_w").toString
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.startsWith("part-") &&
-              f.getName.endsWith(".parquet")).get
-          java.nio.file.Files.copy(part.toPath, in.resolve(name))
-          ()
-        }
-        stage(em.filter(pmod(col("vec_id"), lit(2)) === 0), "e0.parquet")
-        stage(em.filter(pmod(col("vec_id"), lit(2)) === 1), "o1.parquet")
-        val stream = s.readStream.schema(em.schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(in.toString + "/*.parquet")
+        val stream = stagedStream(s,
+          em.filter(pmod(col("vec_id"), lit(2)) === 0),
+          em.filter(pmod(col("vec_id"), lit(2)) === 1))
         val out = java.nio.file.Files
           .createTempDirectory("graft_ed_out").toString
         EventStreams.embeddingDriftFeed(stream, "vec_id", "embedding",

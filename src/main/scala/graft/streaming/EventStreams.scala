@@ -1,9 +1,11 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import graft.core.{Jobs, Lineage, OpCache}
+import graft.operators.Dedup.CorpusIndex
 
 /** Structured Streaming operators over the event stream (greenfield —
   * the reference is batch-only, §2.10; this is the streaming face of
@@ -13,6 +15,31 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * event_type, value, props). Batch/stream parity: `q20_events_hourly`
   * and `q22_sessionize` in the registry are the batch twins of
   * [[hourlyCounts]] and [[sessionize]], oracle-checked there.
+  *
+  * Every feed that drains its input (all but [[upsertStream]], whose
+  * started query the caller owns) runs on one micro-batch driver,
+  * [[drain]]:
+  *
+  *  - '''Order.''' The stream runs with the AvailableNow trigger in
+  *    Append mode; the feed's step sees each micro-batch in order,
+  *    with the state the previous batch returned.
+  *  - '''Per-batch release.''' Each batch runs inside
+  *    [[graft.core.OpCache.collectScoped]], so the driver knows every
+  *    frame the feed persisted, including inside the operators it
+  *    calls. After the step it releases each of them — made in this
+  *    batch or an earlier one — that the new state no longer reads;
+  *    the step names the frames its state reads. A long-running stream
+  *    holds its state, never one cached frame per batch.
+  *  - '''End-of-stream release.''' When the stream drains, every frame
+  *    the feed persisted is released except those its result reads
+  *    (`componentMaintenance`'s labels; nothing for a feed that returns
+  *    `Unit`).
+  *  - '''Caller frames stay.''' Frames the caller passed in (bootstrap
+  *    labels, stored indexes, models) are never released.
+  *  - '''Deadline.''' The driver blocks through [[awaitDrained]]: a
+  *    stream that misses its deadline is stopped and throws, and a
+  *    step that throws fails the feed; either way every frame the feed
+  *    persisted is released and no partial state is returned.
   */
 object EventStreams {
 
@@ -26,6 +53,52 @@ object EventStreams {
         s"stream ${Option(q.name).getOrElse(q.id.toString)} did not finish " +
           s"within $timeoutMs ms and was stopped")
     }
+
+  /** The micro-batch driver (see the object doc): runs `input` to
+    * completion as `queryName`, folding `step` over its micro-batches
+    * from `init`, and returns the final state.
+    *
+    * @param reads  the frames a state reads: of the frames the feed
+    *               persisted, these stay cached and the rest are released
+    * @param finish runs once the stream has drained and names the
+    *               frames the feed's result reads; those stay cached
+    */
+  private[streaming] def drain[S](
+      input: DataFrame,
+      queryName: String,
+      init: S,
+      reads: S => Seq[DataFrame] = (_: S) => Nil,
+      finish: S => Seq[DataFrame] = (_: S) => Nil)(
+      step: (DataFrame, S) => S): S = {
+    var state = init
+    var owned = Seq.empty[DataFrame]
+    def release(keep: Seq[DataFrame]): Unit = {
+      val (kept, gone) = owned.partition(f => keep.exists(_ eq f))
+      gone.foreach { f => f.unpersist(false); OpCache.untrack(f) }
+      owned = kept
+    }
+    var kept: Seq[DataFrame] = Nil
+    try {
+      val q = input.writeStream
+        .queryName(queryName)
+        .outputMode(OutputMode.Append())
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (batch: Dataset[Row], _: Long) =>
+          // a step that throws (an interrupt from a stop included)
+          // still hands over the frames it persisted
+          val (next, made) = OpCache.collectScoped(
+            try Right(step(batch.toDF(), state))
+            catch { case t: Throwable => Left(t) })
+          owned ++= made
+          state = next match { case Right(s) => s; case Left(t) => throw t }
+          release(reads(state))
+        }
+        .start()
+      awaitDrained(q)
+      kept = finish(state)
+    } finally release(kept)
+    state
+  }
 
   /** Watermarked tumbling-window aggregation (`readStream` →
     * `groupBy(window(...))` → `writeStream`): late data beyond the
@@ -56,11 +129,25 @@ object EventStreams {
     agg.writeStream
       .outputMode(OutputMode.Update())
       .queryName(queryName)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
+      .foreachBatch { (batch: Dataset[Row], _: Long) =>
         graft.warehouse.JdbcUpsert.writeViaStage(
           batch.toDF(), jdbcUrl, table, pk)
       }
       .start()
+
+  /** `index` grown by the per-batch `deltas`: a lazy union over cached
+    * children, so a probe re-derives nothing and nothing corpus-sized
+    * is copied per batch. The union deepens one level per batch — fine
+    * for a drained stream; a 24/7 service would append the deltas to
+    * the stored index ([[graft.operators.Dedup.writeCorpusIndex]]). */
+  private def grown(index: CorpusIndex, deltas: Seq[CorpusIndex]): CorpusIndex =
+    deltas.foldLeft(index)((a, d) => CorpusIndex(
+      a.hashes.unionByName(d.hashes),
+      a.shingles.unionByName(d.shingles),
+      a.bands.unionByName(d.bands)))
+
+  private def indexFrames(ixs: Seq[CorpusIndex]): Seq[DataFrame] =
+    ixs.flatMap(ix => Seq(ix.hashes, ix.shingles, ix.bands))
 
   /** Streaming corpus-ingest dedup — the daily-ingest lifecycle
     * ([[graft.operators.Dedup.incrementalDedupWithIndex]]) run as a
@@ -70,41 +157,33 @@ object EventStreams {
     * documents FOLD BACK into the index before the next batch — a doc
     * admitted in batch N is a known duplicate in batch N+1, so
     * at-least-once upstream delivery admits each document exactly
-    * once. Blocks until the stream drains (AvailableNow); read
-    * `outDir` for the admitted set. The index-growth step unions the
-    * per-batch artifacts (at production scale: append the same three
-    * parquet datasets [[graft.operators.Dedup.writeCorpusIndex]]
-    * maintains, not an in-memory union). */
+    * once. Read `outDir` for the admitted set. */
   def ingestDedup(
       docs: DataFrame,
-      index: graft.operators.Dedup.CorpusIndex,
+      index: CorpusIndex,
       idCol: String,
       textCol: String,
       outDir: String,
       queryName: String = "graft_ingest_dedup"): Unit = {
-    var cur = index
-    val q = docs.writeStream
-      .queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val b = graft.core.OpCache.persist(batch.toDF())
-        val admitted = graft.core.OpCache.persist(
-          graft.operators.Dedup.incrementalDedupWithIndex(
-            cur, b, idCol, textCol))
-        admitted.write.mode("append").parquet(outDir)
-        val admittedDocs = b.join(
-          admitted.select(col("keep_id").as(idCol)), Seq(idCol), "left_semi")
-        val grown = graft.operators.Dedup.buildCorpusIndex(
-          admittedDocs, idCol, textCol)
-        cur = graft.operators.Dedup.CorpusIndex(
-          cur.hashes.unionByName(grown.hashes),
-          cur.shingles.unionByName(grown.shingles),
-          cur.bands.unionByName(grown.bands))
-        ()
-      }
-      .start()
-    awaitDrained(q)
+    type S = (Vector[CorpusIndex], Seq[DataFrame])
+    drain(docs, queryName, (Vector.empty[CorpusIndex], Nil): S,
+        (s: S) => indexFrames(s._1) ++ s._2) { case (batch, (deltas, _)) =>
+      val b = OpCache.persist(batch)
+      // cut: the delta reads `admitted`, whose plan holds every earlier
+      // delta, so un-cut the index plan would grow geometrically per batch
+      val admitted = OpCache.persist(Lineage.cut(
+        graft.operators.Dedup.incrementalDedupWithIndex(
+          grown(index, deltas), b, idCol, textCol)))
+      admitted.write.mode("append").parquet(outDir)
+      val d = graft.operators.Dedup.buildCorpusIndex(
+        b.join(admitted.select(col("keep_id").as(idCol)), Seq(idCol), "left_semi"),
+        idCol, textCol)
+      // the delta fills when the next batch's probe first reads it, so
+      // the state keeps the frames it is built from until then
+      (deltas :+ CorpusIndex(OpCache.persist(d.hashes),
+        OpCache.persist(d.shingles), OpCache.persist(d.bands)),
+        Seq(b, admitted))
+    }
   }
 
   /** Streaming cluster-label maintenance — [[ingestDedup]]'s sibling
@@ -130,89 +209,35 @@ object EventStreams {
     * stays O(1) deep — the same discipline as the CC rounds. */
   def componentMaintenance(
       docs: DataFrame,
-      index: graft.operators.Dedup.CorpusIndex,
+      index: CorpusIndex,
       labels0: DataFrame,
       idCol: String,
       textCol: String,
       queryName: String = "graft_stream_components"): DataFrame = {
+    type S = (DataFrame, Vector[CorpusIndex])
     val spark = docs.sparkSession
-    var cur = index
-    var labels = labels0
-    val q = docs.writeStream
-      .queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        // collect every frame THIS batch persists — including inside
-        // batchNearDupStarEdges / incrementalComponents, which the
-        // caller has no handle to — so the scoped release below drops
-        // all of them except the carried-forward state (labels + the
-        // three index deltas). Without the scope, each micro-batch
-        // leaked one cached signature frame (round-10 ADVICE).
-        val (keep, made) = graft.core.OpCache.collectScoped {
-          val b = graft.core.OpCache.persist(batch.toDF())
-          val edges = graft.operators.Dedup.batchNearDupStarEdges(
-            cur, b, idCol, textCol)
-          val next = graft.operators.Dedup.incrementalComponents(
-            labels, edges, b.select(col(idCol).as("node")))
-          val prev = labels
-          labels = graft.core.Jobs.described(spark, "scc: labels cut") {
-            graft.core.OpCache.persist(graft.core.Lineage.cut(next))
-          }
-          val grown = graft.operators.Dedup.buildCorpusIndex(b, idCol, textCol)
-          // Persist and materialize ONLY the batch DELTA; the union over
-          // cached children stays LAZY. The next batch's probe scans the
-          // cached bootstrap frames + cached per-batch deltas — nothing
-          // is re-derived (every union child is materialized), and
-          // nothing CORPUS-sized is copied per batch. (The previous
-          // revision persisted+counted the whole union each batch —
-          // re-materializing the full index per micro-batch, O(corpus)
-          // per batch; that copy was the dominant cost of the loop.)
-          // The union tree grows one level per batch — plan depth is
-          // batch-count-linear, fine for a drained AvailableNow stream;
-          // a 24/7 service would instead append the deltas to the
-          // stored parquet index (writeCorpusIndex) and reload.
-          val gh = graft.core.OpCache.persist(grown.hashes)
-          val gs = graft.core.OpCache.persist(grown.shingles)
-          val gb = graft.core.OpCache.persist(grown.bands)
-          // Materialize the new label state and the three index deltas
-          // in ONE action: a union of per-frame probe projections scans
-          // every cached partition of all four frames, so one job (one
-          // wide stage, every scan partition schedulable at once) fills
-          // all four caches — replacing the label count + three
-          // Future-driven delta counts (4 jobs; the Futures also ran
-          // Spark jobs from the process-global ExecutionContext, where
-          // inherited localProperties / cancellation were thread-pool
-          // luck — round-11 ADVICE). Ordering is preserved: everything
-          // carried forward materializes BEFORE the superseded label
-          // frame is released and before the index union mutates.
-          graft.core.Jobs.described(spark, "scc: materialize") {
-            Seq(labels, gh, gs, gb)
-              .map(f => f.select(lit(1L).as("one")))
-              .reduce(_ union _)
-              .count()
-          }
-          // release the superseded label frame (but never the caller's
-          // labels0) — a long-running stream must not accumulate one
-          // cached frame per micro-batch
-          if (prev ne labels0) {
-            prev.unpersist(false)
-            graft.core.OpCache.untrack(prev)
-          }
-          cur = graft.operators.Dedup.CorpusIndex(
-            cur.hashes.unionByName(gh),
-            cur.shingles.unionByName(gs),
-            cur.bands.unionByName(gb))
-          Set(labels, gh, gs, gb)
-        }
-        made.filterNot(keep.contains).foreach { f =>
-          f.unpersist(false); graft.core.OpCache.untrack(f)
-        }
-        ()
+    drain(docs, queryName, (labels0, Vector.empty[CorpusIndex]),
+        reads = (s: S) => s._1 +: indexFrames(s._2),
+        finish = (s: S) => Seq(s._1)) { case (batch, (labels, deltas)) =>
+      val b = OpCache.persist(batch)
+      val edges = graft.operators.Dedup.batchNearDupStarEdges(
+        grown(index, deltas), b, idCol, textCol)
+      val next = graft.operators.Dedup.incrementalComponents(
+        labels, edges, b.select(col(idCol).as("node")))
+      val cut = Jobs.described(spark, "scc: labels cut") {
+        OpCache.persist(Lineage.cut(next))
       }
-      .start()
-    awaitDrained(q)
-    labels
+      val ix = graft.operators.Dedup.buildCorpusIndex(b, idCol, textCol)
+      val delta = CorpusIndex(OpCache.persist(ix.hashes),
+        OpCache.persist(ix.shingles), OpCache.persist(ix.bands))
+      // one action fills the labels and the delta: a union of per-frame
+      // probe projections scans every cached partition in one wide stage
+      Jobs.described(spark, "scc: materialize") {
+        (cut +: indexFrames(Seq(delta))).map(_.select(lit(1L).as("one")))
+          .reduce(_ union _).count()
+      }
+      (cut, deltas :+ delta)
+    }._1
   }
 
   /** Streaming ANN serving — the query-side loop of a similarity
@@ -224,8 +249,7 @@ object EventStreams {
     * cross-batch streaming state at all, so batch boundaries cannot
     * change any query's result (asserted by the registry query, which
     * splits the query set across two micro-batches and compares
-    * against the single-batch oracle). Blocks until the stream drains
-    * (AvailableNow). At-least-once upstream delivery re-emits
+    * against the single-batch oracle). At-least-once upstream delivery re-emits
     * identical rows for a re-delivered query; a sink keyed on
     * (vec_id, rnk) absorbs them. */
   def annServe(
@@ -235,20 +259,12 @@ object EventStreams {
       vecCol: String,
       k: Int,
       outDir: String,
-      queryName: String = "graft_ann_serve"): Unit = {
-    val q = queries.writeStream
-      .queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.operators.Similarity
-          .scalarQuantTopKWithIndex(index, batch.toDF(), idCol, vecCol, k)
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
-    awaitDrained(q)
-  }
+      queryName: String = "graft_ann_serve"): Unit =
+    drain(queries, queryName, ()) { (batch, _) =>
+      graft.operators.Similarity
+        .scalarQuantTopKWithIndex(index, batch, idCol, vecCol, k)
+        .write.mode("append").parquet(outDir)
+    }
 
   /** Streaming DSIR scoring feed — the
     * [[graft.operators.Curation.importanceScore]] scorer run as a
@@ -276,21 +292,13 @@ object EventStreams {
       textCol: String,
       outDir: String,
       buckets: Int = 1024,
-      queryName: String = "graft_dsir_feed"): Unit = {
-    val q = docs.writeStream
-      .queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.operators.Curation.importanceScore(
-          batch.toDF().dropDuplicates(Seq(idCol)), idCol, textCol,
-          model, buckets)
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
-    awaitDrained(q)
-  }
+      queryName: String = "graft_dsir_feed"): Unit =
+    drain(docs, queryName, ()) { (batch, _) =>
+      graft.operators.Curation.importanceScore(
+        batch.dropDuplicates(Seq(idCol)), idCol, textCol,
+        model, buckets)
+        .write.mode("append").parquet(outDir)
+    }
 
   /** Streaming quality-classifier scoring — [[graft.operators.Logit]]'s
     * trained model served LIVE: the model (B+1 weight rows + 1 bias
@@ -310,21 +318,13 @@ object EventStreams {
       outDir: String,
       buckets: Int = 1024,
       gain: Double = 8.0,
-      queryName: String = "graft_logit_feed"): Unit = {
-    val q = docs.writeStream
-      .queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.operators.Logit.score(
-          batch.toDF().dropDuplicates(Seq(idCol)), idCol, textCol,
-          model, buckets, gain)
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
-    awaitDrained(q)
-  }
+      queryName: String = "graft_logit_feed"): Unit =
+    drain(docs, queryName, ()) { (batch, _) =>
+      graft.operators.Logit.score(
+        batch.dropDuplicates(Seq(idCol)), idCol, textCol,
+        model, buckets, gain)
+        .write.mode("append").parquet(outDir)
+    }
 
   /** Streaming duplicated-span rewrite — [[graft.operators.Overlap]]'s
     * span-dedup served LIVE: the duplicated-gram model (8-byte hashes,
@@ -344,21 +344,13 @@ object EventStreams {
       textCol: String,
       outDir: String,
       n: Int = 5,
-      queryName: String = "graft_span_feed"): Unit = {
-    val q = docs.writeStream
-      .queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.operators.Overlap.spanRewriteWithModel(
-          batch.toDF().dropDuplicates(Seq(idCol)), idCol, textCol, n,
-          dupGrams)
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
-    awaitDrained(q)
-  }
+      queryName: String = "graft_span_feed"): Unit =
+    drain(docs, queryName, ()) { (batch, _) =>
+      graft.operators.Overlap.spanRewriteWithModel(
+        batch.dropDuplicates(Seq(idCol)), idCol, textCol, n,
+        dupGrams)
+        .write.mode("append").parquet(outDir)
+    }
 
   /** Streaming CAS chunk ingest — the content-addressed-storage
     * admission loop run LIVE ([[ingestDedup]]'s sibling at CHUNK
@@ -367,8 +359,8 @@ object EventStreams {
     * ([[graft.operators.Multimodal.gearChunkHashes]]), anti-joins the
     * store, and emits one row per media that contributes ≥ 1 NOVEL
     * chunk — (media_id, n_chunks, n_new) — before the store grows by
-    * the batch's novel hashes (per-batch DELTA persisted, union left
-    * lazy over cached children — the componentMaintenance discipline).
+    * the batch's novel hashes (a persisted delta; the store is a lazy
+    * union over them, as [[componentMaintenance]]'s index).
     * A re-delivered or duplicate payload contributes nothing and emits
     * nothing, so at-least-once upstream delivery admits each chunk
     * exactly once. Within a batch, media are counted against the
@@ -380,35 +372,24 @@ object EventStreams {
       idCol: String,
       textCol: String,
       outDir: String,
-      queryName: String = "graft_chunk_ingest"): Unit = {
-    var stored = storedChunks0
-    val q = docs.writeStream
-      .queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val b = graft.core.OpCache.persist(
-          batch.toDF().dropDuplicates(Seq(idCol)))
-        val ch = graft.core.OpCache.persist(
-          graft.operators.Multimodal.gearChunkHashes(b, idCol, textCol))
-        val counts = ch.groupBy(col("media_id"))
-          .agg(count(lit(1)).cast("long").as("n_chunks"))
-        val novel = graft.core.OpCache.persist(
-          ch.join(stored, Seq("h"), "left_anti"))
-        counts
-          .join(novel.groupBy(col("media_id"))
-            .agg(count(lit(1)).cast("long").as("n_new")), Seq("media_id"))
-          .filter(col("n_new") > 0)
-          .write.mode("append").parquet(outDir)
-        val delta = graft.core.OpCache.persist(
-          novel.select(col("h")).distinct())
-        delta.count()
-        stored = stored.unionByName(delta)
-        ()
-      }
-      .start()
-    awaitDrained(q)
-  }
+      queryName: String = "graft_chunk_ingest"): Unit =
+    drain(docs, queryName, Vector.empty[DataFrame], identity[Seq[DataFrame]]) { (batch, deltas) =>
+      val b = OpCache.persist(batch.dropDuplicates(Seq(idCol)))
+      val ch = OpCache.persist(
+        graft.operators.Multimodal.gearChunkHashes(b, idCol, textCol))
+      val counts = ch.groupBy(col("media_id"))
+        .agg(count(lit(1)).cast("long").as("n_chunks"))
+      val novel = OpCache.persist(ch.join(
+        deltas.foldLeft(storedChunks0)(_ unionByName _), Seq("h"), "left_anti"))
+      counts
+        .join(novel.groupBy(col("media_id"))
+          .agg(count(lit(1)).cast("long").as("n_new")), Seq("media_id"))
+        .filter(col("n_new") > 0)
+        .write.mode("append").parquet(outDir)
+      val delta = OpCache.persist(novel.select(col("h")).distinct())
+      delta.count()
+      deltas :+ delta
+    }
 
   /** Late-data audit — the WATERMARK OBSERVABILITY operator every
     * streaming deployment runs before (and while) trusting a
@@ -434,35 +415,22 @@ object EventStreams {
       events: DataFrame,
       outDir: String,
       horizon: String = "1 hour",
-      queryName: String = "graft_late_audit"): Unit = {
-    var maxSeen: Option[java.sql.Timestamp] = None
-    val q = events.writeStream
-      .queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val b = graft.core.OpCache.persist(batch.toDF())
-        val late = maxSeen match {
-          case Some(m) =>
-            (col("ts") < lit(m) - expr(s"INTERVAL $horizon")).cast("long")
-          case None => lit(0L)
-        }
-        b.groupBy(col("event_type"))
-          .agg(count(lit(1)).cast("long").as("n_events"),
-            sum(late).as("n_late"))
-          .write.mode("append").parquet(outDir)
-        val mx = b.agg(max(col("ts"))).head().getTimestamp(0)
-        if (mx != null)
-          maxSeen = Some(maxSeen.fold(mx)(o => if (mx.after(o)) mx else o))
-        // release ONLY this batch's persist — a caller may hold other
-        // persisted state (stored indexes, bootstrap labels) alive
-        b.unpersist(false)
-        graft.core.OpCache.untrack(b)
-        ()
+      queryName: String = "graft_late_audit"): Unit =
+    drain(events, queryName, Option.empty[Timestamp]) { (batch, maxSeen) =>
+      val b = OpCache.persist(batch)
+      val late = maxSeen match {
+        case Some(m) =>
+          (col("ts") < lit(m) - expr(s"INTERVAL $horizon")).cast("long")
+        case None => lit(0L)
       }
-      .start()
-    awaitDrained(q)
-  }
+      b.groupBy(col("event_type"))
+        .agg(count(lit(1)).cast("long").as("n_events"),
+          sum(late).as("n_late"))
+        .write.mode("append").parquet(outDir)
+      val mx = b.agg(max(col("ts"))).head().getTimestamp(0)
+      if (mx == null) maxSeen
+      else Some(maxSeen.fold(mx)(o => if (mx.after(o)) mx else o))
+    }
 
   /** Streaming benchmark-decontamination gate — qt17's exclusion
     * stage run AT THE DOOR (the qst19 frozen-model serve contract
@@ -486,29 +454,21 @@ object EventStreams {
       idCol: String,
       textCol: String,
       outDir: String,
-      queryName: String = "graft_decontam_gate"): Unit = {
-    val q = docs.writeStream
-      .queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val b = batch.toDF().dropDuplicates(Seq(idCol))
-        val hits = graft.operators.Dedup
-          .winnowingFingerprints(b, idCol, textCol)
-          .join(broadcast(benchFp), Seq("fp"), "left_semi")
-          .groupBy(col("doc_id"))
-          .agg(count(lit(1)).cast("long").as("n_shared_fp"))
-        b.select(col(idCol).as("doc_id"))
-          .join(hits, Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            coalesce(col("n_shared_fp"), lit(0L)).as("n_shared_fp"))
-          .withColumn("admitted", (col("n_shared_fp") === 0L).cast("boolean"))
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
-    awaitDrained(q)
-  }
+      queryName: String = "graft_decontam_gate"): Unit =
+    drain(docs, queryName, ()) { (batch, _) =>
+      val b = batch.dropDuplicates(Seq(idCol))
+      val hits = graft.operators.Dedup
+        .winnowingFingerprints(b, idCol, textCol)
+        .join(broadcast(benchFp), Seq("fp"), "left_semi")
+        .groupBy(col("doc_id"))
+        .agg(count(lit(1)).cast("long").as("n_shared_fp"))
+      b.select(col(idCol).as("doc_id"))
+        .join(hits, Seq("doc_id"), "left")
+        .select(col("doc_id"),
+          coalesce(col("n_shared_fp"), lit(0L)).as("n_shared_fp"))
+        .withColumn("admitted", (col("n_shared_fp") === 0L).cast("boolean"))
+        .write.mode("append").parquet(outDir)
+    }
 
   /** Streaming SEMANTIC-decontamination GATE — the embedding channel
     * at the ingest door ([[decontaminationGateFeed]]'s twin; qt42's
@@ -536,27 +496,19 @@ object EventStreams {
       outDir: String,
       threshold: Double = 0.5,
       nProbe: Int = 2,
-      queryName: String = "graft_semantic_gate"): Unit = {
-    val q = vecs.writeStream
-      .queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val b = batch.toDF().dropDuplicates(Seq(idCol))
-        val rep = graft.operators.Similarity.semanticLeakageReportIndexed(
-          index, b, idCol, vecCol, threshold, nProbe)
-          .select(col("vec_id"), col("max_cos"))
-        b.select(col(idCol).as("vec_id"))
-          .join(rep, Seq("vec_id"), "left")
-          .select(col("vec_id"), col("max_cos"),
-            (col("max_cos").isNull || col("max_cos") < threshold)
-              .as("admitted"))
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
-    awaitDrained(q)
-  }
+      queryName: String = "graft_semantic_gate"): Unit =
+    drain(vecs, queryName, ()) { (batch, _) =>
+      val b = batch.dropDuplicates(Seq(idCol))
+      val rep = graft.operators.Similarity.semanticLeakageReportIndexed(
+        index, b, idCol, vecCol, threshold, nProbe)
+        .select(col("vec_id"), col("max_cos"))
+      b.select(col(idCol).as("vec_id"))
+        .join(rep, Seq("vec_id"), "left")
+        .select(col("vec_id"), col("max_cos"),
+          (col("max_cos").isNull || col("max_cos") < threshold)
+            .as("admitted"))
+        .write.mode("append").parquet(outDir)
+    }
 
   /** Streaming MEDIA-ingest dedup with REAL decode — qst06's
     * first-occurrence discipline keyed on DECODED PIXEL IDENTITY
@@ -572,8 +524,7 @@ object EventStreams {
     * (consumer distinct); undecodable payloads are excluded (the
     * upstream quality gate owns them). State = one
     * (width, height, luma_md5) row per distinct stored image — cut
-    * and re-persisted per batch with scoped release (the budget-gate
-    * discipline), KB-sized keys, never pixels. */
+    * and re-persisted per batch, KB-sized keys, never pixels. */
   def mediaIngestFeed(
       media: DataFrame,
       outDir: String,
@@ -589,7 +540,7 @@ object EventStreams {
     * qm17's exact stage at the ingest door): a re-containered or
     * re-uploaded copy of the same recording never enters the corpus
     * twice, however its FILE bytes differ (WAV vs AIFF, junk
-    * chunks). Same state/delivery/release contract as the image
+    * chunks). Same state and delivery contract as the image
     * feed. */
   def audioIngestFeed(
       media: DataFrame,
@@ -606,7 +557,7 @@ object EventStreams {
     * demux + per-frame ImageIO decode at the codec seam): a
     * re-muxed or re-padded copy of the same footage never enters the
     * corpus twice, however its container bytes differ. Same
-    * state/delivery/release contract as the image and audio feeds. */
+    * state and delivery contract as the image and audio feeds. */
   def videoIngestFeed(
       media: DataFrame,
       outDir: String,
@@ -625,58 +576,35 @@ object EventStreams {
     * at-least-once re-delivery emits nothing new (consumer distinct);
     * undecodable payloads are excluded (the upstream quality gate
     * owns them). State = one key row per distinct stored identity —
-    * cut and re-persisted per batch with the thread-scoped release
-    * ([[graft.core.OpCache.collectScoped]]), KB-sized keys, never
-    * payload bytes. */
+    * cut and re-persisted per batch, KB-sized keys, never payload
+    * bytes. */
   private def signatureIngestFeed(
       media: DataFrame,
       outDir: String,
       queryName: String,
       signatures: DataFrame => DataFrame,
       keyCols: Seq[String],
-      emitCols: Seq[String]): Unit = {
-    val spark = media.sparkSession
-    var state: Option[DataFrame] = None
-    val q = media.writeStream
-      .queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        // collect the frames THIS batch persists (including inside the
-        // signature op) so the scoped release below touches only them —
-        // never a concurrent query's cache on the same session
-        val (next, made) = graft.core.OpCache.collectScoped {
-          val sig = signatures(batch.toDF().dropDuplicates(Seq("media_id")))
-          val firstInBatch = sig
-            .groupBy(keyCols.map(col): _*)
-            .agg(min(col("media_id")).as("media_id"))
-          val fresh = graft.core.OpCache.persist(state match {
-            case Some(st) => firstInBatch.join(st, keyCols, "left_anti")
-            case None => firstInBatch
-          })
-          fresh.select(emitCols.map(col): _*)
-            .write.mode("append").parquet(outDir)
-          val merged = state match {
-            case Some(st) => st.unionByName(fresh.select(keyCols.map(col): _*))
-            case None => fresh.select(keyCols.map(col): _*)
-          }
-          val n = graft.core.OpCache.persist(
-            graft.core.Lineage.cut(merged))
-          n.count() // materialize before releasing its inputs
-          n
-        }
-        made.filter(_ ne next).foreach { f =>
-          f.unpersist(false); graft.core.OpCache.untrack(f)
-        }
-        state.foreach { prev =>
-          prev.unpersist(false); graft.core.OpCache.untrack(prev)
-        }
-        state = Some(next)
-        ()
+      emitCols: Seq[String]): Unit =
+    drain(media, queryName, Option.empty[DataFrame],
+        (s: Option[DataFrame]) => s.toSeq) { (batch, state) =>
+      val sig = signatures(batch.dropDuplicates(Seq("media_id")))
+      val firstInBatch = sig
+        .groupBy(keyCols.map(col): _*)
+        .agg(min(col("media_id")).as("media_id"))
+      val fresh = OpCache.persist(state match {
+        case Some(st) => firstInBatch.join(st, keyCols, "left_anti")
+        case None => firstInBatch
+      })
+      fresh.select(emitCols.map(col): _*)
+        .write.mode("append").parquet(outDir)
+      val merged = state match {
+        case Some(st) => st.unionByName(fresh.select(keyCols.map(col): _*))
+        case None => fresh.select(keyCols.map(col): _*)
       }
-      .start()
-    awaitDrained(q)
-  }
+      val n = OpCache.persist(Lineage.cut(merged))
+      n.count() // materialize before its inputs are released
+      Some(n)
+    }
 
   /** Streaming INDEX-HEALTH canary — qs40's datasheet maintained over
     * a live ingest ([[graft.operators.Similarity.ivfInsert]]'s shape
@@ -690,12 +618,11 @@ object EventStreams {
     * wasting probe budget) trips an alert within one batch, the
     * moment [[graft.operators.Similarity.splitHotCells]] (qs42) or a
     * retrain (qs41) becomes worth running. State = the grown cell
-    * table as lazy unions of persisted per-batch deltas (the
-    * componentMaintenance discipline — nothing corpus-sized copied
+    * table as lazy unions of persisted per-batch deltas (as
+    * [[componentMaintenance]]'s index — nothing corpus-sized copied
     * per batch), LINEAGE-CUT every `cutEvery` batches: between cuts
     * only the batch delta materializes, and at a cut boundary the
-    * union collapses to one cached LogicalRDD and the superseded
-    * children are released — so a LIFETIME canary's per-batch
+    * union collapses to one cached LogicalRDD — so a LIFETIME canary's per-batch
     * `ivfIndexStats` re-analysis stays bounded by `cutEvery` instead
     * of growing one Union node per batch, at an amortized
     * O(corpus / cutEvery) re-materialization cost per batch. `grp`
@@ -715,57 +642,38 @@ object EventStreams {
       cutEvery: Int = 8,
       queryName: String = "graft_index_health",
       probe: graft.operators.Similarity.IvfIndex => Unit = _ => ()): Unit = {
-    val spark = vecs.sparkSession
-    var cur = index0
+    // (cells as of the last cut, deltas appended since)
+    type S = (DataFrame, Vector[DataFrame])
+    def cells(s: S): DataFrame = s._2.foldLeft(s._1)(_ unionByName _)
     val noCells = index0.cells.limit(0)
-    // union children this feed persisted since the last cut (never the
-    // caller's index0 frames)
-    val children = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    var sinceCut = 0
-    val q = vecs.writeStream
-      .queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val b = batch.toDF()
-        // assign ONLY the batch against the frozen centroids (ivfInsert
-        // over an empty cell table yields exactly the batch's delta);
-        // persist + materialize the delta, keep the union lazy over
-        // cached children (the componentMaintenance rule)
-        val delta = graft.core.OpCache.persist(
-          graft.operators.Similarity.ivfInsert(
-            graft.operators.Similarity.IvfIndex(cur.centroids, noCells),
-            b.select(col(idCol), col(vecCol)), idCol, vecCol).cells)
-        delta.count()
-        children += delta
-        cur = graft.operators.Similarity.IvfIndex(
-          cur.centroids, cur.cells.unionByName(delta))
-        sinceCut += 1
-        if (sinceCut >= cutEvery) {
-          val cells = cur.cells
-          val cut = graft.core.OpCache.persist(
-            graft.core.Lineage.cut(cells))
-          cut.count() // materialize before releasing the children it reads
-          children.foreach { f =>
-            f.unpersist(false); graft.core.OpCache.untrack(f)
-          }
-          children.clear()
-          children += cut
-          cur = graft.operators.Similarity.IvfIndex(cur.centroids, cut)
-          sinceCut = 0
+    drain(vecs, queryName, (index0.cells, Vector.empty[DataFrame]),
+        (s: S) => s._1 +: s._2) { case (b, (base, children)) =>
+      // assign ONLY the batch against the frozen centroids (ivfInsert
+      // over an empty cell table yields exactly the batch's delta)
+      val delta = OpCache.persist(
+        graft.operators.Similarity.ivfInsert(
+          graft.operators.Similarity.IvfIndex(index0.centroids, noCells),
+          b.select(col(idCol), col(vecCol)), idCol, vecCol).cells)
+      delta.count()
+      val appended: S = (base, children :+ delta)
+      val next: S =
+        if (appended._2.size < cutEvery) appended
+        else {
+          val cut = OpCache.persist(Lineage.cut(cells(appended)))
+          cut.count() // materialize before the children it reads are released
+          (cut, Vector.empty)
         }
-        val g = b.agg(min(grp).as("grp"))
-        graft.operators.Similarity.ivfIndexStats(cur)
-          .crossJoin(broadcast(g))
-          .select(col("grp"), col("n_cells"), col("n_vectors"),
-            col("min_cell"), col("max_cell"), col("empty_cells"),
-            col("mean_cell"), col("skew"))
-          .write.mode("append").parquet(outDir)
-        probe(cur)
-        ()
-      }
-      .start()
-    awaitDrained(q)
+      val cur = graft.operators.Similarity.IvfIndex(index0.centroids, cells(next))
+      val g = b.agg(min(grp).as("grp"))
+      graft.operators.Similarity.ivfIndexStats(cur)
+        .crossJoin(broadcast(g))
+        .select(col("grp"), col("n_cells"), col("n_vectors"),
+          col("min_cell"), col("max_cell"), col("empty_cells"),
+          col("mean_cell"), col("skew"))
+        .write.mode("append").parquet(outDir)
+      probe(cur)
+      next
+    }
   }
 
   /** Streaming PROFILE MAINTENANCE —
@@ -786,28 +694,17 @@ object EventStreams {
       cols: Seq[String],
       distinctKey: String => org.apache.spark.sql.Column,
       outDir: String,
-      queryName: String = "graft_profile_maint"): Unit = {
-    val spark = stream.sparkSession
-    var state: Option[DataFrame] = None
-    val q = stream.writeStream
-      .queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val bp = graft.warehouse.Profile.mergeableProfile(
-          batch.toDF(), cols, distinctKey)
-        val merged = state match {
-          case None => bp
-          case Some(st) => graft.warehouse.Profile.mergeProfiles(st, bp)
-        }
-        state = Some(graft.core.OpCache.persist(
-          graft.core.Lineage.cut(merged)))
-        ()
-      }
-      .start()
-    awaitDrained(q)
-    state.foreach(_.write.mode("overwrite").parquet(outDir))
-  }
+      queryName: String = "graft_profile_maint"): Unit =
+    drain(stream, queryName, Option.empty[DataFrame],
+        reads = (s: Option[DataFrame]) => s.toSeq,
+        finish = (s: Option[DataFrame]) => {
+          s.foreach(_.write.mode("overwrite").parquet(outDir))
+          Nil
+        }) { (batch, state) =>
+      val bp = graft.warehouse.Profile.mergeableProfile(batch, cols, distinctKey)
+      Some(OpCache.persist(Lineage.cut(
+        state.fold(bp)(graft.warehouse.Profile.mergeProfiles(_, bp)))))
+    }
 
   /** Streaming profile-drift monitor —
     * [[graft.warehouse.Profile.profileDrift]] run per micro-batch
@@ -830,24 +727,15 @@ object EventStreams {
       stream: DataFrame,
       baselineProfile: DataFrame,
       outDir: String,
-      queryName: String = "graft_profile_drift"): Unit = {
-    var batchNo = 0L
-    val q = stream.writeStream
-      .queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.warehouse.Profile
-          .driftJoin(baselineProfile,
-            graft.warehouse.Profile.profile(batch.toDF()))
-          .withColumn("batch_no", lit(batchNo))
-          .write.mode("append").parquet(outDir)
-        batchNo += 1
-        ()
-      }
-      .start()
-    awaitDrained(q)
-  }
+      queryName: String = "graft_profile_drift"): Unit =
+    drain(stream, queryName, 0L) { (batch, batchNo) =>
+      graft.warehouse.Profile
+        .driftJoin(baselineProfile,
+          graft.warehouse.Profile.profile(batch))
+        .withColumn("batch_no", lit(batchNo))
+        .write.mode("append").parquet(outDir)
+      batchNo + 1
+    }
 
   /** Streaming subject-erasure feed — [[graft.warehouse.Erasure]] run
     * as a live compliance pipeline: deletion REQUESTS arrive as a
@@ -860,26 +748,17 @@ object EventStreams {
     * at-least-once re-delivery re-emits IDENTICAL manifest rows — the
     * manifest is keyed content, so the consumer's distinct (or an
     * idempotent delete executor, which deleting twice trivially is)
-    * absorbs duplicates. Blocks until the stream drains
-    * (AvailableNow); read `outDir` for the manifest. */
+    * absorbs duplicates. Read `outDir` for the manifest. */
   def erasureFeed(
       subjects: DataFrame,
       customer: DataFrame, orders: DataFrame, lineitem: DataFrame,
       outDir: String,
-      queryName: String = "graft_erasure_feed"): Unit = {
-    val q = subjects.writeStream
-      .queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.warehouse.Erasure.erasurePlan(
-          customer, orders, lineitem, batch.toDF())
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
-    awaitDrained(q)
-  }
+      queryName: String = "graft_erasure_feed"): Unit =
+    drain(subjects, queryName, ()) { (batch, _) =>
+      graft.warehouse.Erasure.erasurePlan(
+        customer, orders, lineitem, batch)
+        .write.mode("append").parquet(outDir)
+    }
 
   /** Streaming CDC snapshot — [[graft.warehouse.Cdc.applyChanges]] as
     * a continuously-maintained materialized view: per key, keep the
@@ -1064,41 +943,33 @@ object EventStreams {
       outDir: String,
       queryName: String = "graft_embedding_drift"): Unit = {
     import graft.expr.Exprs.exactSum
-    val q = vecs.writeStream
-      .queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val b = batch.toDF()
-        val cq = b
-          .select(col(idCol).as("vec_id"),
-            posexplode(col(vecCol)).as(Seq("dim", "xf")))
-          .select(col("vec_id"), col("dim"),
-            col("xf").cast("double").as("x"))
-          .join(broadcast(axis), Seq("dim"))
-          .groupBy(col("vec_id"))
-          .agg(exactSum(col("x") * col("v")).as("xv"))
-          .crossJoin(broadcast(muv))
-          .select((col("xv") - col("muv"))
-            .cast(org.apache.spark.sql.types.DecimalType(30, 6))
-            .as("cq"))
-        val stats = cq.agg(
-          count(lit(1)).cast("long").as("n"),
-          sum(col("cq")).cast("double").as("sx"),
-          exactSum(col("cq").cast("double") * col("cq").cast("double"))
-            .as("sxx"))
-          .select(col("n"),
-            round(col("sx") / col("n"), 6).as("mean_proj"),
-            round((col("sxx") - col("sx") * col("sx") / col("n"))
-              / col("n"), 6).as("var_proj"))
-        val g = b.agg(min(grp).as("grp"))
-        stats.crossJoin(broadcast(g))
-          .select(col("grp"), col("n"), col("mean_proj"), col("var_proj"))
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
-    awaitDrained(q)
+    drain(vecs, queryName, ()) { (b, _) =>
+      val cq = b
+        .select(col(idCol).as("vec_id"),
+          posexplode(col(vecCol)).as(Seq("dim", "xf")))
+        .select(col("vec_id"), col("dim"),
+          col("xf").cast("double").as("x"))
+        .join(broadcast(axis), Seq("dim"))
+        .groupBy(col("vec_id"))
+        .agg(exactSum(col("x") * col("v")).as("xv"))
+        .crossJoin(broadcast(muv))
+        .select((col("xv") - col("muv"))
+          .cast(org.apache.spark.sql.types.DecimalType(30, 6))
+          .as("cq"))
+      val stats = cq.agg(
+        count(lit(1)).cast("long").as("n"),
+        sum(col("cq")).cast("double").as("sx"),
+        exactSum(col("cq").cast("double") * col("cq").cast("double"))
+          .as("sxx"))
+        .select(col("n"),
+          round(col("sx") / col("n"), 6).as("mean_proj"),
+          round((col("sxx") - col("sx") * col("sx") / col("n"))
+            / col("n"), 6).as("var_proj"))
+      val g = b.agg(min(grp).as("grp"))
+      stats.crossJoin(broadcast(g))
+        .select(col("grp"), col("n"), col("mean_proj"), col("var_proj"))
+        .write.mode("append").parquet(outDir)
+    }
   }
 
   /** Streaming BUDGET GATE — the per-source token allocation
@@ -1128,70 +999,42 @@ object EventStreams {
       alloc: DataFrame,
       outDir: String,
       queryName: String = "graft_budget_gate"): Unit = {
-    val spark = docs.sparkSession
-    val a = graft.core.OpCache.persist(
-      alloc.select(col("source").as("grp"), col("alloc_tokens")))
-    var state: Option[DataFrame] = None
-    val q = docs.writeStream
-      .queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        // Release every frame this batch persisted except the new
-        // state (the superseded state, the verdicts, and
-        // groupedTokenPrefix's keyed table) — the prev-release
-        // discipline of componentMaintenance, applied scope-wide: a
-        // LIFETIME stream must not accumulate one cached frame per
-        // micro-batch. collectScoped records exactly this batch's
-        // persists, so a concurrent query's cache is never touched.
-        val (next, made) = graft.core.OpCache.collectScoped {
-          val pre = graft.operators.Sharding.groupedTokenPrefix(
-            batch.toDF(), sourceCol, idCol, tokensCol)
-          val withC = state match {
-            case Some(cs) => pre.join(broadcast(cs), Seq("grp"), "left")
-              .withColumn("consumed", coalesce(col("consumed"), lit(0L)))
-            case None => pre.withColumn("consumed", lit(0L))
-          }
-          val verdicts = graft.core.OpCache.persist(
-            withC.join(broadcast(a), Seq("grp"), "left")
-              .withColumn("admitted",
-                col("alloc_tokens").isNotNull &&
-                  col("before") + col("tokens") <=
-                    col("alloc_tokens") - col("consumed"))
-              .select(col("doc_id"), col("grp").as("source"),
-                col("tokens"), col("admitted")))
-          verdicts.write.mode("append").parquet(outDir)
-          val delta = verdicts.filter(col("admitted"))
-            .groupBy(col("source"))
-            .agg(sum(col("tokens")).as("d"))
-            .select(col("source").as("grp"), col("d"))
-          val merged = state match {
-            case Some(cs) => cs.join(delta, Seq("grp"), "full_outer")
-              .select(col("grp"),
-                (coalesce(col("consumed"), lit(0L)) +
-                  coalesce(col("d"), lit(0L))).as("consumed"))
-            case None => delta.select(col("grp"), col("d").as("consumed"))
-          }
-          // cut: an un-cut state would re-analyze the whole merge
-          // history every batch (the qt33 model discipline)
-          val n = graft.core.OpCache.persist(
-            graft.core.Lineage.cut(merged))
-          n.count() // materialize before releasing the frames it reads
-          n
-        }
-        made.filter(_ ne next).foreach { f =>
-          f.unpersist(false); graft.core.OpCache.untrack(f)
-        }
-        state.foreach { prev =>
-          prev.unpersist(false); graft.core.OpCache.untrack(prev)
-        }
-        state = Some(next)
-        ()
+    val a = alloc.select(col("source").as("grp"), col("alloc_tokens"))
+    drain(docs, queryName, Option.empty[DataFrame],
+        (s: Option[DataFrame]) => s.toSeq) { (batch, state) =>
+      val pre = graft.operators.Sharding.groupedTokenPrefix(
+        batch, sourceCol, idCol, tokensCol)
+      val withC = state match {
+        case Some(cs) => pre.join(broadcast(cs), Seq("grp"), "left")
+          .withColumn("consumed", coalesce(col("consumed"), lit(0L)))
+        case None => pre.withColumn("consumed", lit(0L))
       }
-      .start()
-    awaitDrained(q)
-    a.unpersist(false)
-    graft.core.OpCache.untrack(a)
+      val verdicts = OpCache.persist(
+        withC.join(broadcast(a), Seq("grp"), "left")
+          .withColumn("admitted",
+            col("alloc_tokens").isNotNull &&
+              col("before") + col("tokens") <=
+                col("alloc_tokens") - col("consumed"))
+          .select(col("doc_id"), col("grp").as("source"),
+            col("tokens"), col("admitted")))
+      verdicts.write.mode("append").parquet(outDir)
+      val delta = verdicts.filter(col("admitted"))
+        .groupBy(col("source"))
+        .agg(sum(col("tokens")).as("d"))
+        .select(col("source").as("grp"), col("d"))
+      val merged = state match {
+        case Some(cs) => cs.join(delta, Seq("grp"), "full_outer")
+          .select(col("grp"),
+            (coalesce(col("consumed"), lit(0L)) +
+              coalesce(col("d"), lit(0L))).as("consumed"))
+        case None => delta.select(col("grp"), col("d").as("consumed"))
+      }
+      // cut: an un-cut state would re-analyze the whole merge
+      // history every batch (the qt33 model discipline)
+      val n = OpCache.persist(Lineage.cut(merged))
+      n.count() // materialize before the frames it reads are released
+      Some(n)
+    }
   }
 
   /** Streaming SCORER-HEALTH canary — [[graft.operators.Eval.aucReport]]
@@ -1214,22 +1057,14 @@ object EventStreams {
       label: org.apache.spark.sql.Column,
       grp: org.apache.spark.sql.Column,
       outDir: String,
-      queryName: String = "graft_scorer_auc"): Unit = {
-    val q = docs.writeStream
-      .queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val scored = batch.toDF()
-          .select(score.as("score"), label.as("label"), grp.as("grp"))
-        val rep = graft.operators.Eval.aucReport(scored, "label", "score")
-        val g = scored.agg(min(col("grp")).as("grp"))
-        rep.crossJoin(broadcast(g))
-          .select(col("grp"), col("n_pos"), col("n_neg"), col("auc"))
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
-    awaitDrained(q)
-  }
+      queryName: String = "graft_scorer_auc"): Unit =
+    drain(docs, queryName, ()) { (batch, _) =>
+      val scored = batch
+        .select(score.as("score"), label.as("label"), grp.as("grp"))
+      val rep = graft.operators.Eval.aucReport(scored, "label", "score")
+      val g = scored.agg(min(col("grp")).as("grp"))
+      rep.crossJoin(broadcast(g))
+        .select(col("grp"), col("n_pos"), col("n_neg"), col("auc"))
+        .write.mode("append").parquet(outDir)
+    }
 }

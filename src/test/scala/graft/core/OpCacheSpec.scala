@@ -96,6 +96,22 @@ class OpCacheSpec extends SparkSuite {
     OpCache.releaseAll(blocking = true)
   }
 
+  test("a frame whose plan another owner cached is neither tracked nor released") {
+    import spark.implicits._
+    OpCache.releaseAll(blocking = true)
+    val base = Seq(("a", 1L), ("b", 2L)).toDF("k", "v")
+    val owner = base.filter(col("v") > 0).persist()
+    owner.count()
+    val before = OpCache.liveCount
+    val (_, made) = OpCache.collectScoped(OpCache.persist(base.filter(col("v") > 0)))
+    assert(made.isEmpty && OpCache.liveCount == before,
+      "a persist Spark serves from another owner's entry must not be tracked")
+    OpCache.releaseAll(blocking = true)
+    assert(owner.storageLevel != StorageLevel.NONE,
+      "releaseAll dropped a cache the operator did not make")
+    owner.unpersist(true)
+  }
+
   test("StorageLevel.NONE disables operator caching entirely") {
     OpCache.releaseAll(blocking = true)
     val before = sc.getPersistentRDDs.size

@@ -185,21 +185,10 @@ class EventStreamsSpec extends SparkSuite {
     val idx = graft.operators.Similarity.buildIvfIndex(
       em.filter(pmod(col("vec_id"), lit(4)) === 0),
       "vec_id", "embedding", centroidStride = 8)
-    val in = java.nio.file.Files.createTempDirectory("graft_ihspec_in")
     val rest = (0 until 40).filter(_ % 4 != 0)
-    rest.grouped(6).zipWithIndex.foreach { case (ids, k) =>
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_ihspec_w").toString
-      em.filter(col("vec_id").isin(ids.map(_.toLong): _*))
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.startsWith("part-") &&
-          f.getName.endsWith(".parquet")).get
-      java.nio.file.Files.copy(part.toPath, in.resolve(s"b$k.parquet"))
-    }
-    val stream = spark.readStream.schema(em.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(in.toString + "/*.parquet")
+    val stream = graft.queries.StreamingQueries.stagedStream(spark,
+      rest.grouped(6).map(ids => em.filter(col("vec_id").isin(ids.map(_.toLong): _*)))
+        .toSeq: _*)
     val out = java.nio.file.Files
       .createTempDirectory("graft_ihspec_out").toString
     def unions(df: org.apache.spark.sql.DataFrame): Int =
