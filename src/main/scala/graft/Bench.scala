@@ -106,8 +106,10 @@ object Bench {
     // capture (r8 kept only 68/241 per-query timings) — ALSO write the
     // full map to a file this process controls, named for the upcoming
     // round (max existing BENCH_r{N}.json + 1) so round-over-round
-    // regressions are diffable without a judge re-run.
-    try {
+    // regressions are diffable without a judge re-run. Only a
+    // full-registry run writes it: a subset run would overwrite the
+    // round's full map with a few queries.
+    if (args.isEmpty) try {
       // Tag: SPARK_GRAFT_BENCH_TAG when set (e.g. "r11" — explicit runs
       // name themselves), else max round in the DRIVER's BENCH_r{N}.json
       // family + 1. The fallback deliberately ignores our own

@@ -132,7 +132,7 @@ final class Iterate private (name: String, caller: SparkSession, session: SparkS
       }
     }
     if ((until ne null) && !done) {
-      settled.foreach { f => OpCache.untrack(f); f.unpersist(false) }
+      settled.foreach(OpCache.release(_))
       throw new IllegalStateException(Option(diverged)
         .getOrElse(s"$name did not converge within $maxRounds rounds"))
     }

@@ -2,6 +2,7 @@ package graft.core
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.graft.FastCut
 import org.apache.spark.storage.StorageLevel
@@ -55,6 +56,26 @@ object OpCache {
       df
     }
 
+  // checkpointed frame -> the RDD holding its checkpoint's rows
+  private val checkpoints = new java.util.concurrent.ConcurrentHashMap[DataFrame, RDD[_]]()
+
+  /** `df` computed now and held with no lineage — the state a
+    * long-running loop carries from one step into the next, which must
+    * not keep every earlier step's plan (and the broadcast relations
+    * its RDDs reference) reachable, as a [[Lineage.cut]] frame does.
+    * An eager local checkpoint stores the rows on disk; the frame over
+    * it is [[persist]]ed and tracked like any, so reads are served from
+    * the cache, and [[release]] frees the checkpoint with the cache.
+    * Under `StorageLevel.NONE` this is `Lineage.cut`: nothing runs and
+    * nothing is stored. */
+  def checkpoint(df: DataFrame): DataFrame =
+    if (level == StorageLevel.NONE) Lineage.cut(df)
+    else {
+      val (s, rows) = FastCut.localCheckpoint(df, StorageLevel.DISK_ONLY)
+      checkpoints.put(s, rows)
+      persist(s)
+    }
+
   /** Track an already-persisted frame (iterative algorithms persist
     * their final state directly — lineage truncation needs the
     * materialized RDD regardless of the cache policy). */
@@ -76,7 +97,7 @@ object OpCache {
   // a frame it superseded waiting on an unpersisted cache
   private def sweep(): Unit =
     supersededBy.asScala.filter(e => FastCut.materialized(e._2)).keys
-      .foreach { stale => untrack(stale); stale.unpersist(false) }
+      .foreach(release(_))
 
   private val scope = new ThreadLocal[java.util.ArrayList[DataFrame]]()
 
@@ -117,17 +138,22 @@ object OpCache {
     * callers that released it themselves (index-scoped unpersist). */
   def untrack(df: DataFrame): Unit = { live.remove(df); supersededBy.remove(df); () }
 
-  /** Unpersist every tracked frame; returns how many were released. */
+  /** Unpersist `df` — and its checkpoint, when [[checkpoint]] made it —
+    * and stop tracking it. */
+  def release(df: DataFrame, blocking: Boolean = false): Unit = {
+    untrack(df)
+    df.unpersist(blocking)
+    Option(checkpoints.remove(df)).foreach(_.unpersist(blocking))
+  }
+
+  /** Unpersist every tracked frame, and every checkpoint; returns how
+    * many frames were released. */
   def releaseAll(blocking: Boolean = false): Int = {
     supersededBy.clear()
-    var n = 0
-    val it = live.iterator()
-    while (it.hasNext) {
-      it.next().unpersist(blocking)
-      it.remove()
-      n += 1
-    }
-    n
+    val all = live.asScala.toList
+    all.foreach(release(_, blocking))
+    checkpoints.asScala.keys.foreach(release(_, blocking))
+    all.size
   }
 
   def liveCount: Int = { sweep(); live.size }

@@ -935,7 +935,7 @@ object Dedup {
       newEdges: DataFrame,
       newNodes: DataFrame): DataFrame = {
     // The stored label table is corpus-sized and the stream caller
-    // already persists it between batches (componentMaintenance's cut
+    // already persists it between batches (componentMaintenance's
     // labels, qd27's bootstrap) — re-persisting a cast-wrapper here
     // materialized a SECOND corpus-sized cache copy per ingest batch,
     // O(corpus) work the incremental contract exists to avoid. Reuse

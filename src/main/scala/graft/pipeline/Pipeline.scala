@@ -38,9 +38,10 @@ trait Transformer {
 /** R→T→L pipeline (reference `_pipeline.py`).
   *
   * transform order (reference `_base.py:191-218` + `_pipeline.py:98-106`):
-  * source transform → assign provider → M49 semi-filter (broadcast
-  * membership against the packaged country table) → validation
-  * (§2.12) → global year window.
+  * source transform → assign provider → M49 membership filter (a
+  * predicate over the packaged ISO3 set, which the optimizer plans as
+  * a hash-set `InSet` inside the generated code: no join, no broadcast
+  * job, no hash relation) → validation (§2.12) → global year window.
   */
 final case class Pipeline(
     provider: String,
@@ -54,9 +55,9 @@ final case class Pipeline(
   def transform(spark: SparkSession, raw: DataFrame): DataFrame = {
     val shaped = transformer.transform(raw)
       .withColumn("provider", lit(provider))
-    val member = shaped.join(
-      broadcast(Countries.dataFrame(spark).select(col("iso3").as("country_code"))),
-      Seq("country_code"), "left_semi")
+    // null and non-member codes drop, and no row is duplicated: the
+    // semantics of a semi-join against the country table
+    val member = shaped.filter(col("country_code").isin(Countries.iso3Set.toSeq.sorted: _*))
     val validated = Validation.validate(member, Validation.dataSchema)
     validated.filter(col("year").between(settings.yearMin, settings.yearMax))
   }

@@ -83,9 +83,10 @@ object RelationalQueries {
 
     Q(
       "q04_semi_join",
-      "J3/P3 membership filter as a broadcast left-semi join " +
-        "(`_base.py:215-217` M49 filter): no row duplication, no shuffle " +
-        "of the big side.",
+      "J3 membership filter against a computed dimension subset as a " +
+        "broadcast left-semi join: no row duplication, no shuffle of the " +
+        "big side. (The pipeline's M49 filter, `_base.py:215-217`, checks " +
+        "a fixed code list and runs as an `isin` set predicate instead.)",
       (s, dir) => {
         val nations = t(s, dir, "nation")
           .filter(col("n_name").isin("NATION_1", "NATION_7", "NATION_19"))

@@ -74,7 +74,7 @@ object EventStreams {
     var owned = Seq.empty[DataFrame]
     def release(keep: Seq[DataFrame]): Unit = {
       val (kept, gone) = owned.partition(f => keep.exists(_ eq f))
-      gone.foreach { f => f.unpersist(false); OpCache.untrack(f) }
+      gone.foreach(OpCache.release(_))
       owned = kept
     }
     var kept: Seq[DataFrame] = Nil
@@ -169,11 +169,13 @@ object EventStreams {
     drain(docs, queryName, (Vector.empty[CorpusIndex], Nil): S,
         (s: S) => indexFrames(s._1) ++ s._2) { case (batch, (deltas, _)) =>
       val b = OpCache.persist(batch)
-      // cut: the delta reads `admitted`, whose plan holds every earlier
-      // delta, so un-cut the index plan would grow geometrically per batch
-      val admitted = OpCache.persist(Lineage.cut(
+      // checkpointed: the delta reads `admitted`, whose plan holds every
+      // earlier delta, so un-cut the index plan would grow geometrically
+      // per batch, and a cut's RDD would keep every earlier batch's plan
+      // and broadcast relations reachable through the deltas
+      val admitted = OpCache.checkpoint(
         graft.operators.Dedup.incrementalDedupWithIndex(
-          grown(index, deltas), b, idCol, textCol)))
+          grown(index, deltas), b, idCol, textCol))
       admitted.write.mode("append").parquet(outDir)
       val d = graft.operators.Dedup.buildCorpusIndex(
         b.join(admitted.select(col("keep_id").as(idCol)), Seq(idCol), "left_semi"),
@@ -204,9 +206,10 @@ object EventStreams {
     * at-least-once re-delivery — the registry query feeds the batch
     * twice and still must equal the single-shot full closure.
     *
-    * Returns the final label frame (node, component). Per-batch label
-    * lineage is cut (Lineage.cut) so a long-running stream's plan
-    * stays O(1) deep — the same discipline as the CC rounds. */
+    * Returns the final label frame (node, component). Each batch's
+    * labels are checkpointed ([[graft.core.OpCache.checkpoint]]), so a
+    * long-running stream's plan stays O(1) deep and its state holds no
+    * earlier batch's lineage. */
   def componentMaintenance(
       docs: DataFrame,
       index: CorpusIndex,
@@ -224,19 +227,23 @@ object EventStreams {
         grown(index, deltas), b, idCol, textCol)
       val next = graft.operators.Dedup.incrementalComponents(
         labels, edges, b.select(col(idCol).as("node")))
-      val cut = Jobs.described(spark, "scc: labels cut") {
-        OpCache.persist(Lineage.cut(next))
+      // checkpointed, not cut: a cut's RDD would keep this batch's plan,
+      // and through the labels it read every earlier batch's, reachable
+      // with their broadcast relations for as long as the stream runs
+      val newLabels = Jobs.described(spark, "scc: labels checkpoint") {
+        OpCache.checkpoint(next)
       }
       val ix = graft.operators.Dedup.buildCorpusIndex(b, idCol, textCol)
       val delta = CorpusIndex(OpCache.persist(ix.hashes),
         OpCache.persist(ix.shingles), OpCache.persist(ix.bands))
-      // one action fills the labels and the delta: a union of per-frame
-      // probe projections scans every cached partition in one wide stage
+      // one action fills the labels' cache and the delta: a union of
+      // per-frame probe projections scans every cached partition in one
+      // wide stage
       Jobs.described(spark, "scc: materialize") {
-        (cut +: indexFrames(Seq(delta))).map(_.select(lit(1L).as("one")))
+        (newLabels +: indexFrames(Seq(delta))).map(_.select(lit(1L).as("one")))
           .reduce(_ union _).count()
       }
-      (cut, deltas :+ delta)
+      (newLabels, deltas :+ delta)
     }._1
   }
 

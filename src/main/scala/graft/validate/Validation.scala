@@ -17,10 +17,11 @@ import graft.expr.Exprs
   *  5. field checks (non-null, regex, ranges, lengths)
   *  6. composite-key uniqueness
   *
-  * Execution: ONE aggregate pass computes every field-check violation
-  * count (`sum(when(violation,1))` per rule) + one aggregate for
-  * uniqueness — two Spark jobs regardless of rule count, no
-  * row-at-a-time work.
+  * Execution: ONE action regardless of rule count, no row-at-a-time
+  * work. The frame is grouped by the composite key once; each group
+  * carries its size and its violation count per rule
+  * (`sum(when(violation,1))`), and a global aggregate over the groups
+  * returns every rule's total and the number of groups with n > 1.
   */
 object Validation {
 
@@ -109,21 +110,20 @@ object Validation {
         }
         nn ++ fieldChecks
       }
-    val counts = aligned.agg(
-      count(lit(1)).as("__n"),
-      checks.map(c => sum(when(c.violation, 1L).otherwise(0L)).as(c.name)): _*)
-      .collect()(0)
-    val failures = checks.map(c => c.name -> counts.getAs[Long](c.name))
+    val key = schema.uniqueKey
+    val dupRule = s"unique_${key.mkString("_")}"
+    def sums(term: Check => Column): Seq[Column] =
+      checks.map(c => sum(term(c)).as(c.name))
+    val flagged: Check => Column = c => when(c.violation, 1L).otherwise(0L)
+    val counts = (
+      if (key.isEmpty) aligned.agg(lit(0L).as(dupRule), sums(flagged): _*)
+      else aligned.groupBy(key.map(col): _*)
+        .agg(count(lit(1)).as("__n"), sums(flagged): _*)
+        .agg(sum(when(col("__n") > 1, 1L).otherwise(0L)).as(dupRule),
+          sums(c => col(c.name)): _*)
+    ).collect()(0)
+    val all = (checks.map(_.name) :+ dupRule).map(n => n -> counts.getAs[Long](n))
       .filter(_._2 > 0)
-    val dupFailures =
-      if (schema.uniqueKey.nonEmpty) {
-        val dups = aligned.groupBy(schema.uniqueKey.map(col): _*)
-          .agg(count(lit(1)).as("n")).filter(col("n") > 1).count()
-        if (dups > 0)
-          Seq(s"unique_${schema.uniqueKey.mkString("_")}" -> dups)
-        else Nil
-      } else Nil
-    val all = failures ++ dupFailures
     if (all.nonEmpty) throw ValidationError(all)
     aligned
   }

@@ -1,10 +1,12 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => ClassicSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.storage.StorageLevel
 
 /** Lineage truncation without the external-row round trip.
   *
@@ -59,6 +61,17 @@ object FastCut {
     val leaf = LogicalRDD.fromDataset(rdd, ds, isStreaming = false)
     ClassicDataset.ofRows(spark, LogicalRDD(leaf.output, rdd)(
       spark, Some(leaf.computeStats()), Some(leaf.constraints)))
+  }
+
+  /** An eager local checkpoint of `df` (`Dataset.localCheckpoint`): its
+    * rows computed now and stored at `level`, under a leaf whose RDD
+    * has no lineage, so nothing of `df`'s plan — its broadcast
+    * relations included — stays reachable through the result. A
+    * [[cut]] leaf's RDD keeps all of it. Returns the frame and the RDD
+    * holding the rows, whose `unpersist` frees them. */
+  def localCheckpoint(df: DataFrame, level: StorageLevel): (DataFrame, RDD[_]) = {
+    val s = classic(df).localCheckpoint(eager = true, storageLevel = level)
+    (s, s.logicalPlan.collectFirst { case l: LogicalRDD => l.rdd }.get)
   }
 
   /** A private clone of `spark` with adaptive execution off (`spark`

@@ -32,6 +32,31 @@ class OpCacheSpec extends SparkSuite {
       "release must return the cache to its pre-operator state")
   }
 
+  test("checkpoint holds no lineage; release frees its cache and its rows") {
+    OpCache.releaseAll(blocking = true)
+    val before = sc.getPersistentRDDs.size
+    val df = spark.range(200).groupBy((col("id") % 7).as("k")).agg(count(lit(1)).as("n"))
+    val c = OpCache.checkpoint(df)
+    assert(c.storageLevel != StorageLevel.NONE && OpCache.liveCount == 1)
+    assert(rowsOf(c) == rowsOf(df))
+    // the first action wrote the checkpoint: the leaf's lineage ends there
+    val leaf = c.queryExecution.analyzed match {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+      case other => fail(s"not a leaf:\n${other.treeString}")
+    }
+    assert(leaf.isCheckpointed && leaf.dependencies.forall(_.rdd.dependencies.isEmpty))
+    assert(sc.getPersistentRDDs.size == before + 2, "the cache and the checkpoint's rows")
+    OpCache.release(c, blocking = true)
+    assert(OpCache.liveCount == 0 && sc.getPersistentRDDs.size == before)
+    // under NONE: a lazy cut, nothing stored
+    OpCache.setStorageLevel(StorageLevel.NONE)
+    try {
+      val cut = OpCache.checkpoint(df)
+      assert(cut.storageLevel == StorageLevel.NONE && OpCache.liveCount == 0)
+      assert(rowsOf(cut) == rowsOf(df) && sc.getPersistentRDDs.size == before)
+    } finally OpCache.setStorageLevel(StorageLevel.MEMORY_AND_DISK)
+  }
+
   test("iterative CC tracks its final persisted state for release") {
     import spark.implicits._
     OpCache.releaseAll(blocking = true)

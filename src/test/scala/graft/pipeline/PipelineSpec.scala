@@ -38,6 +38,33 @@ class PipelineSpec extends SparkSuite {
     assert(storage.pathFor("wdi_fixture").contains(storage.version))
   }
 
+  test("membership filter keeps exactly the member rows, with no broadcast") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
+    val long = Seq[(String, String, Int, Double)](
+      ("AFG", "GDP", 2019, 1.0), ("AFG", "GDP", 2020, 2.0), ("NAM", "GDP", 2019, 3.0),
+      (null, "GDP", 2019, 4.0), ("", "GDP", 2019, 5.0), ("WLD", "GDP", 2019, 6.0))
+      .toDF("country_code", "indicator_name", "year", "value")
+    val p = Pipeline("member_fixture", FixtureRetriever(long), new Transformer {
+      def transform(df: DataFrame): DataFrame = df
+    })
+    val out = p.transform(spark, long)
+    assert(out.select("country_code", "year").as[(String, Int)].collect().sorted.toSeq ==
+      Seq(("AFG", 2019), ("AFG", 2020), ("NAM", 2019)))
+    // every plan the transform ran, the validation cache's included
+    def nodes(plan: SparkPlan): Seq[SparkPlan] = plan +: (plan match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => nodes(s.plan)
+      case m: InMemoryTableScanExec => nodes(m.relation.cachedPlan)
+      case other => other.children.flatMap(nodes)
+    })
+    val broadcasts = nodes(out.queryExecution.executedPlan)
+      .collect { case b: BroadcastExchangeLike => b }
+    assert(broadcasts.isEmpty, out.queryExecution.executedPlan.treeString)
+  }
+
   test("registry: register/list/get + unknown name error") {
     val p = Pipeline("reg_fixture", FixtureRetriever(wideFixture),
       WideYearColumnsTransformer())

@@ -88,6 +88,35 @@ class FeedReleaseSpec extends SparkSuite {
     OpCache.releaseAll(blocking = true)
   }
 
+  test("componentMaintenance carries labels with no lineage: one frame, the single-shot closure") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    OpCache.releaseAll(blocking = true)
+    val index = persistedIndex(corpus)
+    val labels0 = OpCache.persist(
+      corpus.select(col("doc_id").as("node"), col("doc_id").as("component")))
+    val before = OpCache.liveCount
+    val labels = EventStreams.componentMaintenance(
+      slices(docs.filter(col("doc_id") >= 5), "doc_id", 4),
+      index, labels0, "doc_id", "text")
+    assert(OpCache.liveCount == before + 1)
+    // the labels are a leaf over a checkpointed RDD: nothing of the
+    // batches' plans is reachable through them
+    val leaf = labels.queryExecution.analyzed match {
+      case l: LogicalRDD => l.rdd
+      case other => fail(s"labels are not a leaf:\n${other.treeString}")
+    }
+    assert(leaf.isCheckpointed)
+    assert(leaf.dependencies.forall(_.rdd.dependencies.isEmpty))
+    val pairs = Dedup.pairsFromIndex(Dedup.buildCorpusIndex(docs, "doc_id", "text"),
+      threshold = 0.5).select(col("a_id"), col("b_id"))
+    val closure = Dedup.connectedComponents(
+      pairs.unionByName(docs.select(col("doc_id").as("a_id"), col("doc_id").as("b_id"))),
+      "a_id", "b_id")
+    assert(rowsOf(labels.select("node", "component")) ==
+      rowsOf(closure.select("node", "component")))
+    OpCache.releaseAll(blocking = true)
+  }
+
   test("chunkIngestFeed releases every frame it persisted") {
     OpCache.releaseAll(blocking = true)
     val store0 = OpCache.persist(

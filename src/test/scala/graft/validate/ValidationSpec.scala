@@ -55,6 +55,20 @@ class ValidationSpec extends SparkSuite {
     assert(e.report.exists(_._1.startsWith("unique_")))
   }
 
+  test("report: each rule's violation rows and the duplicate key groups, in rule order") {
+    val row = (c: String, y: Int) => ("p1", "GDP [X]", c, y, 1.0, null: String)
+    val df = (Seq.fill(3)(row("afg", 2019)) ++ Seq.fill(2)(row("NAM", 2020)) :+ row("AFG", 2021))
+      .toDF("provider", "indicator_name", "country_code", "year", "value", "source")
+    val e = intercept[ValidationError](Validation.validate(df, dataSchema))
+    assert(e.report == Seq("country_code_iso3" -> 3L,
+      s"unique_${graft.core.Model.observationKey.mkString("_")}" -> 2L))
+    // without a key there is no uniqueness rule
+    val keyless = dataSchema.copy(uniqueKey = Nil)
+    val e2 = intercept[ValidationError](Validation.validate(df, keyless))
+    assert(e2.report == Seq("country_code_iso3" -> 3L))
+    assert(Validation.validate(good.union(good), keyless).count() == 4)
+  }
+
   test("metadata schema: strip parser + nullable unit") {
     val df = Seq((" X1 ", "  Name one ", null: String)).toDF("code", "name", "unit")
     val out = Validation.validate(df, metadataSchema).collect()(0)
