@@ -56,7 +56,7 @@ object Bench {
     // totals round-over-round; treat single-round per-query deltas
     // under the p90 band as noise unless re-measured in isolation.
     val timed = selected.map { q =>
-      graft.core.OpCache.releaseAll() // release AND untrack operator persists
+      graft.core.OpCache.releaseAll() // release every operator persist
       spark.catalog.clearCache()      // then any remaining cached frames
       val before = metrics.snapshot()
       val t0 = System.nanoTime()

@@ -13,15 +13,10 @@ import org.apache.spark.storage.StorageLevel
   * it so the expensive narrow work (shingling, hashing) runs once —
   * correct for a single job, but a long-lived session accumulates
   * resident frames it has no handle to drop. Routing those persists
-  * here gives the session a release path:
-  *
-  *  - `OpCache.releaseAll()` after consuming results returns the
-  *    executors' storage memory without nuking caches the APPLICATION
-  *    made (unlike `spark.catalog.clearCache()`, which drops those
-  *    too);
-  *  - `OpCache.setStorageLevel(StorageLevel.NONE)` turns operator
-  *    caching off entirely (recompute semantics — results identical,
-  *    narrow stages run per consumer).
+  * here gives the session a release path: `OpCache.releaseAll()`
+  * after consuming results returns the executors' storage memory
+  * without nuking caches the APPLICATION made (unlike
+  * `spark.catalog.clearCache()`, which drops those too).
   *
   * Per-round frames of iterative algorithms are released by
   * [[Iterate]] as later rounds supersede them; only frames still
@@ -31,30 +26,20 @@ import org.apache.spark.storage.StorageLevel
   */
 object OpCache {
 
-  @volatile private var level: StorageLevel = StorageLevel.MEMORY_AND_DISK
   private val live =
     java.util.concurrent.ConcurrentHashMap.newKeySet[DataFrame]()
 
-  def storageLevel: StorageLevel = level
-
-  /** `StorageLevel.NONE` disables operator-side caching. */
-  def setStorageLevel(l: StorageLevel): Unit = level = l
-
-  /** Persist `df` under the session policy and track it for release.
-    * Under `StorageLevel.NONE` this is the identity — callers must not
-    * rely on materialization side effects. A frame whose plan is already
-    * cached is left alone and not tracked: Spark serves it from the
-    * existing entry, and releasing it would drop that entry's owner's
-    * cache. */
-  def persist(df: DataFrame): DataFrame =
-    if (level == StorageLevel.NONE) df
-    else {
-      sweep()
-      if (df.storageLevel == StorageLevel.NONE) {
-        df.persist(level); live.add(df); noteScoped(df)
-      }
-      df
+  /** Persist `df` (`MEMORY_AND_DISK`) and track it for release. A frame
+    * whose plan is already cached is left alone and not tracked: Spark
+    * serves it from the existing entry, and releasing it would drop
+    * that entry's owner's cache. */
+  def persist(df: DataFrame): DataFrame = {
+    sweep()
+    if (df.storageLevel == StorageLevel.NONE) {
+      df.persist(StorageLevel.MEMORY_AND_DISK); live.add(df); noteScoped(df)
     }
+    df
+  }
 
   // checkpointed frame -> the RDD holding its checkpoint's rows
   private val checkpoints = new java.util.concurrent.ConcurrentHashMap[DataFrame, RDD[_]]()
@@ -65,20 +50,15 @@ object OpCache {
     * its RDDs reference) reachable, as a [[Lineage.cut]] frame does.
     * An eager local checkpoint stores the rows on disk; the frame over
     * it is [[persist]]ed and tracked like any, so reads are served from
-    * the cache, and [[release]] frees the checkpoint with the cache.
-    * Under `StorageLevel.NONE` this is `Lineage.cut`: nothing runs and
-    * nothing is stored. */
-  def checkpoint(df: DataFrame): DataFrame =
-    if (level == StorageLevel.NONE) Lineage.cut(df)
-    else {
-      val (s, rows) = FastCut.localCheckpoint(df, StorageLevel.DISK_ONLY)
-      checkpoints.put(s, rows)
-      persist(s)
-    }
+    * the cache, and [[release]] frees the checkpoint with the cache. */
+  def checkpoint(df: DataFrame): DataFrame = {
+    val (s, rows) = FastCut.localCheckpoint(df, StorageLevel.DISK_ONLY)
+    checkpoints.put(s, rows)
+    persist(s)
+  }
 
   /** Track an already-persisted frame (iterative algorithms persist
-    * their final state directly — lineage truncation needs the
-    * materialized RDD regardless of the cache policy). */
+    * their final state directly). */
   def track(df: DataFrame): DataFrame = { sweep(); live.add(df); noteScoped(df); df }
 
   // stale frame -> the frame whose materialization frees it
@@ -117,8 +97,8 @@ object OpCache {
     * Scopes nest: an inner scope's frames also belong to the enclosing
     * scope, so an outer release still covers everything its block
     * made. The returned list may hold a frame the body already
-    * released itself — `unpersist`/`untrack` are idempotent, so
-    * releasing it again is a no-op. */
+    * released itself — [[release]] is idempotent, so releasing it
+    * again is a no-op. */
   def collectScoped[A](body: => A): (A, Seq[DataFrame]) = {
     val outer = scope.get()
     val buf = new java.util.ArrayList[DataFrame]()
@@ -134,14 +114,10 @@ object OpCache {
     }
   }
 
-  /** Drop a frame from tracking without touching its storage — for
-    * callers that released it themselves (index-scoped unpersist). */
-  def untrack(df: DataFrame): Unit = { live.remove(df); supersededBy.remove(df); () }
-
   /** Unpersist `df` — and its checkpoint, when [[checkpoint]] made it —
     * and stop tracking it. */
   def release(df: DataFrame, blocking: Boolean = false): Unit = {
-    untrack(df)
+    live.remove(df); supersededBy.remove(df)
     df.unpersist(blocking)
     Option(checkpoints.remove(df)).foreach(_.unpersist(blocking))
   }

@@ -18,10 +18,9 @@ import org.apache.spark.sql.functions._
   * (shingle sets, inverted index, signatures) through
   * [[graft.core.OpCache]] — Spark's LRU evicts under pressure, but a
   * long-lived session running many corpora should call
-  * `OpCache.releaseAll()` after consuming each result (or set
-  * `OpCache.setStorageLevel(StorageLevel.NONE)` to disable operator
-  * caching outright). [[Dedup.CorpusIndex.unpersist]] releases a
-  * specific index's artifacts.
+  * `OpCache.releaseAll()` after consuming each result.
+  * [[Dedup.CorpusIndex.unpersist]] releases a specific index's
+  * artifacts.
   */
 object Dedup {
 
@@ -643,14 +642,8 @@ object Dedup {
       bands: DataFrame) { // (doc_id, band, bkey)
     /** Release any cached artifact frames (no-op on unpersisted ones) —
       * the long-lived-service cleanup hook between corpora. */
-    def unpersist(blocking: Boolean = false): Unit = {
-      hashes.unpersist(blocking)
-      shingles.unpersist(blocking)
-      bands.unpersist(blocking)
-      graft.core.OpCache.untrack(hashes)
-      graft.core.OpCache.untrack(shingles)
-      graft.core.OpCache.untrack(bands)
-    }
+    def unpersist(blocking: Boolean = false): Unit =
+      Seq(hashes, shingles, bands).foreach(graft.core.OpCache.release(_, blocking))
   }
 
   def buildCorpusIndex(

@@ -269,12 +269,8 @@ object Similarity {
       centroids: DataFrame, // (cent_id, cemb, cnrm)
       cells: DataFrame) { // (vec_id, embedding, nrm, cent_id)
     /** Release any cached artifact frames (no-op on unpersisted ones). */
-    def unpersist(blocking: Boolean = false): Unit = {
-      centroids.unpersist(blocking)
-      cells.unpersist(blocking)
-      graft.core.OpCache.untrack(centroids)
-      graft.core.OpCache.untrack(cells)
-    }
+    def unpersist(blocking: Boolean = false): Unit =
+      Seq(centroids, cells).foreach(graft.core.OpCache.release(_, blocking))
   }
 
   def buildIvfIndex(
@@ -603,12 +599,8 @@ object Similarity {
   final case class SqIndex(
       scales: DataFrame, // (dim, scale)
       codes: DataFrame) { // (vec_id, q)
-    def unpersist(blocking: Boolean = false): Unit = {
-      scales.unpersist(blocking)
-      codes.unpersist(blocking)
-      graft.core.OpCache.untrack(scales)
-      graft.core.OpCache.untrack(codes)
-    }
+    def unpersist(blocking: Boolean = false): Unit =
+      Seq(scales, codes).foreach(graft.core.OpCache.release(_, blocking))
   }
 
   def buildSqIndex(em: DataFrame, idCol: String, vecCol: String): SqIndex = {
@@ -798,12 +790,8 @@ object Similarity {
   final case class PqIndex(
       codebooks: DataFrame, // (m, cent_id, cvec)
       codes: DataFrame) { // (vec_id, codes array<bigint>)
-    def unpersist(blocking: Boolean = false): Unit = {
-      codebooks.unpersist(blocking)
-      codes.unpersist(blocking)
-      graft.core.OpCache.untrack(codebooks)
-      graft.core.OpCache.untrack(codes)
-    }
+    def unpersist(blocking: Boolean = false): Unit =
+      Seq(codebooks, codes).foreach(graft.core.OpCache.release(_, blocking))
   }
 
   def buildPqIndex(
@@ -2037,7 +2025,7 @@ object Similarity {
   private def pcaLoop(
       em: DataFrame, idCol: String, vecCol: String,
       iters: Int): (DataFrame, DataFrame, DataFrame) = {
-    import org.apache.spark.sql.types.{Decimal, DecimalType, DoubleType, IntegerType, StructField, StructType}
+    import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType, StructField, StructType}
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val spark = em.sparkSession
     // Cached PRE-PARTITIONED by vec_id (the Logit featureTable layout

@@ -2,7 +2,7 @@ package graft.pipeline.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.pipeline.{Pipeline, Pipelines, Retriever, Settings, Transformer}
+import graft.pipeline.{Pipeline, Pipelines, Retriever, Settings}
 import graft.sources._
 import graft.storage.Storage
 import graft.transform._

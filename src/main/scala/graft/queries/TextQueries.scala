@@ -19,35 +19,6 @@ object TextQueries {
   private[queries] def logitOracle(withLabel: Boolean, rounds: Int = 10): String = {
         def sig(z: String): String =
           s"0.5 + CAST($z AS DOUBLE) / (2.0 * (1.0 + abs(CAST($z AS DOUBLE))))"
-        def round(r: Int): String = {
-          val p = r - 1
-          s"""z$r AS (
-            |  SELECT x.doc_id,
-            |    CAST(8.0 * CAST(sum(CAST(x.x * CAST(coalesce(w.w, 0) AS DOUBLE)
-            |      AS DECIMAL(30,6))) AS DOUBLE) + CAST(b.b AS DOUBLE)
-            |      AS DECIMAL(30,6)) AS zq
-            |  FROM x LEFT JOIN w$p w USING (bucket), b$p b
-            |  GROUP BY x.doc_id, b.b),
-            |r$r AS MATERIALIZED (
-            |  SELECT z.doc_id,
-            |    CAST(CAST(${sig("zq")} - y AS DECIMAL(30,6)) AS DOUBLE) AS r
-            |  FROM z$r z JOIN yt USING (doc_id)),
-            |g$r AS (
-            |  SELECT bucket,
-            |    CAST(sum(CAST(r * x AS DECIMAL(30,6))) AS DOUBLE) /
-            |    CAST(sum(CAST(x AS DECIMAL(30,6))) AS DOUBLE) AS gs
-            |  FROM x JOIN r$r USING (doc_id) GROUP BY 1),
-            |w$r AS MATERIALIZED (
-            |  SELECT coalesce(w.bucket, g.bucket) AS bucket,
-            |    CAST(CAST(coalesce(w.w, 0) AS DOUBLE)
-            |      - 1.0 * coalesce(g.gs, 0) AS DECIMAL(30,6)) AS w
-            |  FROM w$p w FULL OUTER JOIN g$r g ON w.bucket = g.bucket),
-            |b$r AS (
-            |  SELECT CAST(CAST(b.b AS DOUBLE)
-            |    - 1.0 * CAST(sum(CAST(r AS DECIMAL(30,6))) AS DOUBLE) / nd.nd
-            |    AS DECIMAL(30,6)) AS b
-            |  FROM r$r, b$p b, nd GROUP BY b.b, nd.nd)""".stripMargin
-        }
         val finalSelect =
           if (withLabel)
             s"""SELECT doc_id, label, score,

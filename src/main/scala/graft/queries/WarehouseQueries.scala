@@ -489,7 +489,6 @@ object WarehouseQueries {
         val cust = graft.core.Tables.load(s, dir, "customer")
         val onTime = cust.filter(pmod(col("c_custkey"), lit(3)) =!= 0)
         val late = cust.filter(pmod(col("c_custkey"), lit(3)) === 0)
-        val dimCols = Seq("c_mktsegment", "c_nationkey")
         // initial load: left join against the on-time dim slice
         val v0 = ords.join(onTime, col("o_custkey") === col("c_custkey"), "left")
           .select(col("o_orderkey"), col("o_custkey"),

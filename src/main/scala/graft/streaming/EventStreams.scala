@@ -4,7 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
-import graft.core.{Jobs, Lineage, OpCache}
+import graft.core.{Jobs, OpCache}
 import graft.operators.Dedup.CorpusIndex
 
 /** Structured Streaming operators over the event stream (greenfield —
@@ -34,6 +34,10 @@ import graft.operators.Dedup.CorpusIndex
   *    the feed persisted is released except those its result reads
   *    (`componentMaintenance`'s labels; nothing for a feed that returns
   *    `Unit`).
+  *  - '''State.''' A frame the state carries into the next batch
+  *    is checkpointed ([[graft.core.OpCache.checkpoint]]): its rows are
+  *    computed once and held with no lineage, so no earlier batch's
+  *    plan, nor the broadcast relations in it, stays reachable.
   *  - '''Caller frames stay.''' Frames the caller passed in (bootstrap
   *    labels, stored indexes, models) are never released.
   *  - '''Deadline.''' The driver blocks through [[awaitDrained]]: a
@@ -530,8 +534,8 @@ object EventStreams {
     * occurrences, so at-least-once re-delivery emits nothing new
     * (consumer distinct); undecodable payloads are excluded (the
     * upstream quality gate owns them). State = one
-    * (width, height, luma_md5) row per distinct stored image — cut
-    * and re-persisted per batch, KB-sized keys, never pixels. */
+    * (width, height, luma_md5) row per distinct stored image —
+    * checkpointed per batch, KB-sized keys, never pixels. */
   def mediaIngestFeed(
       media: DataFrame,
       outDir: String,
@@ -583,8 +587,7 @@ object EventStreams {
     * at-least-once re-delivery emits nothing new (consumer distinct);
     * undecodable payloads are excluded (the upstream quality gate
     * owns them). State = one key row per distinct stored identity —
-    * cut and re-persisted per batch, KB-sized keys, never payload
-    * bytes. */
+    * checkpointed per batch, KB-sized keys, never payload bytes. */
   private def signatureIngestFeed(
       media: DataFrame,
       outDir: String,
@@ -608,9 +611,7 @@ object EventStreams {
         case Some(st) => st.unionByName(fresh.select(keyCols.map(col): _*))
         case None => fresh.select(keyCols.map(col): _*)
       }
-      val n = OpCache.persist(Lineage.cut(merged))
-      n.count() // materialize before its inputs are released
-      Some(n)
+      Some(OpCache.checkpoint(merged))
     }
 
   /** Streaming INDEX-HEALTH canary — qs40's datasheet maintained over
@@ -627,13 +628,12 @@ object EventStreams {
     * retrain (qs41) becomes worth running. State = the grown cell
     * table as lazy unions of persisted per-batch deltas (as
     * [[componentMaintenance]]'s index — nothing corpus-sized copied
-    * per batch), LINEAGE-CUT every `cutEvery` batches: between cuts
-    * only the batch delta materializes, and at a cut boundary the
-    * union collapses to one cached LogicalRDD — so a LIFETIME canary's per-batch
-    * `ivfIndexStats` re-analysis stays bounded by `cutEvery` instead
-    * of growing one Union node per batch, at an amortized
-    * O(corpus / cutEvery) re-materialization cost per batch. `grp`
-    * identifies the batch in the output (min() reduced). Stats are
+    * per batch), CHECKPOINTED every 8 batches: between checkpoints
+    * only the batch delta materializes, and at a checkpoint the union
+    * collapses to one leaf with no lineage — so a LIFETIME canary's
+    * per-batch `ivfIndexStats` re-analysis stays bounded by 8 deltas
+    * instead of growing one Union node per batch, at an amortized
+    * O(corpus / 8) re-materialization cost per batch. `grp` identifies the batch in the output (min() reduced). Stats are
     * pure metadata aggregation per batch; at-least-once re-delivery
     * of a batch double-counts its vectors (consumption deltas are not
     * idempotent) → exactly-once feed contract, as the budget gate.
@@ -646,11 +646,14 @@ object EventStreams {
       vecCol: String,
       grp: org.apache.spark.sql.Column,
       outDir: String,
-      cutEvery: Int = 8,
       queryName: String = "graft_index_health",
       probe: graft.operators.Similarity.IvfIndex => Unit = _ => ()): Unit = {
-    // (cells as of the last cut, deltas appended since)
+    // (cells as of the last checkpoint, deltas appended since)
     type S = (DataFrame, Vector[DataFrame])
+    // a delta is one plan node, so a delta count (not Iterate.PlanBudget,
+    // sized for loops adding 7-11 nodes a round) bounds both the plan
+    // and the deltas each batch's stats query scans
+    val settleDeltas = 8
     def cells(s: S): DataFrame = s._2.foldLeft(s._1)(_ unionByName _)
     val noCells = index0.cells.limit(0)
     drain(vecs, queryName, (index0.cells, Vector.empty[DataFrame]),
@@ -664,12 +667,8 @@ object EventStreams {
       delta.count()
       val appended: S = (base, children :+ delta)
       val next: S =
-        if (appended._2.size < cutEvery) appended
-        else {
-          val cut = OpCache.persist(Lineage.cut(cells(appended)))
-          cut.count() // materialize before the children it reads are released
-          (cut, Vector.empty)
-        }
+        if (appended._2.size < settleDeltas) appended
+        else (OpCache.checkpoint(cells(appended)), Vector.empty)
       val cur = graft.operators.Similarity.IvfIndex(index0.centroids, cells(next))
       val g = b.agg(min(grp).as("grp"))
       graft.operators.Similarity.ivfIndexStats(cur)
@@ -690,11 +689,10 @@ object EventStreams {
     * counts add, min/max fold, KMV sketches union-truncate — so the
     * state after draining equals a batch profile of everything that
     * arrived, estimate included. State = one row per column (plus a
-    * KB of sketch), cut and re-persisted per batch (the qt33 model
-    * discipline: an un-cut state frame would re-analyze the whole
-    * merge history every batch). Deltas are NOT idempotent (counts
-    * add), so the feed contract is exactly-once — compose qst03's
-    * dedup for at-least-once sources. The final state lands in
+    * KB of sketch), checkpointed per batch (an un-settled state frame
+    * would re-analyze the whole merge history every batch). Deltas are
+    * NOT idempotent (counts add), so the feed contract is exactly-once
+    * — compose qst03's dedup for at-least-once sources. The final state lands in
     * `outDir` when the stream drains. */
   def profileMaintenanceFeed(
       stream: DataFrame,
@@ -709,8 +707,8 @@ object EventStreams {
           Nil
         }) { (batch, state) =>
       val bp = graft.warehouse.Profile.mergeableProfile(batch, cols, distinctKey)
-      Some(OpCache.persist(Lineage.cut(
-        state.fold(bp)(graft.warehouse.Profile.mergeProfiles(_, bp)))))
+      Some(OpCache.checkpoint(
+        state.fold(bp)(graft.warehouse.Profile.mergeProfiles(_, bp))))
     }
 
   /** Streaming profile-drift monitor —
@@ -988,8 +986,8 @@ object EventStreams {
     * the corpus past its planned share no matter how much it ships.
     *
     * State = one (source, consumed) row per source that ever admitted
-    * a document — the inherent minimum — cut and re-persisted per
-    * batch (the profile-maintenance discipline). Within a batch the
+    * a document — the inherent minimum — checkpointed per batch (the
+    * profile-maintenance discipline). Within a batch the
     * admitted set is the [[graft.operators.Sharding.groupedTokenPrefix]]
     * prefix (rejections are suffix-contiguous), so verdicts are
     * deterministic at any partitioning. Consumption deltas are NOT
@@ -1036,11 +1034,7 @@ object EventStreams {
               coalesce(col("d"), lit(0L))).as("consumed"))
         case None => delta.select(col("grp"), col("d").as("consumed"))
       }
-      // cut: an un-cut state would re-analyze the whole merge
-      // history every batch (the qt33 model discipline)
-      val n = OpCache.persist(Lineage.cut(merged))
-      n.count() // materialize before the frames it reads are released
-      Some(n)
+      Some(OpCache.checkpoint(merged))
     }
   }
 

@@ -49,7 +49,6 @@ object AnnRecall {
     // not the cosine baseline the tiers above use
     locally {
       val eL2 = {
-        import graft.functions.VectorFunctions._
         val e = em.select(col("vec_id"), col("embedding"))
         val scored = e.as("a").join(e.as("b"), col("a.vec_id") =!= col("b.vec_id"))
           .select(col("a.vec_id").as("vec_id"), col("b.vec_id").as("nbr_id"),

@@ -48,13 +48,6 @@ class OpCacheSpec extends SparkSuite {
     assert(sc.getPersistentRDDs.size == before + 2, "the cache and the checkpoint's rows")
     OpCache.release(c, blocking = true)
     assert(OpCache.liveCount == 0 && sc.getPersistentRDDs.size == before)
-    // under NONE: a lazy cut, nothing stored
-    OpCache.setStorageLevel(StorageLevel.NONE)
-    try {
-      val cut = OpCache.checkpoint(df)
-      assert(cut.storageLevel == StorageLevel.NONE && OpCache.liveCount == 0)
-      assert(rowsOf(cut) == rowsOf(df) && sc.getPersistentRDDs.size == before)
-    } finally OpCache.setStorageLevel(StorageLevel.MEMORY_AND_DISK)
   }
 
   test("iterative CC tracks its final persisted state for release") {
@@ -100,7 +93,7 @@ class OpCacheSpec extends SparkSuite {
     assert(made.size >= 2, "operator-internal persists collected too")
     assert(!made.exists(_ eq otherFrame),
       "a concurrent thread's persist must NOT leak into the scope")
-    made.foreach { f => f.unpersist(true); OpCache.untrack(f) }
+    made.foreach(OpCache.release(_, blocking = true))
     assert(otherFrame.storageLevel != StorageLevel.NONE,
       "scoped release left the concurrent query's cache intact")
     OpCache.releaseAll(blocking = true)
@@ -135,26 +128,5 @@ class OpCacheSpec extends SparkSuite {
     assert(owner.storageLevel != StorageLevel.NONE,
       "releaseAll dropped a cache the operator did not make")
     owner.unpersist(true)
-  }
-
-  test("StorageLevel.NONE disables operator caching entirely") {
-    OpCache.releaseAll(blocking = true)
-    val before = sc.getPersistentRDDs.size
-    OpCache.setStorageLevel(StorageLevel.NONE)
-    try {
-      val d = docs.withColumn("lang", lit("en"))
-        .withColumn("n_chars", length(col("text")))
-      val withCache = Dedup.blockedJaccardPairs(
-        d, "doc_id", "text", "lang", "n_chars").collect().toSet
-      assert(sc.getPersistentRDDs.size == before,
-        "NONE policy must not create cached RDDs")
-      OpCache.setStorageLevel(StorageLevel.MEMORY_AND_DISK)
-      val cached = Dedup.blockedJaccardPairs(
-        d, "doc_id", "text", "lang", "n_chars").collect().toSet
-      assert(withCache == cached, "cache policy must not change results")
-    } finally {
-      OpCache.setStorageLevel(StorageLevel.MEMORY_AND_DISK)
-      OpCache.releaseAll(blocking = true)
-    }
   }
 }

@@ -665,7 +665,7 @@ class MultimodalSpec extends SparkSuite {
       out.toByteArray
     }
     val b = a.clone(); b(50) += 1; b(150) -= 1
-    val c = a.map(v => -v).zipWithIndex.map { case (v, i) =>
+    val c = a.map(v => -v).zipWithIndex.map { case (_, i) =>
       if (i < 100) 0 else 16000 }
     val media = Seq(
       (1L, wavA), (2L, wavA.clone()), (3L, aiffA),

@@ -31,7 +31,7 @@ class NnDescentSpec extends SparkSuite {
     hits.toDouble / (n * k)
   }
 
-  private def run(rounds: Int, k: Int = 5): Map[Long, Seq[Long]] =
+  private def run(rounds: Int, k: Int): Map[Long, Seq[Long]] =
     Similarity.nnDescentGraph(vecs.toDF("vec_id", "embedding"),
         "vec_id", "embedding", k = k, rounds = rounds)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))

@@ -41,7 +41,6 @@ class SimilaritySpec extends SparkSuite {
     val got = Similarity.bruteForceTopK(df, "vec_id", "embedding", k = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .groupBy(_._1).view.mapValues(_.sortBy(_._3).map(_._2).toSeq).toMap
-    val byId = vecs.toMap
     vecs.foreach { case (id, a) =>
       val want = vecs.filter(_._1 != id)
         .map { case (oid, b) => (oid, cosine(a, b)) }
@@ -249,7 +248,6 @@ class SimilaritySpec extends SparkSuite {
   }
 
   test("multiTableLshNearDup: union recall, verified once, dedup'd pairs") {
-    import org.apache.spark.sql.functions.col
     // identical vectors collide in EVERY table yet emit exactly one pair
     val base = Array.tabulate(8)(j => 0.3f + 0.1f * j)
     val df = (Seq((0L, base), (1L, base)) ++
@@ -392,7 +390,6 @@ class SimilaritySpec extends SparkSuite {
   }
 
   test("filteredIvfTopK returns only same-label neighbors; exhaustive probe = filtered brute force") {
-    import org.apache.spark.sql.functions._
     val labeled = vecs.map { case (id, v) => (id, v, (id % 3).toInt) }
       .toDF("vec_id", "embedding", "label")
     val queries = labeled.filter($"vec_id" < 4)
@@ -415,7 +412,6 @@ class SimilaritySpec extends SparkSuite {
   }
 
   test("hardNegatives returns only cross-label neighbors; exhaustive probe = filtered brute force") {
-    import org.apache.spark.sql.functions._
     val labeled = vecs.map { case (id, v) => (id, v, (id % 3).toInt) }
       .toDF("vec_id", "embedding", "label")
     val queries = labeled.filter($"vec_id" < 4)

@@ -222,7 +222,6 @@ class PlanAuditSpec extends SparkSuite {
 
   test("no constant-key (de-facto global) windows outside the allow-list") {
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
-    import org.apache.spark.sql.catalyst.expressions.Literal
     val dir = "/root/testdata/sf0.001"
     val offenders = Registry.all
       .filterNot(_.name.startsWith("qst"))

@@ -1,6 +1,5 @@
 package graft.storage
 
-import org.apache.spark.sql.functions._
 import graft.SparkSuite
 
 class CompactionSpec extends SparkSuite {

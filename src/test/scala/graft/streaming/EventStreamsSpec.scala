@@ -171,49 +171,72 @@ class EventStreamsSpec extends SparkSuite {
   }
 
   test("indexHealthFeed: periodic cut bounds plan depth across batches") {
+    import org.apache.spark.sql.execution.LogicalRDD
     import org.apache.spark.sql.functions.{col, lit, pmod}
-    // 40 vectors; base index = ids % 4 == 0 (stride-8 quantizer), the
-    // remaining 30 arrive in 5 file-batches of 6. cutEvery = 2 must
-    // collapse the cells union to one LogicalRDD every second batch —
-    // a lifetime canary's per-batch re-analysis stays O(cutEvery), not
-    // O(batches).
+    import org.apache.spark.sql.graft.FastCut
+    // 40 vectors; base index = ids % 4 == 0 (stride-8 quantizer: five
+    // centroids); 18 of the rest arrive one a batch. The cell union is
+    // checkpointed into one leaf whenever it holds eight deltas — at
+    // batches 8 and 16 — so a lifetime canary's per-batch re-analysis
+    // stays bounded by eight deltas, never batch-linear.
     val em = (0 until 40).map { i =>
       val a = 2 * math.Pi * i / 40
       (i.toLong, Array(math.cos(a).toFloat, math.sin(a).toFloat,
-        (i % 3).toFloat, 1f))
+        (i % 3).toFloat))
     }.toDF("vec_id", "embedding")
     val idx = graft.operators.Similarity.buildIvfIndex(
       em.filter(pmod(col("vec_id"), lit(4)) === 0),
       "vec_id", "embedding", centroidStride = 8)
-    val rest = (0 until 40).filter(_ % 4 != 0)
+    val rest = (0 until 40).filter(_ % 4 != 0).take(18).map(_.toLong)
     val stream = graft.queries.StreamingQueries.stagedStream(spark,
-      rest.grouped(6).map(ids => em.filter(col("vec_id").isin(ids.map(_.toLong): _*)))
-        .toSeq: _*)
+      rest.map(id => em.filter(col("vec_id") === id)): _*)
     val out = java.nio.file.Files
       .createTempDirectory("graft_ihspec_out").toString
-    def unions(df: org.apache.spark.sql.DataFrame): Int =
-      df.queryExecution.analyzed.collect {
-        case u: org.apache.spark.sql.catalyst.plans.logical.Union => u
-      }.size
-    val depth = scala.collection.mutable.ListBuffer.empty[Int]
+    // per batch: the cells' plan size, whether they are a settled leaf,
+    // and the cells themselves (vec_id -> cent_id)
+    val seen = scala.collection.mutable.ListBuffer.empty[(Int, Boolean, Map[Long, Long])]
     EventStreams.indexHealthFeed(stream, idx, "vec_id", "embedding",
-      lit(1L), out, cutEvery = 2,
-      probe = ix => depth += unions(ix.cells))
-    val stats = spark.read.parquet(out)
-      .select("n_vectors").collect().map(_.getLong(0)).sorted
-    assert(stats.toSeq == Seq(16L, 22L, 28L, 34L, 40L),
-      s"each batch appends 6 vectors to the base 10: ${stats.toSeq}")
-    // batch trace: append, cut→0, append, cut→0, append. The cut
-    // batches collapse to one LogicalRDD (zero Union nodes) and the
-    // append depth is a CONSTANT (the delta plan's own unions + 1),
-    // never batch-linear — without the cut this trace would be
-    // strictly increasing.
-    assert(depth(1) == 0 && depth(3) == 0,
-      s"cut batches must collapse to a LogicalRDD: ${depth.toList}")
-    assert(depth(2) == depth(4) && depth(2) > 0,
-      s"append depth must be a batch-independent constant: ${depth.toList}")
-    assert(depth(0) <= unions(idx.cells) + depth(2),
-      s"first append bounded by base + one delta: ${depth.toList}")
+      col("vec_id"), out, probe = { ix =>
+        val settled = ix.cells.queryExecution.analyzed match {
+          case l: LogicalRDD =>
+            assert(l.rdd.isCheckpointed &&
+              l.rdd.dependencies.forall(_.rdd.dependencies.isEmpty),
+              "a settled cell frame's RDD must hold no lineage")
+            true
+          case _ => false
+        }
+        seen += ((FastCut.planSize(ix.cells), settled,
+          ix.cells.select("vec_id", "cent_id").as[(Long, Long)].collect().toMap))
+      })
+    val sizes = seen.map(_._1).toList
+    val settledAt = seen.zipWithIndex.collect { case ((_, true, _), k) => k + 1 }.toList
+    info(s"plan sizes by batch: $sizes")
+    assert(seen.size == rest.size)
+    assert(settledAt == List(8, 16), s"settled at batches $settledAt")
+    assert(sizes(7) == 1 && sizes(15) == 1, s"a settled union is one leaf: $sizes")
+    // the depth after a settle is a batch-independent constant: batches
+    // 17-18 plan like batches 9-10
+    assert(sizes.slice(16, 18) == sizes.slice(8, 10) && sizes(8) > 1,
+      s"append depth must not grow across settles: $sizes")
+    // settling changes no cell: each batch adds exactly its vector
+    val base = idx.cells.select("vec_id", "cent_id").as[(Long, Long)].collect().toMap
+    seen.map(_._3).zip(rest).foldLeft(base) { case (prev, (cur, id)) =>
+      assert(cur.size == prev.size + 1 && cur.contains(id) && (cur - id) == prev,
+        s"batch of vector $id")
+      cur
+    }
+    // and each stats row is the stats of that batch's cells
+    def r6(x: Double) = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val expected = seen.map(_._3).zip(rest).map { case (cells, id) =>
+      val members = cells.values.groupBy(identity).values.map(_.size.toLong)
+      val (nc, nv, mx) = (members.size.toLong, members.sum, members.max)
+      Seq[Any](id, nc, nv, members.min, mx, 5L - nc, r6(nv.toDouble / nc), r6(mx.toDouble * nc / nv))
+    }.toSet
+    val rows = spark.read.parquet(out)
+    assert(rows.count() == rest.size)
+    assert(rowsOf(rows.select("grp", "n_cells", "n_vectors", "min_cell", "max_cell",
+      "empty_cells", "mean_cell", "skew")) == expected)
+    assert(rows.select("n_vectors").as[Long].collect().sorted.toSeq == (11L to 28L))
     graft.core.OpCache.releaseAll(blocking = true)
   }
 

@@ -48,6 +48,20 @@ class FeedReleaseSpec extends SparkSuite {
     after - before
   }
 
+  /** [[liveDelta]] for a feed that carries checkpointed state: the
+    * session's persisted RDDs are also back to their count from before
+    * the feed (the caller's frames filled first, so theirs are in that
+    * count), so a released state freed its checkpoint's rows, not only
+    * its `OpCache` entry. */
+  private def releasedDelta(callerFrames: DataFrame*)(feed: => Unit): Int = {
+    callerFrames.foreach(_.count())
+    val rdds = sc.getPersistentRDDs.size
+    val d = liveDelta(callerFrames: _*)(feed)
+    assert(sc.getPersistentRDDs.size == rdds,
+      s"${sc.getPersistentRDDs.size - rdds} persisted RDDs left behind")
+    d
+  }
+
   private def persistedIndex(df: DataFrame): Dedup.CorpusIndex = {
     val ix = Dedup.buildCorpusIndex(df, "doc_id", "text")
     Dedup.CorpusIndex(OpCache.persist(ix.hashes), OpCache.persist(ix.shingles),
@@ -132,7 +146,7 @@ class FeedReleaseSpec extends SparkSuite {
   test("profileMaintenanceFeed releases its state once the profile is written") {
     OpCache.releaseAll(blocking = true)
     val out = outDir()
-    val d = liveDelta() {
+    val d = releasedDelta() {
       EventStreams.profileMaintenanceFeed(slices(docs, "doc_id"),
         Seq("doc_id", "source"), c => Dedup.hash60(col(c).cast("string")), out)
     }
@@ -148,7 +162,7 @@ class FeedReleaseSpec extends SparkSuite {
     val alloc = OpCache.persist(docs.select(col("source")).distinct()
       .select(col("source"), lit(40L).as("alloc_tokens")))
     val out = outDir()
-    val d = liveDelta(alloc) {
+    val d = releasedDelta(alloc) {
       EventStreams.budgetGateFeed(slices(docs, "doc_id"), "doc_id", "source",
         size(split(col("text"), " ")).cast("long"), alloc, out)
     }
@@ -162,7 +176,7 @@ class FeedReleaseSpec extends SparkSuite {
     val media = Multimodal.syntheticImages(docs, "doc_id", "text")
       .select(col("media_id"), col("bytes"))
     val out = outDir()
-    val d = liveDelta() {
+    val d = releasedDelta() {
       EventStreams.mediaIngestFeed(slices(media, "media_id"), out)
     }
     assert(d == 0, s"mediaIngestFeed left $d frames cached")
@@ -179,14 +193,27 @@ class FeedReleaseSpec extends SparkSuite {
       "vec_id", "embedding", centroidStride = 8)
     val idx = Similarity.IvfIndex(OpCache.persist(b.centroids), OpCache.persist(b.cells))
     val out = outDir()
-    // three batches with a cut every two: append, cut, append
-    val d = liveDelta(idx.centroids, idx.cells) {
+    // nine one-vector batches: the eighth checkpoints the union of eight
+    // deltas, the ninth appends one more
+    val rest = (0 until 40).filter(_ % 4 != 0).take(9).map(_.toLong)
+    val settled = scala.collection.mutable.ListBuffer.empty[Int]
+    var batch = 0
+    val d = releasedDelta(idx.centroids, idx.cells) {
       EventStreams.indexHealthFeed(
-        slices(em.filter(pmod(col("vec_id"), lit(4)) =!= 0), "vec_id"),
-        idx, "vec_id", "embedding", lit(1L), out, cutEvery = 2)
+        graft.queries.StreamingQueries.stagedStream(spark,
+          rest.map(id => em.filter(col("vec_id") === id)): _*),
+        idx, "vec_id", "embedding", lit(1L), out,
+        probe = { ix =>
+          batch += 1
+          ix.cells.queryExecution.analyzed match {
+            case _: org.apache.spark.sql.execution.LogicalRDD => settled += batch
+            case _ => ()
+          }
+        })
     }
+    assert(settled.toList == List(8), s"checkpointed at batches ${settled.toList}")
     assert(d == 0, s"indexHealthFeed left $d frames cached")
-    assert(spark.read.parquet(out).count() == 3)
+    assert(spark.read.parquet(out).count() == rest.size)
     OpCache.releaseAll(blocking = true)
   }
 

@@ -1,6 +1,5 @@
 package graft.transform
 
-import org.apache.spark.sql.functions._
 import graft.SparkSuite
 
 class TransformersSpec extends SparkSuite {

@@ -184,7 +184,6 @@ class WarehouseSpec extends SparkSuite {
 
   test("scd2Apply: change/delete/new/unchanged + closed pass-through + idempotence") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     // key 1: will change; key 2: unchanged; key 3: deleted; key 4: new.
     // key 1 also carries a CLOSED prior version that must pass through.
     val hist = Seq(
@@ -231,7 +230,6 @@ class WarehouseSpec extends SparkSuite {
   }
 
   test("scd2Apply: duplicate keys on either side fail loudly, not fan out") {
-    import org.apache.spark.sql.functions._
     val hist = Seq((1L, "a", "t0", None: Option[String], true))
       .toDF("k", "attr", "valid_from", "valid_to", "is_current")
     val dupSnap = Seq((1L, "a"), (1L, "b")).toDF("k", "attr")
