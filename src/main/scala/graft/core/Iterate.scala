@@ -8,14 +8,14 @@ import org.apache.spark.storage.StorageLevel
 
 /** The round loop of every iterative operator (connected components,
   * star contraction, GD, PCA, k-means, PQ codebooks, NN-Descent,
-  * PageRank, k-core, label propagation, the water-fill). The operator
-  * supplies the round; `Iterate` owns the rest:
+  * PageRank, k-core, label propagation, the water-fill, BPE merges, MMR
+  * selection). The operator supplies the round; `Iterate` owns the rest:
   *
   *  - '''Job labels.''' Every round runs under `<name>: round N`
   *    ([[Jobs.described]]), so profilers attribute each round's jobs.
   *
   *  - '''AQE scope.''' AQE materializes every exchange of a plan as its
-  *    own job, and every `Lineage.cut`/`toRdd` of an adaptive plan
+  *    own job, and every `FastCut.cut`/`toRdd` of an adaptive plan
   *    finalizes eagerly, stage by stage. For corpus-scale plans that is
   *    the right trade (runtime coalescing, skew splits, broadcast
   *    conversion). For round plans that are uniform by construction —
@@ -32,7 +32,7 @@ import org.apache.spark.storage.StorageLevel
   *    the caller's session, so downstream corpus-scale plans adapt.
   *    Corpus-scale loops stay adaptive.
   *
-  *  - '''Lineage cut and persistence.''' An un-cut loop state nests the
+  *  - '''Plan cut and persistence.''' An un-cut loop state nests the
   *    previous round's plan inside the next; Catalyst re-analyzes the
   *    whole tree on every action even when each round's data is cached,
   *    and a state read more than once per round grows the tree

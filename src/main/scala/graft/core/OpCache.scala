@@ -47,7 +47,7 @@ object OpCache {
   /** `df` computed now and held with no lineage — the state a
     * long-running loop carries from one step into the next, which must
     * not keep every earlier step's plan (and the broadcast relations
-    * its RDDs reference) reachable, as a [[Lineage.cut]] frame does.
+    * its RDDs reference) reachable, as a `FastCut.cut` frame does.
     * An eager local checkpoint stores the rows on disk; the frame over
     * it is [[persist]]ed and tracked like any, so reads are served from
     * the cache, and [[release]] frees the checkpoint with the cache. */
@@ -57,9 +57,8 @@ object OpCache {
     persist(s)
   }
 
-  /** Track an already-persisted frame (iterative algorithms persist
-    * their final state directly). */
-  def track(df: DataFrame): DataFrame = { sweep(); live.add(df); noteScoped(df); df }
+  /** Track an already-persisted frame ([[Iterate]]'s settled states). */
+  private[core] def track(df: DataFrame): DataFrame = { sweep(); live.add(df); noteScoped(df); df }
 
   // stale frame -> the frame whose materialization frees it
   private val supersededBy =

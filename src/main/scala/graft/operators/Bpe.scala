@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** In-engine byte-pair-encoding TRAINING and tokenization — the
@@ -31,8 +31,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape per round: one explode of the vocab's adjacent pairs +
   * a hash aggregate (map-side combinable) + a 1-row argmax broadcast
-  * back into a narrow `replace` projection; the vocab persists each
-  * round (lineage cut, qd10's discipline).
+  * back into a narrow `replace` projection. The merge rounds run on
+  * [[graft.core.Iterate]], which labels them `bpe: round N` and settles
+  * the vocab once its chain of projections outgrows the plan budget.
   */
 object Bpe {
 
@@ -41,13 +42,35 @@ object Bpe {
 
   /** Learned model: `merges` = (round, left, right, merged, cnt) in
     * training order; `vocab` = (word, freq, sym, n_sym) with `sym` the
-    * post-merge delimited symbol string. Both are OpCache-persisted;
-    * release via [[graft.core.OpCache.releaseAll]]. */
+    * post-merge delimited symbol string. `merges` is a local relation;
+    * `vocab` is OpCache-persisted, released via
+    * [[graft.core.OpCache.releaseAll]]. */
   final case class BpeModel(merges: DataFrame, vocab: DataFrame)
 
   private def wrapChars(word: Column): Column =
     array_join(transform(split(word, ""), c => concat(lit(S), c, lit(E))), "")
 
+
+  /** The most frequent adjacent symbol pair of `vocab` as (left, right,
+    * cnt), ties broken by (left, right), or none when no word has two
+    * symbols. Collected: this is a scalar calibration read (the
+    * Histogram head() discipline), not a data collect — and it lets the
+    * merge apply as literals instead of a crossJoin, so an exhausted
+    * pair table stops training instead of wiping the vocab. */
+  private def bestPair(vocab: DataFrame): Option[Row] = {
+    val syms = vocab.select(col("freq"),
+      split(expr("substring(sym, 2, length(sym) - 2)"), E + S).as("a"))
+    syms
+      .filter(size(col("a")) >= 2)
+      .select(col("freq"), explode(
+        zip_with(slice(col("a"), lit(1), size(col("a")) - 1),
+          slice(col("a"), lit(2), size(col("a")) - 1),
+          (l, r) => struct(l.as("l"), r.as("r")))).as("p"))
+      .groupBy(col("p.l").as("left"), col("p.r").as("right"))
+      .agg(sum(col("freq")).cast("long").as("cnt"))
+      .orderBy(col("cnt").desc, col("left"), col("right"))
+      .limit(1).collect().headOption
+  }
 
   /** Train `rounds` BPE merges over the corpus' word-frequency table.
     * The ONLY corpus-scale pass is the initial word count; the merge
@@ -61,7 +84,7 @@ object Bpe {
     val spark = docs.sparkSession
     import spark.implicits._
     // THE corpus pass: word frequencies (Zipf-bounded output)
-    var vocab = graft.core.OpCache.persist(
+    val vocab0 = graft.core.OpCache.persist(
       docs.select(explode(split(col(textCol), " ")).as("word"))
         .filter(length(col("word")) > 0)
         .groupBy(col("word")).agg(count(lit(1)).cast("long").as("freq"))
@@ -69,33 +92,16 @@ object Bpe {
     val mergesBuf = scala.collection.mutable.ArrayBuffer
       .empty[(Long, String, String, String, Long)]
     var exhausted = false
-    for (round <- 1 to rounds if !exhausted) {
-      val syms = vocab.select(col("freq"),
-        split(expr("substring(sym, 2, length(sym) - 2)"), E + S).as("a"))
-      val pairs = syms
-        .filter(size(col("a")) >= 2)
-        .select(col("freq"), explode(
-          zip_with(slice(col("a"), lit(1), size(col("a")) - 1),
-            slice(col("a"), lit(2), size(col("a")) - 1),
-            (l, r) => struct(l.as("l"), r.as("r")))).as("p"))
-        .groupBy(col("p.l").as("left"), col("p.r").as("right"))
-        .agg(sum(col("freq")).cast("long").as("cnt"))
-      // 1-row argmax under the total order (cnt DESC, left, right).
-      // Collected: this is a scalar calibration read (the Histogram
-      // head() discipline), not a data collect — and it lets the merge
-      // apply as literals instead of a crossJoin, so an exhausted pair
-      // table stops training instead of wiping the vocab.
-      val bestRow = pairs.orderBy(col("cnt").desc, col("left"), col("right"))
-        .limit(1).collect()
-      if (bestRow.isEmpty) exhausted = true
-      else {
-        val l = bestRow(0).getString(0)
-        val r = bestRow(0).getString(1)
-        mergesBuf += ((round.toLong, l, r, l + r, bestRow(0).getLong(2)))
-        vocab = graft.core.OpCache.persist(
+    val vocab = graft.core.Iterate.frames("bpe", vocab0, rounds) { vocab =>
+      // once the pair table runs out, a round keeps the vocab and runs no job
+      (if (exhausted) None else bestPair(vocab)) match {
+        case None => exhausted = true; vocab
+        case Some(best) =>
+          val (l, r) = (best.getString(0), best.getString(1))
+          mergesBuf += (((mergesBuf.size + 1).toLong, l, r, l + r, best.getLong(2)))
           vocab.select(col("word"), col("freq"),
             replace(col("sym"), lit(S + l + E + S + r + E),
-              lit(S + l + r + E)).as("sym")))
+              lit(S + l + r + E)).as("sym"))
       }
     }
     val merges = mergesBuf.toSeq

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.FastCut
 
 /** End-to-end corpus curation — the composed text-side lifecycle, one
   * operator: language filter → quality rules (token counts, type-token
@@ -83,8 +84,7 @@ object Curation {
     val keptPlan =
       docs.join(scored.select(col("doc_id").as(idCol), col("score")),
         Seq(idCol))
-    val kept = graft.core.OpCache.persist(
-      graft.core.Lineage.cut(keptPlan))
+    val kept = graft.core.OpCache.persist(FastCut.cut(keptPlan))
     kept.join(
       Dedup.dedupCorpus(kept, idCol, textCol)
         .select(col("keep_id").as(idCol)),
@@ -116,14 +116,29 @@ object Curation {
       maxLen: Int = 1024,
       nStrata: Int = 4): DataFrame = {
     val curated = curate(docs, idCol, textCol, langCol, langs)
-    // the curated pool feeds near-dedup AND the survivor join; cut as
-    // well as persist so the dedup machinery's many frame
-    // constructions don't each re-analyze the curation plan (the
-    // decontaminated variant's measured lesson: 9.3 → 6.3 s)
-    val poolPlan =
-      docs.join(curated.select(col("doc_id").as(idCol)), Seq(idCol), "left_semi")
-    val pool = graft.core.OpCache.persist(
-      graft.core.Lineage.cut(poolPlan))
+    dedupMixPack(
+      docs.join(curated.select(col("doc_id").as(idCol)), Seq(idCol), "left_semi"),
+      idCol, textCol, sourceCol, permille, defaultPermille, maxLen, nStrata)
+  }
+
+  /** The stages both training pipelines end with: the pool through
+    * near-dedup, the survivor semi-join, [[weightedMix]] and
+    * [[graft.operators.Packing.sequencePack]]. The pool is cut as well
+    * as persisted: it feeds the whole dedup machinery (shingle, band,
+    * pair and component stages each construct frames over it) and the
+    * survivor join, and an un-cut pool makes every one of those
+    * constructions re-analyze the curation plan (measured on the
+    * decontaminated pipeline: 9.3 → 6.3 s). */
+  private def dedupMixPack(
+      poolPlan: DataFrame,
+      idCol: String,
+      textCol: String,
+      sourceCol: String,
+      permille: Map[String, Int],
+      defaultPermille: Int,
+      maxLen: Int,
+      nStrata: Int): DataFrame = {
+    val pool = graft.core.OpCache.persist(FastCut.cut(poolPlan))
     val kept = Dedup.dedupCorpus(pool, idCol, textCol)
     val surv = pool.join(kept.select(col("keep_id").as(idCol)), Seq(idCol), "left_semi")
     val mixed = weightedMix(surv, idCol, sourceCol, permille, defaultPermille)
@@ -162,19 +177,10 @@ object Curation {
     val pool0 = graft.core.OpCache.persist(
       docs.join(curated.select(col("doc_id").as(idCol)), Seq(idCol), "left_semi"))
     val cont = Dedup.winnowingContamination(pool0, bench, idCol, textCol)
-    // cut as well as persist: pool feeds the whole dedup machinery
-    // (shingle/band/pair/component stages each construct frames over
-    // it), and an un-cut pool makes every one of those constructions
-    // re-analyze the curation+contamination plan (the qt36 seam
-    // lesson, applied one level down)
-    val poolPlan = pool0.join(cont.filter(col("n_shared_fp") <= maxSharedFp)
-      .select(col("doc_id").as(idCol)), Seq(idCol), "left_semi")
-    val pool = graft.core.OpCache.persist(
-      graft.core.Lineage.cut(poolPlan))
-    val kept = Dedup.dedupCorpus(pool, idCol, textCol)
-    val surv = pool.join(kept.select(col("keep_id").as(idCol)), Seq(idCol), "left_semi")
-    val mixed = weightedMix(surv, idCol, sourceCol, permille, defaultPermille)
-    Packing.sequencePack(mixed, idCol, textCol, maxLen, nStrata)
+    dedupMixPack(
+      pool0.join(cont.filter(col("n_shared_fp") <= maxSharedFp)
+        .select(col("doc_id").as(idCol)), Seq(idCol), "left_semi"),
+      idCol, textCol, sourceCol, permille, defaultPermille, maxLen, nStrata)
   }
 
   /** DUAL-MODALITY decontamination audit — the TWO leakage channels a
@@ -579,8 +585,7 @@ object Curation {
     val packedPlan = trainingPipelineDecontaminated(docs, bench, idCol,
       textCol, langCol, sourceCol, langs, permille, defaultPermille, maxLen,
       nStrata, maxSharedFp)
-    val packed = graft.core.OpCache.persist(
-      graft.core.Lineage.cut(packedPlan))
+    val packed = graft.core.OpCache.persist(FastCut.cut(packedPlan))
     val seqs = packed
       .groupBy(col("stratum"), col("seq_id"))
       .agg(sum(col("n_tokens")).cast("long").as("seq_tokens"))

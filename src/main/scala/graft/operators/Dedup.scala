@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.FastCut
 
 /** Deduplication operators for large text corpora — the beyond-reference
   * surface a training-data pipeline needs. All portable-hash based:
@@ -955,7 +956,7 @@ object Dedup {
     val ePlan = newEdges.select(col("a_id").cast("long").as("a_id"),
       col("b_id").cast("long").as("b_id"))
     val e = graft.core.Jobs.described(labels.sparkSession, "icc: probe cut") {
-      graft.core.OpCache.persist(graft.core.Lineage.cut(ePlan))
+      graft.core.OpCache.persist(FastCut.cut(ePlan))
     }
     val ends = e.select(col("a_id").as("node"))
       .unionByName(e.select(col("b_id").as("node")))
@@ -1009,7 +1010,6 @@ object Dedup {
       srcCol: String,
       dstCol: String,
       maxIter: Int = 50): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     requireIntegralIds(edges, srcCol, dstCol)
     val spark = edges.sparkSession
 
@@ -1037,10 +1037,10 @@ object Dedup {
         .distinct()
     }
 
-    val edges0 = graft.core.Lineage.cut(edges
+    val edges0 = graft.core.OpCache.persist(FastCut.cut(edges
       .select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
       .filter(col("a") =!= col("b"))
-      .distinct()).persist(MEMORY_AND_DISK)
+      .distinct()))
     var curCount = edges0.count()
     // Adaptive (unlike connectedComponents' rounds, measured and
     // rejected): the star rewrites' mins⋈sym joins rely on AQE's runtime
@@ -1049,7 +1049,7 @@ object Dedup {
     // (task-seconds +92%) with AQE off despite jobs halving. The CC
     // rounds differ because their joins are cached-partitioning-aligned
     // and explicitly broadcast.
-    val stars = if (curCount == 0) graft.core.OpCache.track(edges0)
+    val stars = if (curCount == 0) edges0
     else graft.core.Iterate("stars", spark) { it =>
       it.frames(edges0, maxIter,
         until = (cur, next) => {
@@ -1308,7 +1308,6 @@ object Dedup {
       srcCol: String,
       dstCol: String,
       maxIter: Int = 25): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     requireIntegralIds(edges, srcCol, dstCol)
     // Cut the CALLER's edge lineage before iterating, not just persist
     // it: every round's viaNeighbors/minLabels embeds sym's LOGICAL
@@ -1349,7 +1348,7 @@ object Dedup {
     // parallelism as the ceiling.
     val spark = edges.sparkSession
     val sym0 = graft.core.Jobs.described(spark, "cc: sym cut") {
-      graft.core.Lineage.cut(symPlan).persist(MEMORY_AND_DISK)
+      graft.core.OpCache.persist(FastCut.cut(symPlan))
     }
     val nEdges = graft.core.Jobs.described(spark, "cc: sym count")(sym0.count())
     val nParts = math.max(1, math.min(
@@ -1396,13 +1395,12 @@ object Dedup {
       // select(t).distinct() covers every node with ZERO exchange (alias
       // t→node carries the partitioning), leaving the initial label
       // frame cached hash(node) — the layout both per-round joins reuse.
-      val labels0 = sym.select(col("t").as("node")).distinct()
-        .select(col("node"), col("node").as("label"))
-        .persist(MEMORY_AND_DISK)
+      val labels0 = graft.core.OpCache.persist(sym.select(col("t").as("node"))
+        .distinct().select(col("node"), col("node").as("label")))
       var prevSum = graft.core.Jobs.described(spark, "cc: init sum") {
         labelSum(labels0) // materializes labels → sym → sym0
       }
-      sym0.unpersist(false) // superseded by the repartitioned cache
+      graft.core.OpCache.release(sym0) // superseded by the repartitioned cache
       // The repartition(node) under each round's persist restores the
       // hash(node) layout the next round's two joins reuse — one
       // exchange paid there saves two here.

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.FastCut
 import org.apache.spark.sql.types.DecimalType
 
 /** In-engine trained text classifier — batch gradient descent over
@@ -157,7 +158,7 @@ object Logit {
       docs: DataFrame, idCol: String, textCol: String,
       buckets: Int): DataFrame =
     graft.core.OpCache.persist(
-      graft.core.Lineage.cut(features(docs, idCol, textCol, buckets))
+      FastCut.cut(features(docs, idCol, textCol, buckets))
         .repartition(col("doc_id")))
 
   /** The persisted, doc_id-PARTITIONED label table — [[featureTable]]'s

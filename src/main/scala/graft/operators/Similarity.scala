@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.FastCut
 import graft.functions.VectorFunctions._
 
 /** Approximate/exact nearest-neighbor search over an embedding column
@@ -1144,10 +1145,12 @@ object Similarity {
     * brute/heap path (swap in [[ivfTopKWithIndex]] upstream for
     * corpus-scale candidate generation); the greedy loop touches ONLY
     * candidate-sized data — pairwise sims are candK² per query,
-    * computed once and reused across the k unrolled steps (both
-    * frames persist), each step one bounded join + one per-query
-    * window. k is a compile-time-small constant, so plan depth is
-    * fixed; no lineage growth beyond k stages.
+    * computed once and reused across the k steps (both frames
+    * persist), each step one bounded join + one per-query window. The
+    * steps run on [[graft.core.Iterate]] as `mmr: round N`; a step
+    * reads the selection more than once, so every step's selection is
+    * settled (≤ one row per query) and later steps never re-execute
+    * earlier argmax windows.
     *
     * Output: (q_id, d_id, step) — step 1..k in selection order. */
   def mmrTopK(
@@ -1184,13 +1187,15 @@ object Similarity {
           cosineWithNorms(col("a.dv"), col("b.dv"), col("a.dn"), col("b.dn"))
             .as("sim")))
     val wRel = Window.partitionBy(col("q_id")).orderBy(col("rel").desc, col("d_id"))
-    // each step's selection persists (tiny: ≤ one row per query), so
-    // later steps never re-execute earlier argmax windows — the q37
-    // funnel lesson applied to the greedy chain
-    var selected = graft.core.OpCache.persist(cand
+    val selected0 = graft.core.OpCache.persist(cand
       .withColumn("rn", row_number().over(wRel)).filter(col("rn") === 1)
       .select(col("q_id"), col("d_id"), lit(1L).as("step")))
-    for (step <- 2 to k) {
+    // Adaptive: with AQE off qs21's steps ran 13 jobs instead of 26 but
+    // 97 tasks instead of 85 and 10.3–10.8 task-seconds instead of
+    // 7.6–8.1 (sf0.01, local[4], three runs each)
+    var step = 1L
+    graft.core.Iterate.frames("mmr", selected0, k - 1) { selected =>
+      step += 1
       val selSet = selected.select(col("q_id"), col("d_id").as("s_id"))
       val pen = ps.join(selSet,
           ps("q_id") === selSet("q_id") && ps("b_id") === selSet("s_id"))
@@ -1205,10 +1210,9 @@ object Similarity {
       val wMmr = Window.partitionBy(col("q_id")).orderBy(col("mmr").desc, col("d_id"))
       val pick = mmr.withColumn("rn", row_number().over(wMmr))
         .filter(col("rn") === 1)
-        .select(col("q_id"), col("d_id"), lit(step.toLong).as("step"))
-      selected = graft.core.OpCache.persist(selected.unionByName(pick))
+        .select(col("q_id"), col("d_id"), lit(step).as("step"))
+      selected.unionByName(pick)
     }
-    selected
   }
 
   /** NN-Descent (Dong, Moses & Li, WWW'11, "Efficient K-Nearest
@@ -1384,7 +1388,7 @@ object Similarity {
     // expansion join would re-ANALYZE that tree (the
     // Dedup.connectedComponents entry-cut rationale)
     val gPlan = knn.unionByName(ring)
-    val g = graft.core.OpCache.persist(graft.core.Lineage.cut(gPlan))
+    val g = graft.core.OpCache.persist(FastCut.cut(gPlan))
     // hash-spread entry ids: top-15-hex-of-md5(j) mod n — the driver-
     // side replica of Dedup.hash60, embedded identically in the oracle
     val md = java.security.MessageDigest.getInstance("MD5")
@@ -1464,7 +1468,7 @@ object Similarity {
     val ring = e.select(col("vec_id").as("gu"),
       ((col("vec_id") + 1) % n).as("gv"))
     val gPlan = knn.unionByName(ring)
-    val g = graft.core.OpCache.persist(graft.core.Lineage.cut(gPlan))
+    val g = graft.core.OpCache.persist(FastCut.cut(gPlan))
     val cents = e.filter(col("vec_id") % centroidStride === 0)
       .select(col("vec_id").as("cent_id"), col("embedding").as("cemb"),
         col("nrm").as("cnrm"))

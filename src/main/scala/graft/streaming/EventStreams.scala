@@ -221,11 +221,11 @@ object EventStreams {
       idCol: String,
       textCol: String,
       queryName: String = "graft_stream_components"): DataFrame = {
-    type S = (DataFrame, Vector[CorpusIndex])
+    type S = (DataFrame, Vector[CorpusIndex], Seq[DataFrame])
     val spark = docs.sparkSession
-    drain(docs, queryName, (labels0, Vector.empty[CorpusIndex]),
-        reads = (s: S) => s._1 +: indexFrames(s._2),
-        finish = (s: S) => Seq(s._1)) { case (batch, (labels, deltas)) =>
+    drain(docs, queryName, (labels0, Vector.empty[CorpusIndex], Nil): S,
+        reads = (s: S) => s._1 +: (indexFrames(s._2) ++ s._3),
+        finish = (s: S) => Seq(s._1)) { case (batch, (labels, deltas, _)) =>
       val b = OpCache.persist(batch)
       val edges = graft.operators.Dedup.batchNearDupStarEdges(
         grown(index, deltas), b, idCol, textCol)
@@ -237,17 +237,12 @@ object EventStreams {
       val newLabels = Jobs.described(spark, "scc: labels checkpoint") {
         OpCache.checkpoint(next)
       }
+      // the probe reads only the bands and shingles; the delta fills when
+      // the next batch's probe first reads it, so the state keeps the
+      // batch frame it is built from until then
       val ix = graft.operators.Dedup.buildCorpusIndex(b, idCol, textCol)
-      val delta = CorpusIndex(OpCache.persist(ix.hashes),
-        OpCache.persist(ix.shingles), OpCache.persist(ix.bands))
-      // one action fills the labels' cache and the delta: a union of
-      // per-frame probe projections scans every cached partition in one
-      // wide stage
-      Jobs.described(spark, "scc: materialize") {
-        (newLabels +: indexFrames(Seq(delta))).map(_.select(lit(1L).as("one")))
-          .reduce(_ union _).count()
-      }
-      (newLabels, deltas :+ delta)
+      (newLabels, deltas :+ CorpusIndex(ix.hashes,
+        OpCache.persist(ix.shingles), OpCache.persist(ix.bands)), Seq(b))
     }._1
   }
 

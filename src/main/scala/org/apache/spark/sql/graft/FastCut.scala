@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.storage.StorageLevel
 
-/** Lineage truncation without the external-row round trip.
+/** Truncating a plan's lineage without the external-row round trip.
   *
   * The engine's iterative operators (CC label rounds, GD rounds, Lloyd
   * rounds, per-micro-batch state) must cut their logical plans each

@@ -10,7 +10,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.FastCut
 import graft.SparkSuite
-import graft.operators.{Curation, Dedup, GraphRank, Similarity}
+import graft.operators.{Bpe, Curation, Dedup, GraphRank, Similarity}
 
 /** The round-loop combinator: AQE scoped to the loop's own plans, loud
   * non-convergence, and release of superseded rounds. */
@@ -92,6 +92,9 @@ class IterateSpec extends SparkSuite {
     val nodes = (1L to 20L).toDF("id")
     val edges = (2L to 10L).map(i => (1L, i)).toDF("a_id", "b_id")
     val docs = Seq(("a", 100L), ("b", 50L), ("c", 10L), ("a", 30L)).toDF("src", "tok")
+    // 23 possible merges (9 + 9 + 5): no two words share a letter pair
+    val text = Seq((1L, "abcdefghij klmnopqrst"), (2L, "abcdefghij uvwxyz"))
+      .toDF("doc_id", "text")
     def live(iters: Int, loop: Int => DataFrame): Int = {
       OpCache.releaseAll(blocking = true)
       loop(iters).collect()
@@ -105,7 +108,10 @@ class IterateSpec extends SparkSuite {
       // runs an action: the superseded graphs go once the result is read
       ("nndescent", 3, Similarity.nnDescentGraph(emb, "vec_id", "embedding", 4, _)),
       ("waterfill", 4, n => Curation.tokenBudgetWaterfill(
-        docs, "src", col("tok"), Map("a" -> 2), 1, 120L, rounds = n)))
+        docs, "src", col("tok"), Map("a" -> 2), 1, 120L, rounds = n)),
+      ("bpe", 3, Bpe.trainBpe(text, "doc_id", "text", _).vocab),
+      ("mmr", 3, n => Similarity.mmrTopK(emb, emb.filter(col("vec_id") < 2),
+        "vec_id", "embedding", candK = 12, k = n)))
     // What stays live is the loop's inputs plus at most the last settled
     // state, which the lazy result still reads — one frame above a
     // loop that never settled (PageRank settles past the plan budget).

@@ -2,8 +2,9 @@ package graft.core
 
 import graft.SparkSuite
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.FastCut
 
-/** Contract of [[Lineage.cut]] — the round-11 replacement for the
+/** Contract of `FastCut.cut` — the round-11 replacement for the
   * `createDataFrame(df.rdd, df.schema)` lineage cut at every iterative
   * operator site: identical rows and schema and a truncated
   * (leaf-sized) logical plan. A partitioning a loop input must keep
@@ -30,7 +31,7 @@ class LineageSpec extends SparkSuite {
       .select(col("id"), (col("id") % 7).as("k"),
         concat(lit("v"), col("id")).as("s"))
       .groupBy("k").agg(count(lit(1)).as("n"), sum("id").as("t"))
-    val cut = Lineage.cut(df)
+    val cut = FastCut.cut(df)
     assert(cut.schema === df.schema)
     assert(rowsOf(cut) === rowsOf(df))
     // a second action over the same cut frame re-executes identically
@@ -41,7 +42,7 @@ class LineageSpec extends SparkSuite {
     var df = spark.range(100).select(col("id"), (col("id") % 5).as("k"))
     // simulate an iterative loop: without a cut this nests 6 self-joins
     (1 to 6).foreach { _ =>
-      df = Lineage.cut(
+      df = FastCut.cut(
         df.groupBy("k").agg(max("id").as("id"))
           .select(col("id"), (col("id") % 5).as("k")))
     }
@@ -77,7 +78,7 @@ class LineageSpec extends SparkSuite {
   test("cut frames persist and release through OpCache like any frame") {
     OpCache.releaseAll(blocking = true)
     val cut = OpCache.persist(
-      Lineage.cut(spark.range(100).select(col("id"), (col("id") * 2).as("d"))))
+      FastCut.cut(spark.range(100).select(col("id"), (col("id") * 2).as("d"))))
     assert(cut.count() === 100)
     assert(OpCache.liveCount >= 1)
     OpCache.releaseAll(blocking = true)
