@@ -5,7 +5,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Column-level building blocks of the engine, UDF-free so every one of
-  * them stays inside Catalyst codegen.
+  * them stays inside Catalyst codegen. The row-level ones also avoid
+  * lambda functions (`transform`, `filter`, `map_filter`, ...), which
+  * have no generated code and are interpreted row by row.
   *
   * Each function is the Spark-native re-expression of a semantic the
   * reference implements row-at-a-time in pandas (cites point at
@@ -83,65 +85,49 @@ object Exprs {
   /** F10 empty-string→null (`world_bank_api.py:176`). */
   def emptyToNull(c: Column): Column = when(c === "", lit(null)).otherwise(c)
 
-  /** C3 `_resolve_dimensions` (`utils.py:191-218`): fold a
-    * MapType(name→category) column into the canonical `"; "`-joined
-    * dimension string. Null entries are dropped; `_`→space in names;
-    * a case-insensitive category "total" renders as `"All {name}"`;
-    * an empty surviving map renders as `"Total"`. Insertion order of
-    * the map is preserved (Spark map columns keep entry order).
-    */
-  def resolveDimensions(dims: Column): Column = {
-    val cleaned = map_filter(dims, (_, v) => v.isNotNull)
-    val parts = transform(
-      map_entries(cleaned),
-      e => {
-        val name = regexp_replace(e.getField("key"), "_", " ")
-        val value = e.getField("value")
-        when(lower(value) === "total", concat(lit("All "), name))
-          .otherwise(value)
-      })
-    when(size(parts) === 0, lit("Total"))
-      .otherwise(array_join(parts, "; "))
+  /** One entry of [[foldDimensions]]: a key, its value, and whether the
+    * entry counts at all. */
+  final case class Dim(key: Column, value: Column, present: Column = lit(true))
+
+  /** C3 `_resolve_dimensions` (`utils.py:191-218`) over a Python dict
+    * built from `dims` in order: among the present entries a key keeps
+    * its FIRST position and carries its LAST value (`d[k]=v1; d[k]=v2`
+    * leaves k where it was, holding v2). Then entries with a null value
+    * drop; `_`→space in names; a case-insensitive value "total" renders
+    * as `"All {name}"`; the rest join with `"; "`, and nothing left
+    * renders as `"Total"`.
+    *
+    * Unrolled at plan time into `CASE WHEN`, `coalesce` and `concat_ws`
+    * only, so the fold runs inside whole-stage codegen (a `map` with
+    * lambda functions over it is interpreted row by row). The first/last
+    * tests compare every pair of keys, O(n²); keys that are literals
+    * constant-fold, so with keys known at plan time the fold is O(n). */
+  def foldDimensions(dims: Seq[Dim]): Column = {
+    val parts = dims.zipWithIndex.map { case (d, i) =>
+      def same(o: Dim) = o.present && o.key === d.key
+      val first = dims.take(i).foldLeft(d.present)((c, o) => c && !same(o))
+      val last = dims.drop(i + 1).foldLeft(d.value)((v, o) => when(same(o), o.value).otherwise(v))
+      val name = regexp_replace(d.key, "_", " ")
+      when(first && last.isNotNull,
+        when(lower(last) === "total", concat(lit("All "), name)).otherwise(last))
+    }
+    if (parts.isEmpty) lit("Total")
+    else when(coalesce(parts: _*).isNull, lit("Total")).otherwise(concat_ws("; ", parts: _*))
   }
 
   /** R5 `combine_dimensions` (`utils.py:221-248`, `validation.py:109-112`):
     * if the frame has no `dimension` column, build one from all
-    * `dimension_*` columns via [[resolveDimensions]]; with neither,
+    * `dimension_*` columns via [[foldDimensions]]; with neither,
     * the literal `"Total"`. */
   def combineDimensions(df: DataFrame, prefix: String = "dimension_"): DataFrame = {
     if (df.columns.contains("dimension")) df
     else {
       val dimCols = df.columns.filter(_.startsWith(prefix)).toSeq
       if (dimCols.isEmpty) df.withColumn("dimension", lit("Total"))
-      else {
-        val entries = dimCols.flatMap(c =>
-          Seq(lit(c.stripPrefix(prefix)), col(c).cast(StringType)))
-        df.withColumn("dimension", resolveDimensions(map(entries: _*)))
-          .drop(dimCols: _*)
-      }
+      else df.withColumn("dimension", foldDimensions(dimCols.map(c =>
+          Dim(lit(c.stripPrefix(prefix)), col(c).cast(StringType)))))
+        .drop(dimCols: _*)
     }
-  }
-
-  /** Build a map column from an `array<struct<key,value>>` with
-    * Python-dict duplicate-key semantics: the key keeps its FIRST
-    * insertion position but carries the LAST value written
-    * (`d[k]=v1; d[k]=v2` leaves k where it was, holding v2). Spark's
-    * default `spark.sql.mapKeyDedupPolicy=EXCEPTION` makes a plain
-    * `map()`/`transform_keys` throw RUNTIME_ERROR on a collision at
-    * execution time — e.g. two `DimType` slots carrying the same type
-    * (`who_gho_api.py:152-190`'s dict fold silently last-wins), so the
-    * dedup must happen BEFORE the map is built. O(k²) per row — fine
-    * for the ≤dozen-entry dimension maps this serves. */
-  def mapLastWins(entries: Column): Column = {
-    val lastValued = transform(entries, e =>
-      struct(
-        e.getField("key").as("key"),
-        element_at(
-          filter(entries, e2 => e2.getField("key") === e.getField("key")), -1)
-          .getField("value").as("value")))
-    map_from_entries(filter(lastValued, (e, i) =>
-      !exists(slice(entries, lit(1), i),
-        prior => prior.getField("key") === e.getField("key"))))
   }
 
   /** Exact-sum of a double measure: cast each value to DECIMAL(30,6)

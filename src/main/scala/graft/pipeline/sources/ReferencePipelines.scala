@@ -2,6 +2,7 @@ package graft.pipeline.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.pipeline.{Pipeline, Pipelines, Retriever, Settings}
 import graft.sources._
 import graft.storage.Storage
@@ -38,8 +39,16 @@ object ReferencePipelines {
           "format" -> "json", "per_page" -> "1000",
           "date" -> s"$yearMin:$yearMax", "page" -> page.toString)),
         indicators)
-      JsonSources.jsonToDf(spark, rows)
+      JsonSources.jsonToDf(spark, rows, Some(WorldBankApiRetriever.rowSchema))
     }
+  }
+
+  object WorldBankApiRetriever {
+    /** The fields [[graft.transform.WorldBankApiTransformer]] reads, typed
+      * as inference types them. */
+    val rowSchema: StructType = StructType.fromDDL(
+      "country STRUCT<id: STRING, value: STRING>, countryiso3code STRING, date STRING, " +
+        "indicator STRUCT<id: STRING, value: STRING>, value DOUBLE")
   }
 
   final case class WhoGhoRetriever(
@@ -47,16 +56,22 @@ object ReferencePipelines {
       indicators: Map[String, String], // code -> display name
       base: String = "https://ghoapi.azureedge.net/api") extends Retriever {
     override def retrieve(spark: SparkSession, storage: Option[Storage]): DataFrame = {
-      val frames = indicators.toSeq.sortBy(_._1).flatMap { case (code, name) =>
-        val rows = JsonSources.fetchOData(transport, s"$base/$code", Map.empty)
-        if (rows.isEmpty) None
-        else Some(JsonSources.jsonToDf(spark, rows)
-          .withColumn("indicator_name",
-            concat(lit(name), lit(" ["), lit(code), lit("]"))))
+      val frames = indicators.toSeq.sortBy(_._1).map { case (code, name) =>
+        JsonSources.jsonToDf(spark, JsonSources.fetchOData(transport, s"$base/$code", Map.empty),
+          Some(WhoGhoRetriever.rowSchema))
+          .withColumn("indicator_name", lit(s"$name [$code]"))
       }
-      if (frames.isEmpty) spark.emptyDataFrame
-      else frames.reduceLeft(_.unionByName(_, allowMissingColumns = true))
+      frames.reduceOption(_.union(_)).getOrElse(spark.emptyDataFrame)
     }
+  }
+
+  object WhoGhoRetriever {
+    /** The fields [[graft.transform.ODataObservationsTransformer]] reads,
+      * typed as inference types them. A row that omits a `Dim` slot reads
+      * it as null. */
+    val rowSchema: StructType = StructType.fromDDL(
+      "DataSourceDim STRING, Dim1 STRING, Dim1Type STRING, Dim2 STRING, Dim2Type STRING, " +
+        "Dim3 STRING, Dim3Type STRING, NumericValue DOUBLE, SpatialDim STRING, TimeDim BIGINT")
   }
 
   final case class UnstatsSdgApiRetriever(

@@ -16,8 +16,12 @@ import org.json4s.jackson.JsonMethods
   */
 object JsonSources {
 
-  /** Rows-of-JSON → DataFrame with schema inference (executor-side
-    * parse; pass an explicit schema for production stability). */
+  /** Rows-of-JSON → DataFrame, parsed on executors. With a declared
+    * `schema` the read runs no job, and each row is parsed once, by the
+    * action that reads it; a field the row omits reads as null. Without
+    * one, an inference job parses every row first. The World Bank and
+    * WHO GHO retrievers declare their row schema; the SDG API's stays
+    * inferred, because its `dimensions` keys vary by series. */
   def jsonToDf(spark: SparkSession, rows: Seq[String],
       schema: Option[StructType] = None): DataFrame = {
     import spark.implicits._
@@ -129,20 +133,15 @@ object JsonSources {
       }
 
   /** S13 — nested-map payload (reference `imf_datamapper_api.py:73-112`):
-    * `values[indicator][country] = {year: value}` explodes natively:
-    * `from_json` to a 3-level MapType, then three `explode`s — all
-    * executor-side, no driver loops over countries. */
-  def nestedMapToDf(spark: SparkSession, payload: String): DataFrame = {
-    import spark.implicits._
-    val schema = MapType(StringType,
-      MapType(StringType, MapType(StringType, DoubleType)))
-    spark.createDataset(Seq(payload)).toDF("json")
-      .select(explode(from_json(
-        get_json_object(col("json"), "$.values"), schema))
-        .as(Seq("indicator_code", "by_country")))
+    * `values[indicator][country] = {year: value}`, read once under a
+    * declared 3-level MapType and exploded natively — all executor-side,
+    * no driver loops over countries. */
+  def nestedMapToDf(spark: SparkSession, payload: String): DataFrame =
+    jsonToDf(spark, Seq(payload), Some(StructType.fromDDL(
+      "values MAP<STRING, MAP<STRING, MAP<STRING, DOUBLE>>>")))
+      .select(explode(col("values")).as(Seq("indicator_code", "by_country")))
       .select(col("indicator_code"),
         explode(col("by_country")).as(Seq("country_code", "by_year")))
       .select(col("indicator_code"), col("country_code"),
         explode(col("by_year")).as(Seq("year_str", "value")))
-  }
 }

@@ -1,8 +1,9 @@
 package graft.transform
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.expr.Exprs
 import graft.pipeline.Transformer
 
@@ -38,6 +39,31 @@ object WorldBankApiTransformer extends Transformer {
   * `"NaN"`→null (F10), m49→iso3 code mapping (J4), dimensions-dict
   * fold with snake_case names (C2/R4), `"{desc}, {units} [{code}]"`. */
 object UnstatsSdgApiTransformer extends Transformer {
+  /** The `dimensions` fold. The object arrives as an inferred struct,
+    * whose fields are the keys seen across the series; a row's dict
+    * holds its non-null fields in schema order (`to_json`'s), keyed by
+    * the snake-cased name. Snake-casing can collide distinct raw keys
+    * ("Age Group" vs "age  group"); the later one wins, as in the
+    * reference's dict. A non-atomic value renders as its JSON. */
+  def dimension(schema: StructType): Column = {
+    val fields = schema.find(_.name == "dimensions").map(_.dataType) match {
+      case Some(StructType(fs)) => fs.toSeq
+      case _ => Nil
+    }
+    // fields by position: keys that differ only in case ("Sex", "sex")
+    // are two fields, which a by-name access finds ambiguous
+    val byPosition = col("dimensions").cast(StructType(fields.zipWithIndex.map {
+      case (f, i) => f.copy(name = s"_$i")
+    }))
+    when(col("dimensions").isNotNull, Exprs.foldDimensions(fields.zipWithIndex.map { case (f, i) =>
+      val v = byPosition.getField(s"_$i")
+      Exprs.Dim(Exprs.toSnakeCase(lit(f.name)), f.dataType match {
+        case _: StructType | _: ArrayType | _: MapType => to_json(v)
+        case _ => v.cast(StringType)
+      }, v.isNotNull)
+    }))
+  }
+
   override def transform(df: DataFrame): DataFrame = {
     val cleaned = df
       .withColumn("value",
@@ -51,22 +77,8 @@ object UnstatsSdgApiTransformer extends Transformer {
         Exprs.indicatorName(col("seriesDescription"), col("attributes.Units"),
           col("series")))
       .na.drop(Seq("value", "country_code"))
-    // dimensions arrive as a JSON object (inferred struct); re-read as a
-    // map so dynamic per-series keys survive, then snake_case and fold.
-    // Snake-casing can collide distinct raw keys ("Age Group" vs
-    // "age  group") — transform_keys would throw under
-    // mapKeyDedupPolicy=EXCEPTION, so rebuild via mapLastWins (dict parity).
-    val rawMap = from_json(to_json(col("dimensions")),
-      org.apache.spark.sql.types.MapType(
-        org.apache.spark.sql.types.StringType,
-        org.apache.spark.sql.types.StringType))
-    val snakeEntries = org.apache.spark.sql.functions.transform(map_entries(rawMap), e =>
-      struct(
-        regexp_replace(lower(trim(e.getField("key"))), "\\s+", "_").as("key"),
-        e.getField("value").as("value")))
-    val dims = Exprs.mapLastWins(snakeEntries)
     cleaned
-      .withColumn("dimension", Exprs.resolveDimensions(dims))
+      .withColumn("dimension", dimension(df.schema))
       .select(col("indicator_name"), col("country_code"), col("year"),
         col("dimension"), col("value"))
   }

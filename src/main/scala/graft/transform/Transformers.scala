@@ -1,6 +1,6 @@
 package graft.transform
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.expr.Exprs
@@ -59,7 +59,7 @@ final case class WideYearColumnsTransformer(
 
 /** OData observation rows → canonical (reference
   * `who_gho_api.py:152-190`): long-dims fold Dim1..Dim3 + type columns
-  * into one map (R4) rendered by `resolveDimensions` (C3), category
+  * into one dict (R4) rendered by `Exprs.foldDimensions` (C3), category
   * prefix strips (C5), `DATASOURCE_` strip, then the A3 deterministic
   * keep-first dedup with `source` excluded from the key but part of
   * the ordering (subtlety §7.4-8). */
@@ -67,25 +67,21 @@ final case class ODataObservationsTransformer(
     indicatorNameCol: String = "indicator_name",
     dims: Int = 3) extends Transformer {
 
+  /** The Dim1..Dim3 fold: a slot counts once its type is set, even with
+    * a null value, and two slots with the same type last-win, as in the
+    * reference's dict. */
+  def dimension: Column = Exprs.foldDimensions((1 to dims).map { i =>
+    val t = col(s"Dim${i}Type")
+    // build the strip pattern from the category value: anchor it and
+    // escape regex metacharacters so "AGE(GROUP)" strips literally
+    val pattern = concat(lit("^"),
+      regexp_replace(t, "([^A-Za-z0-9])", "\\\\$1"), lit("_"))
+    Exprs.Dim(lower(t), regexp_replace(col(s"Dim$i"), pattern, lit("")), t.isNotNull)
+  })
+
   override def transform(df: DataFrame): DataFrame = {
-    val dimEntries = (1 to dims).map { i =>
-      val t = col(s"Dim${i}Type")
-      val v = col(s"Dim$i")
-      // build the strip pattern from the category value: anchor it and
-      // escape regex metacharacters so "AGE(GROUP)" strips literally
-      val pattern = concat(lit("^"),
-        regexp_replace(t, "([^A-Za-z0-9])", "\\\\$1"), lit("_"))
-      struct(
-        coalesce(lower(t), lit(s"__absent$i")).as("key"),
-        when(t.isNotNull && v.isNotNull,
-          regexp_replace(v, pattern, lit(""))).otherwise(lit(null)).as("value"))
-    }
-    // mapLastWins, not map(): two Dim slots carrying the same DimType
-    // would make a plain map() throw under mapKeyDedupPolicy=EXCEPTION,
-    // where the reference's Python dict silently last-wins.
     val shaped = df
-      .withColumn("dimension",
-        Exprs.resolveDimensions(Exprs.mapLastWins(array(dimEntries: _*))))
+      .withColumn("dimension", dimension)
       .withColumn("source",
         regexp_replace(col("DataSourceDim"), "^DATASOURCE_", ""))
       .select(

@@ -134,19 +134,19 @@ class ExprsPropertySpec extends SparkSuite {
     }
   }
 
-  test("resolveDimensions: never null, 'Total' iff nothing survives") {
+  test("foldDimensions: never null, 'Total' iff nothing survives") {
     val entry = for {
       k <- word
       v <- Gen.option(Gen.oneOf(word, Gen.const("Total"), Gen.const("total")))
     } yield (k, v)
     forAll(Gen.listOfN(4, entry)) { entries =>
       val distinctKeys = entries.toMap.toSeq // unique keys
-      val cols = distinctKeys.flatMap { case (k, v) =>
-        Seq(lit(k), v.map(lit(_)).getOrElse(lit(null)))
+      val dims = distinctKeys.map { case (k, v) =>
+        Exprs.Dim(lit(k), v.map(lit(_)).getOrElse(lit(null)))
       }
       whenever(distinctKeys.nonEmpty) {
         val got = Seq(1).toDF("i")
-          .select(Exprs.resolveDimensions(map(cols: _*))).collect()(0).getString(0)
+          .select(Exprs.foldDimensions(dims)).collect()(0).getString(0)
         assert(got != null)
         val surviving = distinctKeys.filter(_._2.isDefined)
         if (surviving.isEmpty) assert(got == "Total")

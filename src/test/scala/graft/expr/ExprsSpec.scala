@@ -28,14 +28,15 @@ class ExprsSpec extends SparkSuite {
     assert(Exprs.snakeCaseName(" Fossil fuel ENERGY ") == "fossil_fuel_energy")
   }
 
-  test("resolveDimensions: null-drop, total→All, empty→Total, order and underscores") {
+  test("foldDimensions: null-drop, total→All, empty→Total, order and underscores") {
+    import Exprs.Dim
     val df = Seq(1).toDF("i").select(
-      Exprs.resolveDimensions(map(
-        lit("sex"), lit("Female"),
-        lit("age_group"), lit("TOTAL"),
-        lit("edu"), lit(null).cast("string"))).as("d1"),
-      Exprs.resolveDimensions(
-        map(lit("a"), lit(null).cast("string"))).as("d2"))
+      Exprs.foldDimensions(Seq(
+        Dim(lit("sex"), lit("Female")),
+        Dim(lit("age_group"), lit("TOTAL")),
+        Dim(lit("edu"), lit(null).cast("string")))).as("d1"),
+      Exprs.foldDimensions(
+        Seq(Dim(lit("a"), lit(null).cast("string")))).as("d2"))
     val r = df.collect()(0)
     assert(r.getString(0) == "Female; All age group")
     assert(r.getString(1) == "Total")

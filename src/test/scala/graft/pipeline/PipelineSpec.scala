@@ -2,11 +2,16 @@ package graft.pipeline
 
 import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Expression, HigherOrderFunction, JsonToStructs, StructsToJson}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
 import graft.SparkSuite
+import graft.core.Metrics
 import graft.storage.{LocalStorage, Storage}
 import graft.transform.WideYearColumnsTransformer
 
-class PipelineSpec extends SparkSuite {
+class PipelineSpec extends SparkSuite with ReferenceFixtures {
   import spark.implicits._
 
   private def wideFixture = Seq(
@@ -18,6 +23,14 @@ class PipelineSpec extends SparkSuite {
   private case class FixtureRetriever(df: DataFrame) extends Retriever {
     override def retrieve(spark: SparkSession, storage: Option[Storage]): DataFrame = df
   }
+
+  /** Every node of a physical plan, through adaptive stages and caches. */
+  private def nodes(plan: SparkPlan): Seq[SparkPlan] = plan +: (plan match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case s: QueryStageExec => nodes(s.plan)
+    case m: InMemoryTableScanExec => nodes(m.relation.cachedPlan)
+    case other => other.children.flatMap(nodes)
+  })
 
   test("full pipeline: transform → provider → membership filter → validate → year window → write") {
     val tmp = Files.createTempDirectory("graft-pipe").toString
@@ -39,9 +52,6 @@ class PipelineSpec extends SparkSuite {
   }
 
   test("membership filter keeps exactly the member rows, with no broadcast") {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
     val long = Seq[(String, String, Int, Double)](
       ("AFG", "GDP", 2019, 1.0), ("AFG", "GDP", 2020, 2.0), ("NAM", "GDP", 2019, 3.0),
@@ -54,15 +64,32 @@ class PipelineSpec extends SparkSuite {
     assert(out.select("country_code", "year").as[(String, Int)].collect().sorted.toSeq ==
       Seq(("AFG", 2019), ("AFG", 2020), ("NAM", 2019)))
     // every plan the transform ran, the validation cache's included
-    def nodes(plan: SparkPlan): Seq[SparkPlan] = plan +: (plan match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case s: QueryStageExec => nodes(s.plan)
-      case m: InMemoryTableScanExec => nodes(m.relation.cachedPlan)
-      case other => other.children.flatMap(nodes)
-    })
     val broadcasts = nodes(out.queryExecution.executedPlan)
       .collect { case b: BroadcastExchangeLike => b }
     assert(broadcasts.isEmpty, out.queryExecution.executedPlan.treeString)
+  }
+
+  test("plan audit: the fan-in folds in generated code; World Bank and WHO retrieve runs no job") {
+    val fanIn = referenceFixtures :+
+      Pipeline("wdi_fixture", FixtureRetriever(wideFixture), WideYearColumnsTransformer())
+    // the optimized plan, and the plan of every cache it reads
+    def expressions(df: DataFrame): Seq[Expression] =
+      df.queryExecution.optimizedPlan.collect {
+        case m: InMemoryRelation => nodes(m.cachedPlan).flatMap(_.expressions)
+        case p => p.expressions
+      }.flatten
+    val m = Metrics.attach(sc)
+    try fanIn.foreach { p =>
+      val t0 = m.snapshot()
+      val raw = p.retrieve(spark, Some(storage))
+      val jobs = (m.snapshot() - t0).total.jobs
+      if (Set("world_bank_api", "who_gho_api")(p.provider)) assert(jobs == 0, p.provider)
+      val found = expressions(p.transform(spark, raw)).flatMap(_.collect {
+        case e @ (_: HigherOrderFunction | _: JsonToStructs | _: StructsToJson) => e.prettyName
+      })
+      assert(found.isEmpty, s"${p.provider}: ${found.mkString(", ")}")
+    } finally sc.removeSparkListener(m)
+    assert(fanIn.map(_.provider).distinct.size == 13)
   }
 
   test("registry: register/list/get + unknown name error") {

@@ -1,39 +1,15 @@
 package graft.pipeline
 
-import java.nio.file.Files
 import graft.SparkSuite
-import graft.pipeline.sources.ReferencePipelines
-import graft.sources.{CannedTransport, CsvWorkbook, JsonSources, SdmxSources, Transport, Workbook, XlsxTestWriter, XlsxWorkbook}
-import graft.storage.LocalStorage
+import graft.sources.{CannedTransport, JsonSources, Transport, XlsxTestWriter, XlsxWorkbook}
 
 /** End-to-end fixture runs of all twelve reference pipelines
   * (FIXTURES.md shapes A1–A8): canned transports / staged files in,
   * canonical validated observations out. */
-class ReferencePipelinesSpec extends SparkSuite {
-  import spark.implicits._
-
-  private lazy val storage = LocalStorage(
-    Files.createTempDirectory("graft-ref-pipelines").toString)
-
-  private def pipelineNamed(name: String, transport: Transport,
-      sipri: Workbook = CsvWorkbook(Map.empty),
-      eleccap: Workbook = CsvWorkbook(Map.empty)): Pipeline =
-    ReferencePipelines.all(transport,
-      sipriWorkbook = sipri, eleccapWorkbook = eleccap)
-      .find(_.provider == name).get
-
-  private val noTransport = CannedTransport(Map.empty)
+class ReferencePipelinesSpec extends SparkSuite with ReferenceFixtures {
 
   test("world_bank_wdi: wide CSV from storage (A1)") {
-    val raw = Seq(
-      ("Aruba", "ABW", "GDP (current US$)", "NY.GDP.MKTP.CD", null, "3.5e9"),
-      ("Afghanistan", "AFG", "GDP (current US$)", "NY.GDP.MKTP.CD", "1.9e10", "2.0e10"),
-      ("World", "WLD", "GDP (current US$)", "NY.GDP.MKTP.CD", "8e13", "8e13"))
-      .toDF("Country Name", "Country Code", "Indicator Name", "Indicator Code",
-        "2019", "2020")
-    storage.write(raw, "world_bank_wdi_raw", "csv")
-    val out = pipelineNamed("world_bank_wdi", noTransport)
-      .run(spark, Some(storage))
+    val out = worldBankWdi.run(spark, Some(storage))
     val rows = out.select("country_code", "year", "value").collect()
       .map(_.toSeq).toSet
     // ABW not in the packaged country table; WLD filtered; AFG survives
@@ -41,23 +17,7 @@ class ReferencePipelinesSpec extends SparkSuite {
   }
 
   test("world_bank_api: paginated JSON, coalesce chain, fuzzy fallback (A3)") {
-    val base = "https://api.worldbank.org/v2/country/all/indicator/SP.POP.TOTL"
-    def url(page: Int) = Transport.withQuery(base, Map(
-      "format" -> "json", "per_page" -> "1000",
-      "date" -> "2005:2030", "page" -> page.toString))
-    val p1 = """[{"page":1,"pages":2,"total":3},[
-      {"indicator":{"id":"SP.POP.TOTL","value":"Population, total"},
-       "country":{"id":"AF","value":"Afghanistan"},"countryiso3code":"AFG",
-       "date":"2020","value":3.89e7}]]"""
-    val p2 = """[{"page":2,"pages":2,"total":3},[
-      {"indicator":{"id":"SP.POP.TOTL","value":"Population, total"},
-       "country":{"id":"NA","value":"Namibia"},"countryiso3code":"",
-       "date":"2020","value":2.55e6},
-      {"indicator":{"id":"SP.POP.TOTL","value":"Population, total"},
-       "country":{"id":"ZH","value":"Africa"},"countryiso3code":"",
-       "date":"2020Q1","value":1.2e9}]]"""
-    val t = CannedTransport(Map(url(1) -> p1, url(2) -> p2))
-    val out = pipelineNamed("world_bank_api", t).run(spark)
+    val out = worldBankApi.run(spark)
     val rows = out.select("country_code", "year", "value", "indicator_name")
       .collect().map(_.toSeq).toSet
     // NAM resolved by fuzzy name (empty iso3code); quarter row dropped
@@ -67,20 +27,7 @@ class ReferencePipelinesSpec extends SparkSuite {
   }
 
   test("who_gho_api: OData rows, dim fold, keep-first dedup (A2)") {
-    val url = Transport.withQuery("https://ghoapi.azureedge.net/api/WHOSIS_000001",
-      Map("$filter" -> JsonSources.odataFilter(Map.empty)))
-    val body = """{"value":[
-      {"SpatialDim":"AFG","TimeDim":2020,"Dim1":"SEX_MLE","Dim1Type":"SEX",
-       "Dim2":null,"Dim2Type":null,"Dim3":null,"Dim3Type":null,
-       "DataSourceDim":"DATASOURCE_WHS","NumericValue":61.2},
-      {"SpatialDim":"AFG","TimeDim":2020,"Dim1":"SEX_MLE","Dim1Type":"SEX",
-       "Dim2":null,"Dim2Type":null,"Dim3":null,"Dim3Type":null,
-       "DataSourceDim":"DATASOURCE_ALT","NumericValue":61.2},
-      {"SpatialDim":"NAM","TimeDim":2020,"Dim1":null,"Dim1Type":null,
-       "Dim2":null,"Dim2Type":null,"Dim3":null,"Dim3Type":null,
-       "DataSourceDim":"DATASOURCE_WHS","NumericValue":64.0}]}"""
-    val out = pipelineNamed("who_gho_api", CannedTransport(Map(url -> body)))
-      .run(spark)
+    val out = whoGhoApi.run(spark)
     val rows = out.select("country_code", "dimension", "value", "source")
       .collect().map(_.toSeq).toSet
     // keep-first picked the lexicographically-first source; dims folded
@@ -89,21 +36,25 @@ class ReferencePipelinesSpec extends SparkSuite {
       Seq("NAM", "Total", 64.0, "WHS")))
   }
 
+  test("who_gho_api: rows that omit the Dim2/Dim3 keys read them as null") {
+    def run(rows: String*) = {
+      val url = Transport.withQuery("https://ghoapi.azureedge.net/api/WHOSIS_000001",
+        Map("$filter" -> JsonSources.odataFilter(Map.empty)))
+      rowsOf(pipelineNamed("who_gho_api",
+        CannedTransport(Map(url -> rows.mkString("""{"value":[""", ",", "]}")))).run(spark))
+    }
+    val nulls = """"Dim2":null,"Dim2Type":null,"Dim3":null,"Dim3Type":null,"""
+    def row(area: String, dim1: String) =
+      s"""{"SpatialDim":"$area","TimeDim":2020,$dim1""" +
+        """"DataSourceDim":"DATASOURCE_WHS","NumericValue":61.5}"""
+    val sex = """"Dim1":"SEX_MLE","Dim1Type":"SEX","""
+    val omitted = run(row("AFG", sex), row("NAM", ""))
+    assert(omitted == run(row("AFG", sex + nulls), row("NAM", nulls)))
+    assert(omitted.map(r => (r(2), r(4))) == Set(("AFG", "MLE"), ("NAM", "Total")))
+  }
+
   test("unstats_sdg_api: totalPages, NaN→null, m49→iso3, dims dict (A4)") {
-    val base = "https://unstats.un.org/sdgapi/v1/sdg/Series/Data"
-    def url(page: Int) = Transport.withQuery(base, Map(
-      "seriesCode" -> "SI_POV_DAY1", "pageSize" -> "1000", "page" -> page.toString))
-    val p1 = """{"totalPages":1,"data":[
-      {"seriesDescription":"Poverty headcount","series":"SI_POV_DAY1",
-       "geoAreaCode":"004","timePeriodStart":2019.0,"value":"12.5",
-       "attributes":{"Units":"PERCENT"},
-       "dimensions":{"Age":"ALLAGE","Sex":"BOTHSEX"}},
-      {"seriesDescription":"Poverty headcount","series":"SI_POV_DAY1",
-       "geoAreaCode":"516","timePeriodStart":2019.0,"value":"NaN",
-       "attributes":{"Units":"PERCENT"},
-       "dimensions":{"Age":"ALLAGE","Sex":"BOTHSEX"}}]}"""
-    val out = pipelineNamed("unstats_sdg_api", CannedTransport(Map(url(1) -> p1)))
-      .run(spark)
+    val out = unstatsSdgApi.run(spark)
     val rows = out.collect().map(_.toSeq).toSet
     assert(rows == Set(Seq("unstats_sdg_api",
       "Poverty headcount, PERCENT [SI_POV_DAY1]", "AFG", 2019,
@@ -111,16 +62,7 @@ class ReferencePipelinesSpec extends SparkSuite {
   }
 
   test("unstats_sdg_database: dynamic dimension columns, bounds (A4-db)") {
-    val raw = Seq(
-      ("1", "SI_POV_DAY1", "Poverty headcount", "4", "Afghanistan", "2019",
-        "<2.5", "PERCENT", "src", "FEMALE"),
-      ("1", "SI_POV_DAY1", "Poverty headcount", "516", "Namibia", "2019",
-        "17", "PERCENT", "src", "MALE"))
-      .toDF("Goal", "SeriesCode", "SeriesDescription", "GeoAreaCode",
-        "GeoAreaName", "TimePeriod", "Value", "Units", "Source", "[Sex]")
-    storage.write(raw, "unstats_sdg_database_raw", "csv")
-    val out = pipelineNamed("unstats_sdg_database", noTransport)
-      .run(spark, Some(storage))
+    val out = unstatsSdgDatabase.run(spark, Some(storage))
     val rows = out.select("country_code", "dimension", "value").collect()
       .map(_.toSeq).toSet
     assert(rows == Set(
@@ -128,18 +70,7 @@ class ReferencePipelinesSpec extends SparkSuite {
   }
 
   test("unicef_sdmx_api: bounded values, yearly filter, source coalesce (A6)") {
-    val base = "https://sdmx.data.unicef.org/ws/public/sdmxapi/rest/data/UNICEF,GLOBAL_DATAFLOW,1.0"
-    val key = SdmxSources.keyPath(Seq("REF_AREA", "INDICATOR", "SEX"),
-      Map("INDICATOR" -> Seq("CME_MRY0T4")))
-    val url = Transport.withQuery(s"$base/$key",
-      SdmxSources.periodParams(2005, 2030))
-    val csv =
-      """REF_AREA,INDICATOR,Sex,TIME_PERIOD,OBS_VALUE,DATA_SOURCE,SOURCE_LINK
-        |AFG,CME_MRY0T4,Female,2020,<1,,https://childmortality.org
-        |AFG,CME_MRY0T4,Male,2020-06,44,UN IGME,
-        |NAM,CME_MRY0T4,Total,2019,>95%,UN IGME,""".stripMargin
-    val out = pipelineNamed("unicef_sdmx_api", CannedTransport(Map(url -> csv)))
-      .run(spark)
+    val out = unicefSdmxApi.run(spark)
     val rows = out.select("country_code", "year", "dimension", "value", "source")
       .collect().map(_.toSeq).toSet
     assert(rows == Set(
@@ -148,19 +79,7 @@ class ReferencePipelinesSpec extends SparkSuite {
   }
 
   test("ilo_sdmx_api: FREQ/AGGREGATE filters, codelist decode (A6-ilo)") {
-    val base = "https://sdmx.ilo.org/rest/data/ILO,DF_EMP_DWAP_SEX_AGE_RT"
-    val key = SdmxSources.keyPath(Seq("FREQ", "REF_AREA", "SEX", "AGE"),
-      Map("FREQ" -> Seq("A")))
-    val url = Transport.withQuery(s"$base/$key",
-      SdmxSources.periodParams(2005, 2030))
-    val csv =
-      """REF_AREA,FREQ,SEX,AGE,TIME_PERIOD,OBS_VALUE,SOURCE
-        |AFG,A,SEX_M,AGE_AGGREGATE_TOTAL,2020,47.2,ILOSTAT
-        |AFG,M,SEX_M,AGE_AGGREGATE_TOTAL,2020,48.0,ILOSTAT
-        |NAM,A,SEX_F,,2019,51.5,ILOSTAT
-        |KEN,A,SEX_F,AGE_5YRBANDS_Y15-19,2019,9.9,ILOSTAT""".stripMargin
-    val out = pipelineNamed("ilo_sdmx_api", CannedTransport(Map(url -> csv)))
-      .run(spark)
+    val out = iloSdmxApi.run(spark)
     val rows = out.select("country_code", "year", "dimension", "value")
       .collect().map(_.toSeq).toSet
     // monthly row out; null AGE passes the contains-filter; 5-yr band out
@@ -170,12 +89,7 @@ class ReferencePipelinesSpec extends SparkSuite {
   }
 
   test("imf_datamapper_api: nested-map explode (A5)") {
-    val url = Transport.withQuery(
-      "https://www.imf.org/external/datamapper/api/v1/NGDP_RPCH", Map.empty)
-    val body = """{"values":{"NGDP_RPCH":{"USA":{"2019":2.3,"2020":-2.8},
-      "NAM":{"2019":1.1}}}}"""
-    val out = pipelineNamed("imf_datamapper_api", CannedTransport(Map(url -> body)))
-      .run(spark)
+    val out = imfDatamapperApi.run(spark)
     val rows = out.select("country_code", "year", "value").collect()
       .map(_.toSeq).toSet
     assert(rows == Set(
@@ -183,17 +97,7 @@ class ReferencePipelinesSpec extends SparkSuite {
   }
 
   test("sipri_milex: multi-sheet workbook, header inference, melt (A7)") {
-    val sheet1 =
-      """SIPRI military expenditure database,,
-        |Country,2019,2020
-        |Afghanistan,1.9,xxx
-        |Namibia,3.1,3.3""".stripMargin
-    val sheet2 =
-      """Country,2019,2020
-        |Afghanistan,0.011,...""".stripMargin
-    val wb = CsvWorkbook(Map(
-      "Constant (2023) US$" -> sheet1, "Share of GDP" -> sheet2))
-    val out = pipelineNamed("sipri_milex", noTransport, sipri = wb).run(spark)
+    val out = sipriMilex.run(spark)
     val rows = out.select("indicator_name", "country_code", "year", "value")
       .collect().map(_.toSeq).toSet
     assert(rows == Set(
@@ -229,18 +133,7 @@ class ReferencePipelinesSpec extends SparkSuite {
   }
 
   test("unaids_kpatlas: subgroup filters and keep-none dedup (A8)") {
-    val raw = Seq(
-      ("HIV prevalence", "Total", "AFG", "2020", "0.1", "UNAIDS", "%", "HIV_PREV"),
-      ("HIV prevalence", "Category: adults", "AFG", "2020", "0.2", "UNAIDS", "%", "HIV_PREV"),
-      ("HIV prevalence", "Total", "NAM", "2020", "11.6", "UNAIDS", "%", "HIV_PREV"),
-      ("Condom use", "Sex workers", "NAM", "2020", "81", "UNAIDS", "%", "CONDOM"),
-      // duplicated key -> keep-none eliminates BOTH rows
-      ("ART coverage", "Total", "KEN", "2020", "75", "UNAIDS", "%", "ART"),
-      ("ART coverage", "Total", "KEN", "2020", "76", "UNAIDS", "%", "ART"))
-      .toDF("Indicator", "Subgroup", "Area ID", "Time Period", "Data Value",
-        "Source", "Unit", "Code")
-    storage.write(raw, "unaids_kpatlas_raw", "csv")
-    val out = pipelineNamed("unaids_kpatlas", noTransport).run(spark, Some(storage))
+    val out = unaidsKpatlas.run(spark, Some(storage))
     val rows = out.select("country_code", "dimension", "value").collect()
       .map(_.toSeq).toSet
     // Category-prefixed subgroup dropped; single-subgroup indicator kept;
@@ -253,14 +146,7 @@ class ReferencePipelinesSpec extends SparkSuite {
   }
 
   test("healthdata_ghdx: fuzzy names + SexEnum recode") {
-    val raw = Seq(
-      ("Deaths", "Rate", "All causes", "Afghanistan", "male", "All ages", "2019", "717.5"),
-      ("Deaths", "Rate", "All causes", "Vietnam", "both", "All ages", "2019", "546.1"),
-      ("Deaths", "Rate", "All causes", "Atlantis", "female", "All ages", "2019", "1.0"))
-      .toDF("measure_name", "metric_name", "cause_name", "location_name",
-        "sex_name", "age_name", "year", "val")
-    storage.write(raw, "healthdata_ghdx_raw", "csv")
-    val out = pipelineNamed("healthdata_ghdx", noTransport).run(spark, Some(storage))
+    val out = healthdataGhdx.run(spark, Some(storage))
     val rows = out.select("country_code", "dimension", "value").collect()
       .map(_.toSeq).toSet
     assert(rows == Set(
@@ -269,14 +155,7 @@ class ReferencePipelinesSpec extends SparkSuite {
   }
 
   test("energydata_info: header offset, ffill over merged cells, sentinels") {
-    val sheet =
-      """Installed capacity (ELECCAP),,,,
-        |Country,Technology,Grid,2019,2020
-        |Afghanistan,Hydro,On,120,130
-        |,Solar,On,..,15
-        |Namibia,Hydro,On,340,..""".stripMargin
-    val wb = CsvWorkbook(Map("Sheet1" -> sheet))
-    val out = pipelineNamed("energydata_info", noTransport, eleccap = wb).run(spark)
+    val out = energydataInfo.run(spark)
     val rows = out.select("country_code", "year", "dimension", "value")
       .collect().map(_.toSeq).toSet
     // merged-cell blank country forward-filled to Afghanistan; ".." dropped
