@@ -25,10 +25,8 @@ import org.apache.spark.sql.types.LongType
   */
 object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    try {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    } catch { case _: Throwable => () }
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     val df = spark.read.parquet(s"$dir/$name.parquet")
     if (name == "events" && df.schema("ts").dataType == LongType)
       df.withColumn("ts", timestamp_micros(expr("ts div 1000")))

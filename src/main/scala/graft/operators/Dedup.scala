@@ -1496,11 +1496,22 @@ object Dedup {
   def winnowingContamination(
       docs: DataFrame, bench: DataFrame,
       idCol: String, textCol: String,
+      n: Int = 3, window: Int = 4): DataFrame =
+    contaminationByFingerprints(docs,
+      winnowingFingerprints(bench, idCol, textCol, n, window)
+        .select(col("fp")).distinct(),
+      idCol, textCol, n, window)
+
+  /** [[winnowingContamination]] against a benchmark fingerprint set
+    * (`fp`, distinct, winnowed with the same `n` and `window`) built
+    * once and held, as an ingest gate holds it across micro-batches:
+    * (doc_id, n_shared_fp) for every document of `docs`. */
+  def contaminationByFingerprints(
+      docs: DataFrame, benchFp: DataFrame,
+      idCol: String, textCol: String,
       n: Int = 3, window: Int = 4): DataFrame = {
-    val cfp = winnowingFingerprints(docs, idCol, textCol, n, window)
-    val bfp = winnowingFingerprints(bench, idCol, textCol, n, window)
-      .select(col("fp")).distinct()
-    val hits = cfp.join(broadcast(bfp), Seq("fp"), "left_semi")
+    val hits = winnowingFingerprints(docs, idCol, textCol, n, window)
+      .join(broadcast(benchFp), Seq("fp"), "left_semi")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).cast("long").as("n_shared_fp"))
     docs.select(col(idCol).as("doc_id"))

@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DecimalType
+import graft.expr.Exprs.exactSum
 
 /** Classifier / scorer evaluation — the measurement half of the
   * learned-filter loop ([[Logit]], [[Curation.curateWithClassifier]],
@@ -195,8 +196,7 @@ object Eval {
       .agg(
         count(lit(1)).cast("long").as("n"),
         sum(col("y")).cast("long").as("n_pos"),
-        round((sum(col("score").cast(DecimalType(30, 6)))
-          .cast(DoubleType) / count(lit(1))), 6).as("mean_score"),
+        round(exactSum(col("score")) / count(lit(1)), 6).as("mean_score"),
         round(sum(col("y")).cast("double") / count(lit(1)), 6).as("frac_pos"))
   }
 }

@@ -72,7 +72,7 @@ object Logit {
   /** Score `docs` with a trained model — the SERVE half, stateless and
     * embarrassingly parallel (one broadcast join + one per-doc agg), so
     * it runs unchanged inside a streaming micro-batch
-    * ([[graft.streaming.EventStreams.logitScoreFeed]]).
+    * ([[graft.streaming.EventStreams.appendEach]], qst18).
     *
     * @return (doc_id, score, pred) — score = σ̂(gain·⟨w,x⟩+b) rounded
     *         to 6, pred = 1 iff score ≥ 0.5. `buckets`/`gain` must

@@ -141,7 +141,7 @@ object Overlap {
     * gram-hash set (gh), counted with multiplicity corpus-wide. Build
     * once over the reference corpus, persist, serve many times —
     * batch ([[spanRewriteWithModel]]) or streaming
-    * ([[graft.streaming.EventStreams.spanRewriteFeed]]). */
+    * ([[graft.streaming.EventStreams.appendEach]], qst19). */
   def duplicatedGrams(
       docs: DataFrame, idCol: String, textCol: String,
       n: Int = 5): DataFrame = {

@@ -1527,6 +1527,51 @@ object Similarity {
     (v, muv)
   }
 
+  /** Embedding-drift row for one batch of vectors: each projects onto
+    * the frozen [[pcaAxisWithMean]] axis, and the batch yields one
+    * (grp, n, mean_proj, var_proj) row. A new embedding-model version,
+    * a mix shift or an upstream preprocessing change moves the
+    * projection distribution within one batch: the embedding-space
+    * twin of the profile-drift canary.
+    *
+    * One dim-keyed broadcast join + per-vector hash agg (the
+    * [[pcaProjection]] pass), then the exact-sum variance dag:
+    * projections quantize to DECIMAL(30,6) before the order-invariant
+    * sums, so the row is bit-reproducible at any partitioning.
+    *
+    * @param axis (dim, v) — the trained component
+    * @param muv  1-row (muv) — the axis·mean dot from training
+    * @param grp  batch identifier expression (constant within `vecs`)
+    */
+  def pcaDriftStats(
+      vecs: DataFrame, idCol: String, vecCol: String,
+      axis: DataFrame, muv: DataFrame, grp: Column): DataFrame = {
+    import graft.expr.Exprs.exactSum
+    val cq = vecs
+      .select(col(idCol).as("vec_id"),
+        posexplode(col(vecCol)).as(Seq("dim", "xf")))
+      .select(col("vec_id"), col("dim"),
+        col("xf").cast("double").as("x"))
+      .join(broadcast(axis), Seq("dim"))
+      .groupBy(col("vec_id"))
+      .agg(exactSum(col("x") * col("v")).as("xv"))
+      .crossJoin(broadcast(muv))
+      .select((col("xv") - col("muv"))
+        .cast(org.apache.spark.sql.types.DecimalType(30, 6))
+        .as("cq"))
+    val stats = cq.agg(
+      count(lit(1)).cast("long").as("n"),
+      sum(col("cq")).cast("double").as("sx"),
+      exactSum(col("cq").cast("double") * col("cq").cast("double"))
+        .as("sxx"))
+      .select(col("n"),
+        round(col("sx") / col("n"), 6).as("mean_proj"),
+        round((col("sxx") - col("sx") * col("sx") / col("n"))
+          / col("n"), 6).as("var_proj"))
+    stats.crossJoin(broadcast(vecs.agg(min(grp).as("grp"))))
+      .select(col("grp"), col("n"), col("mean_proj"), col("var_proj"))
+  }
+
   /** Per-vector projection onto the [[pcaComponent]] axis:
     * (vec_id, proj) with proj = ⟨x − μ, v⟩ rounded to 6 — the 1-D
     * coordinate used for drift histograms and extreme-sample audits.

@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import graft.expr.Exprs.exactSum
 
 /** Grouped statistical model fitting — the feature-engineering /
   * trend-extraction stage of an analytics pipeline (per-indicator trend
@@ -10,9 +10,6 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   * over fact tables).
   */
 object Stats {
-
-  private def dsum(c: Column): Column =
-    sum(c.cast(DecimalType(30, 6))).cast(DoubleType)
 
   /** Per-group ordinary-least-squares fit y = slope·x + intercept with
     * the coefficient of determination r².
@@ -73,8 +70,8 @@ object Stats {
       .agg(
         count(lit(1)).cast("double").as("n"),
         min(col("x")).as("mn"),
-        dsum(col("x")).as("sx"),
-        dsum(col("i").cast("double") * col("x")).as("six"))
+        exactSum(col("x")).as("sx"),
+        exactSum(col("i").cast("double") * col("x")).as("six"))
     st.select(
         col(keyCol),
         col("n").cast("long").as("n"),
@@ -96,9 +93,9 @@ object Stats {
       .groupBy(col(keyCol))
       .agg(
         count(lit(1)).cast("double").as("n"),
-        dsum(x).as("sx"), dsum(y).as("sy"),
-        dsum(x * x).as("sxx"), dsum(y * y).as("syy"),
-        dsum(x * y).as("sxy"))
+        exactSum(x).as("sx"), exactSum(y).as("sy"),
+        exactSum(x * x).as("sxx"), exactSum(y * y).as("syy"),
+        exactSum(x * y).as("sxy"))
     val dx = col("n") * col("sxx") - col("sx") * col("sx")
     val dy = col("n") * col("syy") - col("sy") * col("sy")
     val cov = col("n") * col("sxy") - col("sx") * col("sy")

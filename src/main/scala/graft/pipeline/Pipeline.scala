@@ -6,18 +6,16 @@ import graft.core.Countries
 import graft.storage.Storage
 import graft.validate.Validation
 
-/** Engine settings (reference `settings.py`): global year window and
-  * HTTP timeout, environment-overridable. */
+/** Engine settings (reference `settings.py`): the global year window,
+  * environment-overridable. */
 final case class Settings(
     yearMin: Int = 2005,
-    yearMax: Int = 2030,
-    httpTimeoutSeconds: Int = 30)
+    yearMax: Int = 2030)
 
 object Settings {
   def fromEnv(env: Map[String, String] = sys.env): Settings = Settings(
     yearMin = env.get("GRAFT_YEAR_MIN").map(_.toInt).getOrElse(2005),
-    yearMax = env.get("GRAFT_YEAR_MAX").map(_.toInt).getOrElse(2030),
-    httpTimeoutSeconds = env.get("GRAFT_TIMEOUT").map(_.toInt).getOrElse(30))
+    yearMax = env.get("GRAFT_YEAR_MAX").map(_.toInt).getOrElse(2030))
 }
 
 /** A source retriever (reference `BaseRetriever`, `_base.py:34-104`):

@@ -547,7 +547,6 @@ object StreamingQueries {
         "over the batch table - bit-exact including the estimate.",
       (s, dir) => {
         graft.functions.GraftFunctions.register(s)
-        s.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         val schema = StructType.fromDDL(
           "doc_id BIGINT, text STRING, lang STRING, source STRING, " +
             "n_chars BIGINT")
@@ -624,8 +623,9 @@ object StreamingQueries {
 
     Q(
       "qst16_stream_erasure",
-      "Streaming subject-erasure feed (EventStreams.erasureFeed - " +
-        "qw17's compliance pipeline run LIVE): deletion requests " +
+      "Streaming subject-erasure feed (Erasure.erasurePlan per " +
+        "micro-batch via EventStreams.appendEach - qw17's compliance " +
+        "pipeline run LIVE): deletion requests " +
         "(c_custkey % 97 = 0) arrive as a file stream DELIVERED TWICE " +
         "(two unioned streams - at-least-once upstream), each " +
         "micro-batch stream-static semi-joins the warehouse tables " +
@@ -636,7 +636,6 @@ object StreamingQueries {
         "consumer's distinct absorbs it (delete executors are " +
         "idempotent anyway). Oracle = qw17's batch manifest.",
       (s, dir) => {
-        s.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         val schema = StructType.fromDDL(
           "c_custkey BIGINT, c_name STRING, c_nationkey INT, " +
             "c_acctbal DOUBLE, c_mktsegment STRING")
@@ -646,11 +645,13 @@ object StreamingQueries {
           .select(col("c_custkey").as("k"))
         val out = java.nio.file.Files
           .createTempDirectory("graft_erasure").toString
-        EventStreams.erasureFeed(requests.union(requests),
-          graft.core.Tables.load(s, dir, "customer"),
-          graft.core.Tables.load(s, dir, "orders"),
-          graft.core.Tables.load(s, dir, "lineitem"),
-          out)
+        val customer = graft.core.Tables.load(s, dir, "customer")
+        val orders = graft.core.Tables.load(s, dir, "orders")
+        val lineitem = graft.core.Tables.load(s, dir, "lineitem")
+        EventStreams.appendEach(requests.union(requests),
+            "graft_erasure_feed", out) { b =>
+          graft.warehouse.Erasure.erasurePlan(customer, orders, lineitem, b)
+        }
         s.read.parquet(out).distinct()
       },
       // DISTINCT on both sides: the streamed manifest is the deduped
@@ -675,8 +676,9 @@ object StreamingQueries {
 
     Q(
       "qst17_stream_dsir",
-      "Streaming DSIR scoring (EventStreams.dsirScoreFeed - qt32's " +
-        "scorer run LIVE): the (bucket, lam) model trains offline on " +
+      "Streaming DSIR scoring (Curation.importanceScore per " +
+        "micro-batch via EventStreams.appendEach - qt32's scorer run " +
+        "LIVE): the (bucket, lam) model trains offline on " +
         "the static pool (target = src0) and loads once; raw-pool " +
         "documents arrive as a file stream DELIVERED TWICE, each " +
         "micro-batch scored statelessly against the broadcast model " +
@@ -699,8 +701,10 @@ object StreamingQueries {
           .filter(col("source") =!= "src0")
         val out = java.nio.file.Files
           .createTempDirectory("graft_dsir").toString
-        EventStreams.dsirScoreFeed(raw.union(raw), model,
-          "doc_id", "text", out)
+        EventStreams.appendEach(raw.union(raw), "graft_dsir_feed", out) { b =>
+          graft.operators.Curation.importanceScore(
+            b.dropDuplicates(Seq("doc_id")), "doc_id", "text", model)
+        }
         s.read.parquet(out).distinct()
       },
       Some(s"""WITH tokl AS MATERIALIZED (
@@ -738,8 +742,9 @@ object StreamingQueries {
 
     Q(
       "qst18_stream_quality_score",
-      "Streaming quality-classifier serve (EventStreams." +
-        "logitScoreFeed - qt33's TRAINED model run LIVE): the " +
+      "Streaming quality-classifier serve (Logit.score per " +
+        "micro-batch via EventStreams.appendEach - qt33's TRAINED " +
+        "model run LIVE): the " +
         "(weights, bias) model trains offline on the static corpus " +
         "(4 GD rounds, 4096 buckets, lang='en' distillation) and " +
         "loads once; documents arrive as a file stream DELIVERED " +
@@ -765,16 +770,19 @@ object StreamingQueries {
           .parquet(s"$dir/documents.parque*")
         val out = java.nio.file.Files
           .createTempDirectory("graft_logit").toString
-        EventStreams.logitScoreFeed(raw.union(raw), model,
-          "doc_id", "text", out, buckets = 4096, gain = 8.0)
+        EventStreams.appendEach(raw.union(raw), "graft_logit_feed", out) { b =>
+          graft.operators.Logit.score(b.dropDuplicates(Seq("doc_id")),
+            "doc_id", "text", model, buckets = 4096)
+        }
         s.read.parquet(out).distinct()
       },
       Some(TextQueries.logitOracle(withLabel = false, rounds = 4))),
 
     Q(
       "qst19_stream_span_rewrite",
-      "Streaming duplicated-span rewrite (EventStreams.spanRewriteFeed " +
-        "- qd32's model/apply split run LIVE): the duplicated-gram " +
+      "Streaming duplicated-span rewrite (Overlap.spanRewriteWithModel " +
+        "per micro-batch via EventStreams.appendEach - qd32's " +
+        "model/apply split run LIVE): the duplicated-gram " +
         "set (8-byte hashes, corpus-counted with multiplicity) builds " +
         "offline and loads once; documents arrive as a file stream " +
         "DELIVERED TWICE, each micro-batch rewritten statelessly " +
@@ -795,8 +803,10 @@ object StreamingQueries {
           .parquet(s"$dir/documents.parque*")
         val out = java.nio.file.Files
           .createTempDirectory("graft_span").toString
-        EventStreams.spanRewriteFeed(raw.union(raw), dup,
-          "doc_id", "text", out, n = 5)
+        EventStreams.appendEach(raw.union(raw), "graft_span_feed", out) { b =>
+          graft.operators.Overlap.spanRewriteWithModel(
+            b.dropDuplicates(Seq("doc_id")), "doc_id", "text", 5, dup)
+        }
         s.read.parquet(out).distinct()
       },
       Some(TextQueries.spanRewriteOracle)),
@@ -1001,8 +1011,9 @@ object StreamingQueries {
     Q(
       "qst24_stream_decontam_gate",
       "Streaming benchmark-decontamination GATE " +
-        "(EventStreams.decontaminationGateFeed — qt17's exclusion " +
-        "stage at the ingest door): the benchmark fingerprint set " +
+        "(Dedup.contaminationByFingerprints per micro-batch via " +
+        "EventStreams.appendEach — qt17's exclusion stage at the " +
+        "ingest door): the benchmark fingerprint set " +
         "(doc_id % 50 = 0, winnowed) loads once; corpus docs arrive " +
         "TWICE via two staged files and each batch fingerprints " +
         "itself, broadcast-semi-joins the frozen set, and emits " +
@@ -1021,8 +1032,12 @@ object StreamingQueries {
         val batch = docs.filter(pmod(col("doc_id"), lit(50)) =!= 0)
         val out = java.nio.file.Files
           .createTempDirectory("graft_dg_out").toString
-        EventStreams.decontaminationGateFeed(stagedStream(s, batch, batch),
-          benchFp, "doc_id", "text", out)
+        EventStreams.appendEach(stagedStream(s, batch, batch),
+            "graft_decontam_gate", out) { b =>
+          graft.operators.Dedup.contaminationByFingerprints(
+            b.dropDuplicates(Seq("doc_id")), benchFp, "doc_id", "text")
+            .withColumn("admitted", col("n_shared_fp") === 0L)
+        }
         s.read.parquet(out).distinct()
       },
       Some(s"""WITH wd AS (
@@ -1155,8 +1170,7 @@ object StreamingQueries {
           .join(broadcast(dim), Seq("event_type"))
           .groupBy(col("category"))
           .agg(count(lit(1)).as("n"),
-            sum(col("value").cast(org.apache.spark.sql.types.DecimalType(30, 6)))
-              .cast("double").as("total_value"))
+            graft.expr.Exprs.exactSum(col("value")).as("total_value"))
         runToMemory(s, "graft_stream_static", "complete")(agg)
       },
       Some("""WITH dim(event_type, category) AS (VALUES
@@ -1170,7 +1184,8 @@ object StreamingQueries {
 
     Q(
       "qst10_stream_ann_serve",
-      "Streaming ANN serving (EventStreams.annServe): the stored SQ " +
+      "Streaming ANN serving (Similarity.scalarQuantTopKWithIndex per " +
+        "micro-batch via EventStreams.appendEach): the stored SQ " +
         "index (calibration + int8 codes, parquet round-trip) loads " +
         "once; query vectors arrive as a file stream split across TWO " +
         "micro-batches (maxFilesPerTrigger=1, disjoint halves), each " +
@@ -1193,8 +1208,10 @@ object StreamingQueries {
         val stream = stagedStream(s,
           em.filter(pmod(col("vec_id"), lit(50)) === 0),
           em.filter(pmod(col("vec_id"), lit(50)) === 25))
-        EventStreams.annServe(stream, index, "vec_id", "embedding",
-          k = 10, out)
+        EventStreams.appendEach(stream, "graft_ann_serve", out) { b =>
+          graft.operators.Similarity.scalarQuantTopKWithIndex(
+            index, b, "vec_id", "embedding", 10)
+        }
         s.read.parquet(out)
       },
       Some(s"""WITH ${SimilarityQueries.sqCtes},
@@ -1210,7 +1227,8 @@ object StreamingQueries {
     Q(
       "qst29_stream_semantic_gate",
       "Streaming SEMANTIC-decontamination gate " +
-        "(EventStreams.semanticGateFeed - qst24's twin for the " +
+        "(Similarity.semanticLeakageReportIndexed per micro-batch " +
+        "via EventStreams.appendEach - qst24's twin for the " +
         "embedding channel; qt42's semantic half at the ingest " +
         "door): the benchmark's IVF index (vec_id % 50 = 0, stride " +
         "3) loads once and stays FROZEN; corpus embeddings arrive " +
@@ -1235,8 +1253,18 @@ object StreamingQueries {
         val stream = stagedStream(s, batch, batch)
         val out = java.nio.file.Files
           .createTempDirectory("graft_sg_out").toString
-        EventStreams.semanticGateFeed(stream, idx, "vec_id", "embedding",
-          out, threshold = 0.5, nProbe = 2)
+        // ingest and benchmark ids are independent id spaces, so an
+        // id-colliding pair is scored like any other (excludeSelf off)
+        EventStreams.appendEach(stream, "graft_semantic_gate", out) { batch =>
+          val b = batch.dropDuplicates(Seq("vec_id"))
+          val rep = graft.operators.Similarity.semanticLeakageReportIndexed(
+            idx, b, "vec_id", "embedding", threshold = 0.5, nProbe = 2)
+            .select(col("vec_id"), col("max_cos"))
+          b.select(col("vec_id"))
+            .join(rep, Seq("vec_id"), "left")
+            .select(col("vec_id"), col("max_cos"),
+              (col("max_cos").isNull || col("max_cos") < 0.5).as("admitted"))
+        }
         s.read.parquet(out).distinct()
       },
       Some(s"""WITH e AS (
@@ -2560,7 +2588,8 @@ object StreamingQueries {
 
     Q(
       "qst26_stream_scorer_auc",
-      "Streaming SCORER-HEALTH canary (EventStreams.scorerAucFeed — " +
+      "Streaming SCORER-HEALTH canary (Eval.aucReport per " +
+        "micro-batch via EventStreams.appendEach — " +
         "qt37's AUC at the ingest door): the labeled audit stream " +
         "arrives in two parity-staged batches; each batch scores " +
         "itself (qt02's type-token ratio vs the lang='en' labeling) " +
@@ -2578,12 +2607,16 @@ object StreamingQueries {
         val out = java.nio.file.Files
           .createTempDirectory("graft_auc_out").toString
         val t = split(coalesce(col("text"), lit("")), " ")
-        EventStreams.scorerAucFeed(stream,
-          score = size(array_distinct(t)).cast("double") /
-            size(t).cast("double"),
-          label = (col("lang") === "en").cast("int"),
-          grp = pmod(col("doc_id"), lit(2)),
-          outDir = out)
+        EventStreams.appendEach(stream, "graft_scorer_auc", out) { batch =>
+          val scored = batch.select(
+            (size(array_distinct(t)).cast("double") / size(t).cast("double"))
+              .as("score"),
+            (col("lang") === "en").cast("int").as("label"),
+            pmod(col("doc_id"), lit(2)).as("grp"))
+          graft.operators.Eval.aucReport(scored, "label", "score")
+            .crossJoin(broadcast(scored.agg(min(col("grp")).as("grp"))))
+            .select(col("grp"), col("n_pos"), col("n_neg"), col("auc"))
+        }
         s.read.parquet(out).distinct()
       },
       Some("""WITH s AS (
@@ -2665,7 +2698,8 @@ object StreamingQueries {
     Q(
       "qst28_stream_embedding_drift",
       "Streaming EMBEDDING-DRIFT monitor " +
-        "(EventStreams.embeddingDriftFeed — qst23's canary in " +
+        "(Similarity.pcaDriftStats per micro-batch via " +
+        "EventStreams.appendEach — qst23's canary in " +
         "embedding space): vectors arrive in two parity batches and " +
         "each projects onto the FROZEN qs31 axis (trained offline on " +
         "the reference corpus), emitting one (grp, n, mean_proj, " +
@@ -2684,8 +2718,10 @@ object StreamingQueries {
           em.filter(pmod(col("vec_id"), lit(2)) === 1))
         val out = java.nio.file.Files
           .createTempDirectory("graft_ed_out").toString
-        EventStreams.embeddingDriftFeed(stream, "vec_id", "embedding",
-          v, muv, pmod(col("vec_id"), lit(2)), out)
+        EventStreams.appendEach(stream, "graft_embedding_drift", out) { b =>
+          graft.operators.Similarity.pcaDriftStats(b, "vec_id", "embedding",
+            v, muv, pmod(col("vec_id"), lit(2)))
+        }
         s.read.parquet(out).distinct()
       },
       Some(s"""WITH ${SimilarityQueries.pcaCtes},

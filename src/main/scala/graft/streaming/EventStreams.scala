@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import graft.core.{Jobs, OpCache}
+import graft.expr.Exprs.exactSum
 import graft.operators.Dedup.CorpusIndex
 
 /** Structured Streaming operators over the event stream (greenfield —
@@ -104,6 +105,24 @@ object EventStreams {
     state
   }
 
+  /** The stateless feed: runs `input` to completion as `name` on the
+    * [[drain]] driver with no state, and appends `step` of each
+    * micro-batch to the parquet directory `outDir`.
+    *
+    * A step reads only its batch and frames the caller built before
+    * the stream started (a stored index, a trained model, warehouse
+    * tables, a benchmark fingerprint set), so batch boundaries cannot
+    * change any output row, and at-least-once upstream delivery
+    * re-emits identical rows for a re-delivered input; the consumer's
+    * `distinct`, or a sink keyed on the output's key, absorbs them. A
+    * step whose operator adds up per id (bucket counts, a score)
+    * dedups its batch by id first, since a copy inside one batch
+    * would count twice; that dedup is batch-local. Frames the step
+    * persists are released after each batch. */
+  def appendEach(input: DataFrame, name: String, outDir: String)(
+      step: DataFrame => DataFrame): Unit =
+    drain(input, name, ())((b, _) => step(b).write.mode("append").parquet(outDir))
+
   /** Watermarked tumbling-window aggregation (`readStream` →
     * `groupBy(window(...))` → `writeStream`): late data beyond the
     * watermark is dropped, state is bounded. The measure sum goes
@@ -113,9 +132,7 @@ object EventStreams {
     events
       .withWatermark("ts", watermark)
       .groupBy(window(col("ts"), "1 hour").as("win"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(org.apache.spark.sql.types.DecimalType(30, 6)))
-          .cast("double").as("total_value"))
+      .agg(count(lit(1)).as("n"), exactSum(col("value")).as("total_value"))
       .select(col("win.start").as("hour"), col("event_type"),
         col("n"), col("total_value"))
 
@@ -246,118 +263,6 @@ object EventStreams {
     }._1
   }
 
-  /** Streaming ANN serving — the query-side loop of a similarity
-    * service: the corpus artifacts (a STORED
-    * [[graft.operators.Similarity.SqIndex]] — calibration + int8
-    * codes) load once, and each micro-batch of query vectors probes
-    * them via [[graft.operators.Similarity.scalarQuantTopKWithIndex]],
-    * appending its top-k rows to `outDir`. Stateless per query — no
-    * cross-batch streaming state at all, so batch boundaries cannot
-    * change any query's result (asserted by the registry query, which
-    * splits the query set across two micro-batches and compares
-    * against the single-batch oracle). At-least-once upstream delivery re-emits
-    * identical rows for a re-delivered query; a sink keyed on
-    * (vec_id, rnk) absorbs them. */
-  def annServe(
-      queries: DataFrame,
-      index: graft.operators.Similarity.SqIndex,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      outDir: String,
-      queryName: String = "graft_ann_serve"): Unit =
-    drain(queries, queryName, ()) { (batch, _) =>
-      graft.operators.Similarity
-        .scalarQuantTopKWithIndex(index, batch, idCol, vecCol, k)
-        .write.mode("append").parquet(outDir)
-    }
-
-  /** Streaming DSIR scoring feed — the
-    * [[graft.operators.Curation.importanceScore]] scorer run as a
-    * live data-selection service: the (bucket, lam) model trains
-    * offline (qt32's batch pass) and LOADS once; each micro-batch of
-    * raw-pool documents is scored against it and appended to
-    * `outDir`. No streaming state at all — a doc's score depends only
-    * on its own text and the static model, so batch boundaries cannot
-    * change any row and at-least-once re-delivery re-emits IDENTICAL
-    * keyed (doc_id, score) rows — the consumer's distinct absorbs
-    * them (the [[erasureFeed]] idempotence argument). One subtlety
-    * the additive scorer adds over the erasure feed's join shape:
-    * duplicates INSIDE a micro-batch would double a doc's bucket
-    * counts (and so its score), so each batch dedups by id first —
-    * documents are immutable content, any copy is equivalent; the
-    * dedup is batch-local (no state), cross-batch copies fall to the
-    * keyed-output distinct. This is the production shape for "score
-    * the crawl as it lands": the model is a KB-sized broadcast,
-    * scoring is embarrassingly parallel, and re-training is an
-    * offline swap of the model table. */
-  def dsirScoreFeed(
-      docs: DataFrame,
-      model: DataFrame,
-      idCol: String,
-      textCol: String,
-      outDir: String,
-      buckets: Int = 1024,
-      queryName: String = "graft_dsir_feed"): Unit =
-    drain(docs, queryName, ()) { (batch, _) =>
-      graft.operators.Curation.importanceScore(
-        batch.dropDuplicates(Seq(idCol)), idCol, textCol,
-        model, buckets)
-        .write.mode("append").parquet(outDir)
-    }
-
-  /** Streaming quality-classifier scoring — [[graft.operators.Logit]]'s
-    * trained model served LIVE: the model (B+1 weight rows + 1 bias
-    * row, KB-sized) trains offline and loads once; documents arrive as
-    * a stream and each micro-batch is scored statelessly
-    * ([[graft.operators.Logit.score]] is one broadcast join + one
-    * per-doc agg) and appended. Zero streaming state: a score depends
-    * only on the doc's text and the frozen model, so re-delivery
-    * re-emits IDENTICAL (doc_id, score, pred) rows and the consumer's
-    * distinct absorbs them — the qst17 idempotence contract, with a
-    * discriminatively-trained scorer instead of the DSIR ratio. */
-  def logitScoreFeed(
-      docs: DataFrame,
-      model: graft.operators.Logit.LogitModel,
-      idCol: String,
-      textCol: String,
-      outDir: String,
-      buckets: Int = 1024,
-      gain: Double = 8.0,
-      queryName: String = "graft_logit_feed"): Unit =
-    drain(docs, queryName, ()) { (batch, _) =>
-      graft.operators.Logit.score(
-        batch.dropDuplicates(Seq(idCol)), idCol, textCol,
-        model, buckets, gain)
-        .write.mode("append").parquet(outDir)
-    }
-
-  /** Streaming duplicated-span rewrite — [[graft.operators.Overlap]]'s
-    * span-dedup served LIVE: the duplicated-gram model (8-byte hashes,
-    * corpus-counted) builds offline and loads once; documents arrive
-    * as a stream and each micro-batch is rewritten statelessly
-    * ([[graft.operators.Overlap.spanRewriteWithModel]] — a semi-join
-    * against the model + the positional anti-join rebuild) and
-    * appended. Zero streaming state: the rewrite depends only on the
-    * doc's text and the frozen model, so re-delivery re-emits
-    * IDENTICAL (doc_id, text, n_words, n_removed) rows, absorbed by
-    * the consumer's distinct — the qst17/qst18 serve contract applied
-    * to a REWRITE operator. */
-  def spanRewriteFeed(
-      docs: DataFrame,
-      dupGrams: DataFrame,
-      idCol: String,
-      textCol: String,
-      outDir: String,
-      n: Int = 5,
-      queryName: String = "graft_span_feed"): Unit =
-    drain(docs, queryName, ()) { (batch, _) =>
-      graft.operators.Overlap.spanRewriteWithModel(
-        batch.dropDuplicates(Seq(idCol)), idCol, textCol, n,
-        dupGrams)
-        .write.mode("append").parquet(outDir)
-    }
-
   /** Streaming CAS chunk ingest — the content-addressed-storage
     * admission loop run LIVE ([[ingestDedup]]'s sibling at CHUNK
     * granularity): a stored distinct Gear-chunk-hash set loads once;
@@ -436,84 +341,6 @@ object EventStreams {
       val mx = b.agg(max(col("ts"))).head().getTimestamp(0)
       if (mx == null) maxSeen
       else Some(maxSeen.fold(mx)(o => if (mx.after(o)) mx else o))
-    }
-
-  /** Streaming benchmark-decontamination gate — qt17's exclusion
-    * stage run AT THE DOOR (the qst19 frozen-model serve contract
-    * applied to contamination): the benchmark fingerprint set loads
-    * once (winnowed — substring-sensitive, eval-set-sized,
-    * broadcast); each arriving micro-batch fingerprints itself,
-    * counts shared fingerprints per document, and emits every batch
-    * document with its verdict — `admitted` = zero shared
-    * fingerprints. Rejecting at ingest is what keeps a continuously-
-    * growing corpus decontaminated WITHOUT re-running the batch audit
-    * over history.
-    *
-    * Stateless: a document's verdict depends only on its text and the
-    * frozen fingerprint set, so batch boundaries cannot change any
-    * row and at-least-once re-delivery re-emits IDENTICAL verdict
-    * rows (consumer distinct, like the qst19 rewrite feed). Per
-    * batch: one narrow fingerprint pass + a broadcast semi-join. */
-  def decontaminationGateFeed(
-      docs: DataFrame,
-      benchFp: DataFrame,
-      idCol: String,
-      textCol: String,
-      outDir: String,
-      queryName: String = "graft_decontam_gate"): Unit =
-    drain(docs, queryName, ()) { (batch, _) =>
-      val b = batch.dropDuplicates(Seq(idCol))
-      val hits = graft.operators.Dedup
-        .winnowingFingerprints(b, idCol, textCol)
-        .join(broadcast(benchFp), Seq("fp"), "left_semi")
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).cast("long").as("n_shared_fp"))
-      b.select(col(idCol).as("doc_id"))
-        .join(hits, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("n_shared_fp"), lit(0L)).as("n_shared_fp"))
-        .withColumn("admitted", (col("n_shared_fp") === 0L).cast("boolean"))
-        .write.mode("append").parquet(outDir)
-    }
-
-  /** Streaming SEMANTIC-decontamination GATE — the embedding channel
-    * at the ingest door ([[decontaminationGateFeed]]'s twin; qt42's
-    * semantic half as a stream): the benchmark's IVF index
-    * ([[graft.operators.Similarity.IvfIndex]], eval-set-sized) loads
-    * once and stays FROZEN; each arriving micro-batch of
-    * (vec_id, embedding) rows probes it
-    * ([[graft.operators.Similarity.semanticLeakageReportIndexed]])
-    * and every batch row gets a verdict — (vec_id, max_cos,
-    * admitted), max_cos NULL when no probed cell holds a candidate —
-    * so paraphrased benchmark material is rejected at ingest, before
-    * it can claim a place in the corpus. Stateless: verdicts are a
-    * pure function of (batch, frozen index), so at-least-once
-    * re-delivery re-emits identical rows (consumer distinct).
-    * Semantic verdicts inherit IVF's approximation contract — nProbe
-    * is the recall dial. Ingest ids and benchmark ids live in
-    * INDEPENDENT id spaces: the probe scores id-colliding pairs like
-    * any other (`excludeSelf = false`), so a surrogate-key accident
-    * never admits contaminated content. */
-  def semanticGateFeed(
-      vecs: DataFrame,
-      index: graft.operators.Similarity.IvfIndex,
-      idCol: String,
-      vecCol: String,
-      outDir: String,
-      threshold: Double = 0.5,
-      nProbe: Int = 2,
-      queryName: String = "graft_semantic_gate"): Unit =
-    drain(vecs, queryName, ()) { (batch, _) =>
-      val b = batch.dropDuplicates(Seq(idCol))
-      val rep = graft.operators.Similarity.semanticLeakageReportIndexed(
-        index, b, idCol, vecCol, threshold, nProbe)
-        .select(col("vec_id"), col("max_cos"))
-      b.select(col(idCol).as("vec_id"))
-        .join(rep, Seq("vec_id"), "left")
-        .select(col("vec_id"), col("max_cos"),
-          (col("max_cos").isNull || col("max_cos") < threshold)
-            .as("admitted"))
-        .write.mode("append").parquet(outDir)
     }
 
   /** Streaming MEDIA-ingest dedup with REAL decode — qst06's
@@ -708,7 +535,7 @@ object EventStreams {
 
   /** Streaming profile-drift monitor —
     * [[graft.warehouse.Profile.profileDrift]] run per micro-batch
-    * against a FROZEN baseline profile (the qst17/qst18 frozen-model
+    * against a FROZEN baseline profile ([[appendEach]]'s frozen-model
     * serve contract applied to data observability): the baseline is
     * computed once from the trusted snapshot and broadcast-joined
     * against each batch's fresh per-column profile; every batch
@@ -735,29 +562,6 @@ object EventStreams {
         .withColumn("batch_no", lit(batchNo))
         .write.mode("append").parquet(outDir)
       batchNo + 1
-    }
-
-  /** Streaming subject-erasure feed — [[graft.warehouse.Erasure]] run
-    * as a live compliance pipeline: deletion REQUESTS arrive as a
-    * stream of subject keys, and each micro-batch emits its cascade
-    * manifest increment (customer→orders→lineitem, the same FK walk as
-    * the batch planner) by stream-static semi-joining the batch
-    * against the warehouse tables, appending to `outDir`. No streaming
-    * state at all: a subject's manifest depends only on the static
-    * tables, so batch boundaries cannot change any row, and
-    * at-least-once re-delivery re-emits IDENTICAL manifest rows — the
-    * manifest is keyed content, so the consumer's distinct (or an
-    * idempotent delete executor, which deleting twice trivially is)
-    * absorbs duplicates. Read `outDir` for the manifest. */
-  def erasureFeed(
-      subjects: DataFrame,
-      customer: DataFrame, orders: DataFrame, lineitem: DataFrame,
-      outDir: String,
-      queryName: String = "graft_erasure_feed"): Unit =
-    drain(subjects, queryName, ()) { (batch, _) =>
-      graft.warehouse.Erasure.erasurePlan(
-        customer, orders, lineitem, batch)
-        .write.mode("append").parquet(outDir)
     }
 
   /** Streaming CDC snapshot — [[graft.warehouse.Cdc.applyChanges]] as
@@ -914,64 +718,6 @@ object EventStreams {
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(fn)
   }
 
-  /** Streaming EMBEDDING-DRIFT monitor — each arriving vector batch
-    * projects onto a FROZEN principal axis
-    * ([[graft.operators.Similarity.pcaComponent]], trained offline on
-    * the reference corpus) and emits one (grp, n, mean_proj, var_proj)
-    * row: a new embedding-model version, a mix shift, or an upstream
-    * preprocessing change moves the projection distribution within one
-    * batch — the embedding-space twin of the profile-drift canary
-    * (qst23). Stateless (the axis is a broadcast constant), so
-    * re-delivery re-emits identical rows.
-    *
-    * Per batch: one dim-keyed broadcast join + per-vector hash agg
-    * (the qs31 serve pass), then the qs34 exact-sum variance dag —
-    * projections quantize to DECIMAL(30,6) before the order-invariant
-    * sums, so rows are bit-reproducible at any partitioning.
-    *
-    * @param axis (dim, v) — the trained component
-    * @param muv  1-row (muv) — the axis·mean dot from training
-    * @param grp  batch identifier expression (constant within a batch)
-    */
-  def embeddingDriftFeed(
-      vecs: DataFrame,
-      idCol: String,
-      vecCol: String,
-      axis: DataFrame,
-      muv: DataFrame,
-      grp: org.apache.spark.sql.Column,
-      outDir: String,
-      queryName: String = "graft_embedding_drift"): Unit = {
-    import graft.expr.Exprs.exactSum
-    drain(vecs, queryName, ()) { (b, _) =>
-      val cq = b
-        .select(col(idCol).as("vec_id"),
-          posexplode(col(vecCol)).as(Seq("dim", "xf")))
-        .select(col("vec_id"), col("dim"),
-          col("xf").cast("double").as("x"))
-        .join(broadcast(axis), Seq("dim"))
-        .groupBy(col("vec_id"))
-        .agg(exactSum(col("x") * col("v")).as("xv"))
-        .crossJoin(broadcast(muv))
-        .select((col("xv") - col("muv"))
-          .cast(org.apache.spark.sql.types.DecimalType(30, 6))
-          .as("cq"))
-      val stats = cq.agg(
-        count(lit(1)).cast("long").as("n"),
-        sum(col("cq")).cast("double").as("sx"),
-        exactSum(col("cq").cast("double") * col("cq").cast("double"))
-          .as("sxx"))
-        .select(col("n"),
-          round(col("sx") / col("n"), 6).as("mean_proj"),
-          round((col("sxx") - col("sx") * col("sx") / col("n"))
-            / col("n"), 6).as("var_proj"))
-      val g = b.agg(min(grp).as("grp"))
-      stats.crossJoin(broadcast(g))
-        .select(col("grp"), col("n"), col("mean_proj"), col("var_proj"))
-        .write.mode("append").parquet(outDir)
-    }
-  }
-
   /** Streaming BUDGET GATE — the per-source token allocation
     * ([[graft.operators.Curation.tokenBudgetWaterfill]]'s plan, or any
     * (source, alloc_tokens) table) enforced at the ingest door across
@@ -1032,35 +778,4 @@ object EventStreams {
       Some(OpCache.checkpoint(merged))
     }
   }
-
-  /** Streaming SCORER-HEALTH canary — [[graft.operators.Eval.aucReport]]
-    * per micro-batch: each arriving labeled audit batch is scored and
-    * its exact tie-aware AUC lands as one (grp, n_pos, n_neg, auc)
-    * row, so a quality filter losing discrimination (model rot, drift
-    * in the incoming mix) trips an alert within one batch instead of
-    * one retraining cycle. Runs on the LABELED audit stream (a sampled
-    * side channel), not the raw corpus — AUC needs labels.
-    *
-    * Stateless: verdict rows are a pure function of their batch, so
-    * re-delivery re-emits identical rows (consumer distinct).
-    * `grp` must be constant within a batch (it identifies the batch
-    * in the output — here min() reduces it); score/label are any
-    * batch-column expressions.
-    */
-  def scorerAucFeed(
-      docs: DataFrame,
-      score: org.apache.spark.sql.Column,
-      label: org.apache.spark.sql.Column,
-      grp: org.apache.spark.sql.Column,
-      outDir: String,
-      queryName: String = "graft_scorer_auc"): Unit =
-    drain(docs, queryName, ()) { (batch, _) =>
-      val scored = batch
-        .select(score.as("score"), label.as("label"), grp.as("grp"))
-      val rep = graft.operators.Eval.aucReport(scored, "label", "score")
-      val g = scored.agg(min(col("grp")).as("grp"))
-      rep.crossJoin(broadcast(g))
-        .select(col("grp"), col("n_pos"), col("n_neg"), col("auc"))
-        .write.mode("append").parquet(outDir)
-    }
 }

@@ -102,7 +102,7 @@ class PipelineSpec extends SparkSuite with ReferenceFixtures {
   }
 
   test("settings read from env map") {
-    val s = Settings.fromEnv(Map("GRAFT_YEAR_MIN" -> "1990", "GRAFT_TIMEOUT" -> "5"))
-    assert(s.yearMin == 1990 && s.yearMax == 2030 && s.httpTimeoutSeconds == 5)
+    val s = Settings.fromEnv(Map("GRAFT_YEAR_MIN" -> "1990"))
+    assert(s.yearMin == 1990 && s.yearMax == 2030)
   }
 }

@@ -131,6 +131,24 @@ class FeedReleaseSpec extends SparkSuite {
     OpCache.releaseAll(blocking = true)
   }
 
+  test("appendEach releases what its step persisted and keeps the caller's model") {
+    OpCache.releaseAll(blocking = true)
+    val model = OpCache.persist(docs.select(col("source"), lit(1L).as("w")).distinct())
+    val out = outDir()
+    var steps = 0
+    val d = releasedDelta(model) {
+      EventStreams.appendEach(slices(docs, "doc_id", 2), "graft_release_append", out) { b =>
+        val scored = OpCache.persist(b.join(broadcast(model), Seq("source")))
+        steps += 1
+        scored.select(col("doc_id"), col("w"))
+      }
+    }
+    assert(steps == 2, s"the step ran on $steps batches, expected 2")
+    assert(d == 0, s"appendEach left $d frames cached")
+    assert(spark.read.parquet(out).count() == 36)
+    OpCache.releaseAll(blocking = true)
+  }
+
   test("chunkIngestFeed releases every frame it persisted") {
     OpCache.releaseAll(blocking = true)
     val store0 = OpCache.persist(
